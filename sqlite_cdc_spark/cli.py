@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+import threading
 
 from . import sinks, sqlite_bridge, streaming
 from .bootstrap import bootstrap_tables
@@ -241,10 +242,10 @@ def main(argv: list[str] | None = None) -> int:
         handler = _handler(args.cdc or args.both)
         if not (args.log_dir and args.checkpoint_dir):
             raise SystemExit("--log-dir and --checkpoint-dir required for cdc")
+        follow_stop = threading.Event()
         if args.db and args.follow:
             # continuous daemon: keep draining the SQLite log alongside the
             # stream (reference event loop, triggers.go:122-162)
-            import threading
             import traceback
 
             follow_err: list[BaseException] = []
@@ -254,6 +255,7 @@ def main(argv: list[str] | None = None) -> int:
                     sqlite_bridge.follow_log(  # check_same_thread)
                         sqlite_conn(), args.log_dir, args.log_table,
                         args.batch_size, args.poll_interval,
+                        stop=follow_stop.is_set,
                     )
                 except BaseException as e:  # a silent dead follow loop
                     follow_err.append(e)    # looks like a healthy idle one
@@ -269,18 +271,25 @@ def main(argv: list[str] | None = None) -> int:
             )
         eng = streaming.StreamEngine(spark, args.log_dir, args.checkpoint_dir)
         eng.setup()
-        q = eng.deliver(eng.read_log_stream(), handler)
-        if args.db and args.follow:
-            # ingestion runs in the follow thread: if it dies the stream
-            # would idle forever looking healthy — stop and exit non-zero
-            while not q.awaitTermination(1.0):
-                if follow_err:
-                    q.stop()
-                    raise SystemExit(
-                        f"cdc follow loop failed: {follow_err[0]!r}"
-                    )
-        else:
-            q.awaitTermination()
+        # --follow keeps the query running on new log files; without it
+        # the query delivers the backlog and exits
+        q = eng.deliver(
+            eng.read_log_stream(), handler, available_now=not args.follow
+        )
+        try:
+            if args.db and args.follow:
+                # ingestion runs in the follow thread: if it dies the stream
+                # would idle forever looking healthy — stop and exit non-zero
+                while not q.awaitTermination(1.0):
+                    if follow_err:
+                        q.stop()
+                        raise SystemExit(
+                            f"cdc follow loop failed: {follow_err[0]!r}"
+                        )
+            else:
+                q.awaitTermination()
+        finally:
+            follow_stop.set()  # the query has ended: stop draining for it
     return 0
 
 

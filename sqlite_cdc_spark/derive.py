@@ -62,7 +62,9 @@ def snapshot_diff(
     # detection if we join on shared lineage columns
     o = old.selectExpr(*[f"{bq(c)} as {bq('__o_' + c)}" for c in old.columns])
     n = new.selectExpr(*[f"{bq(c)} as {bq('__n_' + c)}" for c in new.columns])
-    cond = [F.col(f"__o_{k}").eqNullSafe(F.col(f"__n_{k}")) for k in keys]
+    cond = [
+        F.col(bq("__o_" + k)).eqNullSafe(F.col(bq("__n_" + k))) for k in keys
+    ]
     joined = o.join(n, cond, "full_outer")
 
     old_key_null = " and ".join(

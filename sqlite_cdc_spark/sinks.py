@@ -103,7 +103,10 @@ def partitioned_http_handler(
 
 def parquet_sink_handler(path: str) -> Callable[[DataFrame, int], None]:
     """Append each batch to a parquet dataset — the warehouse landing
-    pattern; idempotence comes from the streaming checkpoint."""
+    pattern. At-least-once: the checkpoint commits a batch's offsets only
+    after the handler returns, so a crash between the append and that
+    commit replays the batch under the same ``batch_id`` and its rows are
+    appended twice. Consumers dedupe on ``id``."""
 
     def run(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(path)

@@ -9,7 +9,7 @@ reference                         Spark
 ================================  =========================================
 fsnotify watch (triggers.go:122)  file-source discovery / trigger cadence
 ORDER BY id LIMIT n (:167)        ``maxFilesPerTrigger`` admission + explicit
-                                  per-batch ``orderBy('id')``
+                                  per-batch sort on ``id``
 handler.HandleChanges (:205)      ``foreachBatch`` (serialized, in order)
 handler error stops engine        exception in foreachBatch fails the query
 DELETE WHERE id<=max (ack, :215)  checkpointed offsets (non-destructive)
@@ -17,8 +17,12 @@ Setup/Teardown DDL (:334-395)     checkpoint/log dir lifecycle
 ================================  =========================================
 
 Ordering note (SURVEY §4): micro-batch *sequence* is guaranteed by Spark;
-*intra-batch* row order is not — handlers that need total order sort by
-``id`` inside the batch, which is cheap because batches are bounded.
+*intra-batch* row order is not — :meth:`StreamEngine.deliver` sorts each
+batch by ``id``. A global ``orderBy`` is not cheap even on a bounded batch:
+its range partitioning costs a sampling job and a shuffle, three Spark
+jobs per micro-batch where the write alone is one. A batch that arrives as
+one partition (one ``poll_log`` page under ``maxFilesPerTrigger=1``, the
+default) is therefore sorted in place within its single task.
 """
 
 from __future__ import annotations
@@ -163,11 +167,26 @@ class StreamEngine:
         If the log can arrive out of order, make the sink id-aware (e.g.
         :func:`sqlite_cdc_spark.derive.apply_changes` after a per-key
         max-id guard) rather than assuming sequence.
+
+        Intra-batch order (``ordered=True``): a batch planned as at most one
+        partition is sorted with ``sortWithinPartitions`` — total order in
+        the handler's own job, no exchange. A batch with more partitions
+        (several files admitted at once, or a stateful stream such as
+        ``bootstrap_and_cdc``'s dedup) keeps ``orderBy``, a parallel range
+        sort. The partition count is read from the batch's planned input,
+        which fires no job.
         """
 
         def run(batch: DataFrame, batch_id: int) -> None:
             if ordered:
-                batch = batch.orderBy(F.col("id").asc())
+                key = F.col("id").asc()
+                # the planned RDD's partitions; ``batch.rdd`` would first
+                # plan a deserializing copy, at about twice the cost
+                rdd = batch._jdf.queryExecution().toRdd()
+                if rdd.getNumPartitions() <= 1:
+                    batch = batch.sortWithinPartitions(key)
+                else:
+                    batch = batch.orderBy(key)
             handler(batch, batch_id)
 
         writer = (

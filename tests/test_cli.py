@@ -53,6 +53,61 @@ def test_cli_setup_cdc_roundtrip(tmp_path, spark, capsys):
     )
 
 
+def test_cli_cdc_follow_keeps_delivering_until_stopped(tmp_path, spark, capsys):
+    # --follow is a daemon: the query must outlive the initial backlog and
+    # deliver commits made after it started, until someone stops it
+    import threading
+    import time
+
+    db = str(tmp_path / "follow.db")
+    conn = sqlite3.connect(db)
+    conn.execute("CREATE TABLE widgets (id INTEGER PRIMARY KEY, name TEXT)")
+    conn.commit()
+    conn.close()
+    assert cli.main(["--db", db, "--tables", "widgets", "--setup"]) == 0
+    conn = sqlite3.connect(db)
+    conn.executemany("INSERT INTO widgets VALUES (?,?)", [(1, "a"), (2, "b")])
+    conn.commit()
+
+    out: list[str] = []
+
+    def wait_for(n_inserts: int, timeout: float = 60.0) -> None:
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            out.append(capsys.readouterr().out)
+            if "".join(out).count("widgets INSERT") >= n_inserts:
+                return
+            time.sleep(0.1)
+        got = "".join(out)
+        raise AssertionError(f"{n_inserts} inserts expected, got {got!r}")
+
+    result: list[int] = []
+    argv = [
+        "--db", db, "--tables", "widgets",
+        "--log-dir", str(tmp_path / "log"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+        "--poll-interval", "0.1",
+        "--follow", "--cdc", "-",
+    ]
+    t = threading.Thread(target=lambda: result.append(cli.main(argv)))
+    t.start()
+    try:
+        wait_for(2)  # the backlog
+        conn.execute("INSERT INTO widgets VALUES (3, 'c')")
+        conn.commit()
+        wait_for(3)  # a commit made after the query started
+        (q,) = [q for q in spark.streams.active if q.name == "cdc-deliver"]
+        assert q.isActive and t.is_alive()
+    finally:
+        for q in spark.streams.active:
+            if q.name == "cdc-deliver":
+                q.stop()
+        t.join(60)
+        conn.close()
+    assert not t.is_alive() and result == [0]
+    assert "".join(out).count("widgets INSERT") == 3
+
+
 def test_cli_bootstrap_json(tmp_path, sf_dir, spark, capsys):
     assert (
         cli.main(

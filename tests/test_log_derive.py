@@ -74,6 +74,23 @@ def test_snapshot_diff_null_safe(spark):
     assert got == {1: "UPDATE", 2: "UPDATE"}
 
 
+def test_snapshot_diff_key_column_with_backtick_and_dot(spark):
+    # a key name that F.col would misread unquoted: the dot as a struct
+    # field access, the backtick as the end of a quoted identifier
+    key = "k`e.y"
+    old = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], [key, "v"])
+    new = spark.createDataFrame([(2, "b"), (3, "C"), (4, "d")], [key, "v"])
+    got = {
+        (r[key], r.operation, r.before, r.after)
+        for r in derive.snapshot_diff(old, new, [key]).collect()
+    }
+    assert got == {
+        (1, "DELETE", '{"k`e.y":1,"v":"a"}', None),
+        (3, "UPDATE", '{"k`e.y":3,"v":"c"}', '{"k`e.y":3,"v":"C"}'),
+        (4, "INSERT", None, '{"k`e.y":4,"v":"d"}'),
+    }
+
+
 def test_asof_latest(spark):
     df = _mini_log(spark).withColumn("k", F.get_json_object(
         F.coalesce("after", "before"), "$.k"))

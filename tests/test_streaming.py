@@ -58,9 +58,89 @@ def test_stream_delivers_all_changes_in_order(spark, sf_dir, log_dir, tmp_path):
     total = sum(len(rows) for _, rows in store)
     assert total == 1000
     assert len(store) > 1  # bounded admission → multiple micro-batches
-    for _, rows in store:  # intra-batch ordering (explicit orderBy in deliver)
+    for _, rows in store:  # intra-batch ordering (explicit sort in deliver)
         ids = [r.id for r in rows]
         assert ids == sorted(ids)
+
+
+def _write_pages(spark, d, n_pages, rows_per_page, files_per_page):
+    """``n_pages`` log pages of consecutive ids, each page's rows in
+    descending id order and split over ``files_per_page`` files; pages get
+    strictly increasing mtimes so the file source admits them in id order."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    os.makedirs(d)
+    for p in range(n_pages):
+        ids = reversed(range(p * rows_per_page, (p + 1) * rows_per_page))
+        rows = [(i, "t", dt.datetime(2024, 1, 1), "INSERT", None, "{}") for i in ids]
+        tmp = f"{d}/_tmp{p}"
+        page = spark.createDataFrame(rows, LOG_SCHEMA)
+        page.coalesce(files_per_page).write.parquet(tmp)
+        now = time.time() + p
+        for j, src in enumerate(sorted(glob.glob(tmp + "/*.parquet"))):
+            dst = f"{d}/page-{p}-{j}.parquet"
+            os.rename(src, dst)
+            os.utime(dst, (now, now))
+        shutil.rmtree(tmp)
+
+
+def test_single_partition_batch_sorts_in_one_job(spark, tmp_path):
+    # one page per batch arrives as one partition: deliver sorts it inside
+    # the handler's own job — no range-bounds sample, no exchange
+    import glob
+
+    import pyarrow.parquet as pq
+
+    d, out = str(tmp_path / "log"), str(tmp_path / "out")
+    _write_pages(spark, d, n_pages=3, rows_per_page=200, files_per_page=1)
+    eng = streaming.StreamEngine(spark, d, str(tmp_path / "ckpt"))
+    sink = sinks.parquet_sink_handler(out)
+    plans: list = []
+
+    def handler(batch, batch_id):
+        plans.append(batch._jdf.queryExecution().executedPlan().toString())
+        sink(batch, batch_id)
+
+    q = eng.deliver(eng.read_log_stream(), handler)
+    q.awaitTermination(120)
+    assert len(plans) == 3
+    assert not any("Exchange" in p for p in plans)
+    # Structured Streaming runs every job of a query in the job group
+    # named by its run id: one job per batch, the sink's write
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(plans)
+    # one task per batch wrote one file, rows in the order it received them
+    written = sorted(
+        pq.read_table(f).column("id").to_pylist()
+        for f in glob.glob(out + "/*.parquet")
+    )
+    assert written == [list(range(p * 200, (p + 1) * 200)) for p in range(3)]
+
+
+def test_multi_partition_batch_keeps_total_order(spark, tmp_path):
+    # a batch of several files (each page split in two) takes the parallel
+    # range sort; every batch is still strictly id-ordered
+    d = str(tmp_path / "log")
+    _write_pages(spark, d, n_pages=4, rows_per_page=150, files_per_page=2)
+    eng = streaming.StreamEngine(spark, d, str(tmp_path / "ckpt"))
+    plans: list = []
+    store: list = []
+    collect = sinks.collecting_handler(store)
+
+    def handler(batch, batch_id):
+        plans.append(batch._jdf.queryExecution().executedPlan().toString())
+        collect(batch, batch_id)
+
+    eng.deliver(
+        eng.read_log_stream(max_files_per_trigger=2), handler
+    ).awaitTermination(120)
+    assert len(plans) == 4 and all("Exchange" in p for p in plans)
+    assert [[r.id for r in rows] for _, rows in store] == [
+        list(range(p * 150, (p + 1) * 150)) for p in range(4)
+    ]
 
 
 def test_checkpoint_resume_no_redelivery(spark, sf_dir, log_dir, tmp_path):
