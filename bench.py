@@ -351,6 +351,27 @@ CANARY_TOLERANCE: dict[str, float | None] = {
 }
 
 
+def warm_up(spark) -> None:
+    """Warm the JVM and the Python worker pool before any timed run: the
+    first mapInPandas pays worker fork + numpy/Arrow imports pool-wide,
+    which used to land on whichever UDF line ran first (b22_audio_stats
+    driver runs spread 0.86-8.71 s)."""
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+
+    def _warm_workers(batches):
+        import numpy as np  # noqa: F401 — force the heavy imports
+
+        for b in batches:
+            yield b
+
+    (
+        spark.range(64, numPartitions=32)
+        .mapInPandas(_warm_workers, "id long")
+        .write.format("noop").mode("overwrite").save()
+    )
+
+
 def _recover_from_tail(tail: str) -> tuple[dict[str, float], dict[str, float]]:
     """Recover (queries, canaries) from a driver artifact whose final
     stdout line overflowed the driver's 2000-char tail capture and
@@ -762,26 +783,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-
-    # Python/Arrow worker-pool warm-up (VERDICT r14 item 5): the first
-    # mapInPandas execution pays worker fork + numpy/pandas/Arrow import
-    # across the whole pool, which used to land on whichever mapInPandas
-    # line ran first (b22_audio_stats driver runs spread 0.86-8.71 s).
-    # Spin the pool up once before ANY timed run so those lines measure
-    # the kernel, not fleet cold-start.
-    def _warm_workers(batches):
-        import numpy as np  # noqa: F401 — force the heavy imports
-
-        for b in batches:
-            yield b
-
-    (
-        spark.range(64, numPartitions=32)
-        .mapInPandas(_warm_workers, "id long")
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm_up(spark)
 
     # Per-query MEDIAN of N runs (default 3): round-over-round deltas on a
     # shared box were dominated by scheduling noise (a zero-shuffle query

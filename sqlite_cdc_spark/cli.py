@@ -58,9 +58,6 @@ def main(argv: list[str] | None = None) -> int:
     # corpus-pipeline mode options (see the pipeline modes below)
     p.add_argument("--threshold", type=float, default=0.7,
                    help="dedup-clusters: near-dup Jaccard threshold")
-    p.add_argument("--algorithm", choices=["propagate", "star"],
-                   default="propagate",
-                   help="dedup-clusters: CC backend (star = O(log n) rounds)")
     p.add_argument("--budgets", default="",
                    help="mixture: per-group token budgets, e.g. en=4000,de=1500")
     p.add_argument("--default-budget", type=int, default=None)
@@ -110,8 +107,7 @@ def main(argv: list[str] | None = None) -> int:
         if not args.db:
             raise SystemExit("--db required for this mode")
         conn = sqlite3.connect(args.db)
-        conn.execute("PRAGMA journal_mode=WAL")  # README.md:205-209 prerequisite
-        conn.execute("PRAGMA busy_timeout=5000")  # main.go:57 default
+        sqlite_bridge.ensure_wal(conn)
         return conn
 
     if args.setup:
@@ -174,7 +170,7 @@ def main(argv: list[str] | None = None) -> int:
                 docs.select("doc_id", "text"), "doc_id", "text",
                 threshold=args.threshold,
             )
-            out = dedup_mod.dup_clusters(pairs, algorithm=args.algorithm)
+            out = dedup_mod.dup_clusters(pairs)
             out.write.mode("overwrite").parquet(args.dedup_clusters)
             n = out.count()
             print(f"dedup-clusters: {n} clustered docs -> {args.dedup_clusters}")

@@ -19,20 +19,14 @@ The driver fixture ``events`` stands in for a populated log (FIXTURES.md §2):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .model import (
-    LOG_SCHEMA,
     OP_DELETE,
     OP_INSERT,
     decode_operation,
 )
-
-
-def read_change_log(spark: SparkSession, path: str) -> DataFrame:
-    """Batch-read a persisted change log (parquet, canonical LOG_SCHEMA)."""
-    return spark.read.schema(LOG_SCHEMA).parquet(path)
 
 
 def events_as_changes(events: DataFrame, tablename: str = "events") -> DataFrame:
@@ -100,12 +94,6 @@ def drain_all(log: DataFrame, batch_size: int):
             return
         yield rows
         after = rows[-1]["id"]
-
-
-def ack_watermark(batch: DataFrame) -> Column:
-    """The commit point after a delivered batch: ``max(id)`` — parity with
-    ``DELETE FROM log WHERE id <= maxID`` (``triggers.go:209-221``)."""
-    return F.max("id")
 
 
 def change_stats(

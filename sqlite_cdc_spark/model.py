@@ -142,12 +142,6 @@ def image_field(image: Column | str, field: str) -> Column:
     return F.get_json_object(c, f"$.{field}")
 
 
-def typed_image(image: Column | str, schema: T.StructType) -> Column:
-    """Parse a JSON row image into a typed struct (static-schema path)."""
-    c = F.col(image) if isinstance(image, str) else image
-    return F.from_json(c, schema)
-
-
 # --- presentation -----------------------------------------------------------
 
 

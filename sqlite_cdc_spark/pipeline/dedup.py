@@ -216,20 +216,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def lsh_band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Hash each band (contiguous signature slice) → array of band buckets.
-
-    Two docs sharing any band bucket become a candidate pair; with
-    signature length b·r the match probability curve is 1-(1-s^r)^b.
-    """
-    return F.array(
-        *[
-            F.hash(F.slice(signature, b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_candidates(
     df: DataFrame,
     id_col: str,

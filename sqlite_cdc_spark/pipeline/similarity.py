@@ -240,21 +240,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
     return rng.standard_normal((n_planes, dim))
 
 
-def signature_bits(vec: Column, planes) -> Column:
-    """Sign bits of the vector against each hyperplane, packed to a long."""
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(float(v)) for v in plane])) >= 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        for i, plane in enumerate(planes)
-    ]
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def ann_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,

@@ -58,10 +58,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 # --- JDBC sources -----------------------------------------------------------
 #
 # The reference reads SQLite in-process; the Spark-native equivalent for a

@@ -34,6 +34,7 @@ DEFAULT_LOG_TABLE = "__cdc_log"  # parity: triggers.go:18-21
 DEFAULT_BATCH = 50
 MAX_COLUMNS = 1000  # parity: triggers.go:457-518 hard cap
 JSON_CHUNK = 63  # 127-arg json_object limit → 63 k/v pairs
+FOLLOW_CHECK_INTERVAL = 0.02  # follow_log's filesystem check period, seconds
 
 
 @dataclass
@@ -285,7 +286,6 @@ def poll_log(
     log_table: str = DEFAULT_LOG_TABLE,
     batch_size: int = DEFAULT_BATCH,
     ack: bool = True,
-    max_batches: int | None = None,
 ) -> int:
     """Drain the SQLite log into parquet files under ``out_dir``.
 
@@ -302,15 +302,15 @@ def poll_log(
     ensure_wal(conn)  # library-level parity: drain must not block writers
     os.makedirs(out_dir, exist_ok=True)
     total = 0
-    batches = 0
-    # With ack=True the DELETE advances the cursor; without it we must keep
-    # our own keyset cursor or every iteration re-reads the same first page.
+    # Keyset cursor: without ack it is what moves us past a written page;
+    # with ack the DELETE has already removed every id <= last_id (and
+    # AUTOINCREMENT never reuses one), so the same query reads the same rows.
     last_id = 0
-    while max_batches is None or batches < max_batches:
+    while True:
         rows = conn.execute(
             f"SELECT id, timestamp, tablename, operation, before, after "
             f"FROM {_q(log_table)} WHERE id > ? ORDER BY id ASC LIMIT ?",
-            (last_id if not ack else 0, batch_size),
+            (last_id, batch_size),
         ).fetchall()
         if not rows:
             break
@@ -340,7 +340,6 @@ def poll_log(
             conn.commit()
         last_id = ids[-1]
         total += len(rows)
-        batches += 1
         if len(rows) < batch_size:
             # short page: the log is drained; don't issue one more empty query
             break
@@ -473,38 +472,31 @@ def follow_log(
     log_table: str = DEFAULT_LOG_TABLE,
     batch_size: int = DEFAULT_BATCH,
     poll_interval: float = 0.25,
-    max_polls: int | None = None,
     stop=None,
-    check_interval: float = 0.02,
 ) -> int:
     """Continuously drain the SQLite log into the parquet stream source.
 
     Event-driven wakeup, fsnotify parity: the reference's loop blocks on
     filesystem notifications for the db/WAL files and re-drains until
     quiet (``/root/reference/triggers.go:122-162``). Portable equivalent:
-    between drains we stat the db/-wal/-shm files every ``check_interval``
-    (cheap: three ``os.stat`` calls) and drain IMMEDIATELY when any
-    (mtime, size) moves, instead of sleeping a fixed ``poll_interval`` —
-    write-to-drain latency is ~``check_interval``, not ``poll_interval``.
+    between drains we stat the db/-wal/-shm files every
+    :data:`FOLLOW_CHECK_INTERVAL` seconds (cheap: three ``os.stat`` calls)
+    and drain IMMEDIATELY when any (mtime, size) moves, instead of sleeping
+    a fixed ``poll_interval`` — write-to-drain latency is ~the check
+    interval, not ``poll_interval``.
     ``poll_interval`` remains the idle re-drain deadline (safety net for
     clock-granularity misses and same-ns writes). Each tick is one
     :func:`poll_log` drain (ack-by-delete, at-least-once); the baseline
     snapshot is taken AFTER the drain so our own ack writes don't wake us.
     ``stop`` is an optional zero-arg callable (e.g.
-    ``threading.Event().is_set``) checked every ``check_interval``;
-    ``max_polls`` bounds the loop for tests. Returns total changes drained.
+    ``threading.Event().is_set``) checked on every filesystem check.
+    Returns total changes drained.
     """
     paths = _watch_paths(conn)
-    check = min(check_interval, poll_interval) if paths else poll_interval
+    check = min(FOLLOW_CHECK_INTERVAL, poll_interval) if paths else poll_interval
     total = 0
-    polls = 0
-    while max_polls is None or polls < max_polls:
-        if stop is not None and stop():
-            break
+    while stop is None or not stop():
         total += poll_log(conn, out_dir, log_table, batch_size)
-        polls += 1
-        if max_polls is not None and polls >= max_polls:
-            break
         baseline = _fs_state(paths)
         deadline = time.monotonic() + poll_interval
         while time.monotonic() < deadline:

@@ -514,18 +514,6 @@ def windowed_change_counts(
     ).agg(F.count(F.lit(1)).alias("n_changes"))
 
 
-def session_windows(
-    changes: DataFrame, gap: str = "30 minutes", key: str = "tablename",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Session-window activity bursts per key (B15)."""
-    if changes.isStreaming:
-        changes = changes.withWatermark("timestamp", watermark)
-    return changes.groupBy(
-        F.col(key), F.session_window("timestamp", gap).alias("sess")
-    ).agg(F.count(F.lit(1)).alias("n_changes"))
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,

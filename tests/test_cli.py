@@ -256,10 +256,7 @@ def test_cli_pipeline_modes_roundtrip(tmp_path, sf_dir, spark, capsys):
     clusters = str(tmp_path / "clusters")
     chunks = str(tmp_path / "chunks")
     mixed = str(tmp_path / "mixed")
-    assert cli.main(
-        ["--data-dir", sf_dir, "--dedup-clusters", clusters,
-         "--algorithm", "star"]
-    ) == 0
+    assert cli.main(["--data-dir", sf_dir, "--dedup-clusters", clusters]) == 0
     assert cli.main(
         ["--data-dir", sf_dir, "--chunk", chunks, "--chunk-tokens", "16",
          "--overlap", "4"]
@@ -284,6 +281,23 @@ def test_cli_pipeline_modes_roundtrip(tmp_path, sf_dir, spark, capsys):
     got_mixed = spark.read.parquet(mixed)
     assert 0 < got_mixed.count() <= docs.count()
     assert "text" in got_mixed.columns
+
+
+def test_cli_dedup_clusters_takes_the_single_pass_path(tmp_path, sf_dir, spark):
+    # the CLI calls dup_clusters with its size-selected default: a pair
+    # set under the local edge limit closes in ONE union-find pass, where
+    # a pinned distributed backend needs >= 2 rounds for any real pair
+    from sqlite_cdc_spark.pipeline import dedup
+    from sqlite_cdc_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    pairs = dedup.near_dup_pairs(docs, "doc_id", "text", threshold=0.7)
+    assert pairs.count() > 0
+    dedup.LAST_CC_ROUNDS = 0
+    out = str(tmp_path / "clusters")
+    assert cli.main(["--data-dir", sf_dir, "--dedup-clusters", out]) == 0
+    assert dedup.LAST_CC_ROUNDS == 1
+    assert spark.read.parquet(out).filter("cluster_size > 1").count() > 0
 
 
 def test_cli_lm_modes(tmp_path, sf_dir, spark, capsys):

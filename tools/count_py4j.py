@@ -45,20 +45,7 @@ ClientServerConnection.send_command = _counting_send
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("py4j-count")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _warm_workers(batches):
-        import numpy as np  # noqa: F401
-
-        for b in batches:
-            yield b
-
-    (
-        spark.range(64, numPartitions=32)
-        .mapInPandas(_warm_workers, "id long")
-        .write.format("noop").mode("overwrite").save()
-    )
+    bench.warm_up(spark)
 
     queries = entry.queries()
     names = sys.argv[1:] or bench.HEADLINE

@@ -42,20 +42,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-
-    def _warm_workers(batches):
-        import numpy as np  # noqa: F401
-
-        for b in batches:
-            yield b
-
-    (
-        spark.range(64, numPartitions=32)
-        .mapInPandas(_warm_workers, "id long")
-        .write.format("noop").mode("overwrite").save()
-    )
+    bench.warm_up(spark)
 
     queries = entry.queries()
     out: dict[str, dict] = {}
