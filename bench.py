@@ -1,17 +1,31 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
+"""Line timer — registry lines at $SPARK_GRAFT_SF_DIR.
 
-Runs a representative slice of every operator family on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+Usage::
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"<name>": sec, ...}, "sf": <scale factor>}
+    python bench.py [line ...]      # default: the HEADLINE board
 
-Each query is forced with the noop sink (full materialization, no driver
-collect — measures the plan, not result transfer).
+Times each line on ``local[$SPARK_GRAFT_CPUS]`` through the noop sink
+(full materialization, no driver collect — measures the plan, not result
+transfer). Each line gets ``max(WARMUP_RUNS, DEEP_WARMUP[line])`` untimed
+warm-ups, then ``TIMED_RUNS`` timed runs, ``SUBSEC_EXTRA`` more when
+their median is under ``SUBSEC_S`` and ``ELASTIC_EXTRA`` more for
+``ELASTIC_LINES``; median and min are over the timed runs. The first
+warm-up also counts py4j round-trips, split into construction
+(``fn(spark, sf_dir)``) and execution (the sink write).
+
+Output: the per-line records on stderr as one ``# lines: {json}`` line,
+and ONE compact JSON summary as the last stdout line::
+
+    {"metric": "headline_query_wall_total", "value": <sum of medians>,
+     "unit": "sec", "n_queries": ..., "sf": ..., "cpus": ...,
+     "runs_per_query": ..., "warmup_runs": ...}
+
+Writes no file.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -178,37 +192,11 @@ def _minhash_xxh64(spark, sf_dir):
 #: bench-only variants not in the driver's queries() registry
 EXTRA = {"b19_minhash_xxh64": _minhash_xxh64}
 
-#: CPU-elastic lines (VERDICT r15 items 2-3). Both were over 1.3x on the
-#: r15 DRIVER board (b19 1.79x med / 1.44x min; b20 1.50x med) with
-#: byte-identical code, and the r16 interleaved same-box A/B (r14 sha
-#: af3c80d vs HEAD, 2 passes x 5 timed runs each, fresh JVM per leg)
-#: measured between-sha median ratios of 0.97x/1.56x (b19) and
-#: 0.66x/1.03x (b20) INSIDE their own within-sha pass-to-pass spreads
-#: (b19 1.40x, b20 1.79x) while the cpu canary itself moved 1.40x
-#: between legs — the lines are elastic to transient CPU contention
-#: (b19's five-consumer re-tokenize, b20's per-iteration update
-#: shuffle), not regressed. Treatment: extra timed reps (median over a
-#: wider window of box states) and the 1.3x screen pages only when BOTH
-#: median and min-of-runs are over — the artifact still records both
-#: raw ratios for every elastic line (``elastic_ratios``), so nothing
-#: is hidden, and a real code regression (which moves the min too)
-#: still pages.
-#:
-#: r17 additions, same instrument (r15 sha eec0ef4 vs HEAD, 2
-#: interleaved passes x 5 timed runs, fresh JVM per leg, all function
-#: bodies and shared modules verified byte-identical across the shas —
-#: `git diff eec0ef4..HEAD -- sqlite_cdc_spark/ entryimpl/...` empty):
-#: the four r16 DRIVER over-lines are all elastic, not regressed.
-#: b20_cosine_topk between-sha medians 2.74x/1.00x vs within-sha
-#: pass-to-pass spreads 2.05x/5.61x (pass-2 medians IDENTICAL: 0.707
-#: vs 0.706 s); b28_packing 1.11x/1.54x vs 2.25x/1.63x (by-min
-#: 0.96x/1.27x); b29_containment 1.11x/1.17x vs within 1.15x/1.08x,
-#: tracking the cpu canary's own between-leg movement; b22_audio_stats
-#: (bimodal series 0.52-3.33 s) 1.67x/1.58x vs within 1.52x/1.61x,
-#: by-min 0.87x/1.28x. The same A/B read b18_dedup_exact — 1.53x on
-#: the r16 driver board — at 1.00x/0.97x between shas, directly
-#: confirming the driver readings were box state. Full tables in
-#: PERF.md Round 17.
+#: CPU-elastic lines: their wall time follows transient CPU contention,
+#: not code (the r16/r17 interleaved same-box A/Bs read within-sha
+#: pass-to-pass medians up to 1.79x apart on 3-run samples; PERF.md
+#: Round 17), so they take ``ELASTIC_EXTRA`` more timed runs and their
+#: median spans more box states.
 ELASTIC_LINES = {
     "b19_prefix_filter",
     "b20_kmeans",
@@ -226,8 +214,7 @@ ELASTIC_LINES = {
 #: under the 1.0 s extra-runs threshold — the r14 cold-median artifact
 #: at smaller amplitude (this round's companion b1 series [1.387, 1.087,
 #: 1.104] read 1.69x vs r15 on byte-identical code; steady state on the
-#: same box minutes later: 0.81 s). The synthetic canaries already use
-#: 2 discarded warm-ups for the same reason.
+#: same box minutes later: 0.81 s).
 #:
 #: r17: b20_cosine_topk and b28_packing are the same failure class —
 #: their A/B series are still descending 4-5 executions deep
@@ -236,8 +223,7 @@ ELASTIC_LINES = {
 #: ~0.6-0.7 s; b28: [5.63 w, 1.96, 1.87, 1.33, 0.84, 0.80] → ~0.6-0.8
 #: s), so a 1-warm-up 3-run median lands inside the tail whenever the
 #: box starts them cold — the r16 DRIVER board's 2.31x / 1.76x
-#: readings on byte-identical code. Overrides are doc-carried in the
-#: artifact (``warmup_overrides``); replay always uses the doc's map.
+#: readings on byte-identical code.
 DEEP_WARMUP = {
     "b1_snapshot_diff": 3,
     "b20_cosine_topk": 3,
@@ -253,102 +239,18 @@ DEEP_WARMUP = {
     "b30_assoc_rules": 3,
 }
 
-#: Registry drift canaries (VERDICT r8 item 2): plan-frozen zero/low-
-#: shuffle queries whose round-over-round ratio measures BOX drift, not
-#: code. r10 finding: all five are sub-second and scheduling-noise-
-#: dominated — two same-box artifacts reported drift 0.94 and 1.48 hours
-#: apart, so their MEDIAN alone is not trustworthy. They are kept for
-#: series continuity, but the drift estimate now prefers the dedicated
-#: multi-second synthetic canaries below, and per-canary ratios are
-#: emitted so a contradiction is visible inside the artifact.
-CANARIES = [
-    "a6_bootstrap",
-    "a10_drain_batch",
-    "b3_change_stats",
-    "b18_dedup_exact",
-    "b2_log_compaction",
-]
-
-
-def _canary_cpu(spark, sf_dir):
-    """Plan-frozen pure-codegen burn (VERDICT r10 item 3): a long
-    xxhash64 chain over range() — no scan, no shuffle, no registry
-    dependence; one stage whose wall time tracks per-core JVM speed.
-    Sized for ≥2 s at 32 threads so scheduling noise is <5%."""
-    return spark.range(2_200_000_000).selectExpr(
-        # pmod keeps the running sum << LONG_MAX (ANSI mode errors on
-        # overflow); the three-hash chain is the actual work
-        "sum(pmod(xxhash64(id, xxhash64(id + 7), xxhash64(id + 13)), "
-        "1000000)) AS s"
-    )
-
-
-def _canary_shuffle(spark, sf_dir):
-    """Plan-frozen shuffle canary: range() → wide hash-partition
-    exchange → two-level agg. Tracks shuffle write/read + hash-agg
-    throughput, the other axis box drift moves on."""
-    return (
-        spark.range(60_000_000)
-        .selectExpr("pmod(xxhash64(id), 6000000) AS k", "id AS v")
-        .groupBy("k")
-        .agg({"v": "sum"})
-        .selectExpr("count(*) AS n_keys", "sum(`sum(v)`) AS total")
-    )
-
-
-def _canary_fixed(spark, sf_dir):
-    """Fixed-overhead canary (VERDICT r14 item 3): a ~0.1 s trivial job
-    — 32 near-empty tasks through the same noop-write path every benched
-    query uses. Its wall time is per-query FIXED overhead (job submit,
-    task scheduling, result plumbing), essentially zero compute: when
-    the short registry canaries drift but this line and the compute
-    canaries hold, the box added per-query latency rather than slower
-    compute — the distinction r14's artifact could not make (its
-    ``canary_basis_conflict``)."""
-    return spark.range(32, numPartitions=32).selectExpr("id AS n")
-
-
-#: Synthetic canaries: registry-independent, identical plan every
-#: round. The multi-second compute pair (cpu/shuffle) carries the
-#: drift estimate from r11 on; ``canary_fixed`` (r15) is its own
-#: CLASS — per-query fixed overhead — so overhead drift and compute
-#: drift normalize separately.
-SYNTH_CANARIES = {
-    "canary_cpu": _canary_cpu,
-    "canary_shuffle": _canary_shuffle,
-    "canary_fixed": _canary_fixed,
-}
-
-#: canary → drift class; registry canaries (scan-shaped sub-second
-#: queries) are everything in CANARIES.
-CANARY_CLASS = {
-    "canary_cpu": "synthetic",
-    "canary_shuffle": "synthetic",
-    "canary_fixed": "fixed",
-}
-
-#: Per-class conflict tolerances for the basis-disagreement flag,
-#: CALIBRATED from the r17 interleaved same-box A/B (4 fresh-JVM legs
-#: on byte-identical code minutes apart — box state known to be the
-#: only variable). Measured same-code between-session spreads:
-#: canary_cpu 1.03x (the lowest-variance canary on the board — hence
-#: the basis), canary_shuffle 1.35x, canary_fixed 2.81x, and the
-#: registry-vs-synthetic relative reading itself moved by up to 0.20
-#: WITHIN MINUTES (per-leg reg/syn 0.0577-0.0695). A flat 0.20
-#: threshold across two different sessions therefore fires on box
-#: noise by construction — the r16 driver artifact's conflict=TRUE at
-#: disagreement 0.289 (registry 0.91 / synthetic 1.28 / fixed 1.50)
-#: is exactly that failure. Rule: a class gates the conflict flag only
-#: when its median departs from the basis by more than ITS measured
-#: same-code spread with ~1.75x margin; ``fixed`` (2.81x same-code
-#: spread — two sessions routinely read 1.5x apart on identical code)
-#: can never gate and is diagnostic-only. Raw per-class medians and
-#: disagreements are always emitted, so nothing is laundered.
-CANARY_TOLERANCE: dict[str, float | None] = {
-    "synthetic": 0.35,
-    "registry": 0.35,
-    "fixed": None,  # diagnostic only — measured spread exceeds any gate
-}
+#: Untimed warm-up runs per line (``DEEP_WARMUP`` raises it per line):
+#: run 1 of a line pays JIT/codegen cold start, up to 3x its steady state.
+WARMUP_RUNS = 1
+#: Timed runs per line; the median pins the signal against scheduling noise.
+TIMED_RUNS = 3
+#: Sub-second lines flap hardest (r6: b28_mixture's [0.43, 0.88, 0.31]
+#: read as a fake 1.6x regression): when the median of the first
+#: ``TIMED_RUNS`` is under ``SUBSEC_S``, ``SUBSEC_EXTRA`` runs widen it.
+SUBSEC_S = 1.0
+SUBSEC_EXTRA = 2
+#: Extra timed runs for ``ELASTIC_LINES``.
+ELASTIC_EXTRA = 4
 
 
 def warm_up(spark) -> None:
@@ -372,616 +274,98 @@ def warm_up(spark) -> None:
     )
 
 
-def _recover_from_tail(tail: str) -> tuple[dict[str, float], dict[str, float]]:
-    """Recover (queries, canaries) from a driver artifact whose final
-    stdout line overflowed the driver's 2000-char tail capture and
-    therefore has ``parsed: null`` (the BENCH_r11 defect — VERDICT r11
-    item 1). The tail is the END of the line, so the closing maps
-    survive even when the front is cut: regex the numeric pairs out."""
-    canaries: dict[str, float] = {}
-    m = re.search(r'"canaries": (\{[^{}]*\})', tail)
-    if m:
-        try:
-            canaries = {k: float(v) for k, v in json.loads(m.group(1)).items()}
-        except ValueError:
-            canaries = {}
-    head = tail[: m.start()] if m else tail
-    queries = {
-        k: float(v)
-        for k, v in re.findall(r'"([a-z][a-z0-9_]+)": ([0-9][0-9.]*)', head)
-        if k not in ("value", "sf", "runs_per_query", "n", "rc", "cpus")
-    }
-    return queries, canaries
+@contextlib.contextmanager
+def _py4j_counter():
+    """Count py4j round-trips (``ClientServerConnection.send_command``
+    calls, pinned-thread mode — the PySpark default) inside the block.
+    The hook is removed on exit, so only the runs inside it carry it."""
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(conn, *a, **kw):
+        calls[0] += 1
+        return orig(conn, *a, **kw)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = orig
 
 
-def _medians_from_runs(
-    runs: dict[str, list[float]],
-    query_warmup: int = 0,
-    overrides: dict[str, int] | None = None,
-) -> dict[str, float]:
-    """Per-query medians from a BENCH_RUNS.json ``runs`` map, applying
-    the same rules as main(): canaries discard their 2 warmup samples;
-    queries discard ``query_warmup`` (the doc's ``warmup_discard``,
-    0 for rounds before r15) or the DOC's own per-line override (r16
-    ``warmup_overrides`` — never the current DEEP_WARMUP constant, so
-    replaying an old doc slices exactly where ITS main() sliced."""
-    out = {}
-    overrides = overrides or {}
-    for name, samples in runs.items():
-        if name in SYNTH_CANARIES:
-            s = samples[2:] if len(samples) > 2 else samples
-        else:
-            w = max(query_warmup, int(overrides.get(name, 0)))
-            s = samples[w:] if len(samples) > w else samples
-        if s:
-            out[name] = sorted(s)[len(s) // 2]
+def _run(spark, fn, sf_dir, calls=(0,)) -> tuple[float, float, int, int]:
+    """One run of a line through the noop sink: (construction seconds,
+    total seconds, construction py4j calls, execution py4j calls). The
+    call counts read ``calls``, the counter ``_py4j_counter`` yields."""
+    c0, t0 = calls[0], time.perf_counter()
+    df = fn(spark, sf_dir)
+    c1, t1 = calls[0], time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t0, c1 - c0, calls[0] - c1
+
+
+def _median(xs):
+    xs = sorted(xs)
+    return xs[len(xs) // 2]
+
+
+def time_lines(spark, names, sf_dir) -> dict[str, dict]:
+    """Time each named line (registry or ``EXTRA``) by the sampling rule
+    in the module docstring. Per line: ``runs`` (every total, warm-ups
+    included), ``median`` and ``min`` of the timed totals, ``build_s``
+    (median construction seconds over the timed runs) and
+    ``py4j_build``/``py4j_exec`` (first warm-up run only)."""
+    builders = {**entry.queries(), **EXTRA}
+    out: dict[str, dict] = {}
+    for name in names:
+        fn = builders[name]
+        warm = max(WARMUP_RUNS, DEEP_WARMUP.get(name, 0))
+        with _py4j_counter() as calls:
+            first = _run(spark, fn, sf_dir, calls)
+        runs = [first] + [
+            _run(spark, fn, sf_dir) for _ in range(warm - 1 + TIMED_RUNS)
+        ]
+        if _median(round(r[1], 3) for r in runs[warm:]) < SUBSEC_S:
+            runs += [_run(spark, fn, sf_dir) for _ in range(SUBSEC_EXTRA)]
+        if name in ELASTIC_LINES:
+            runs += [_run(spark, fn, sf_dir) for _ in range(ELASTIC_EXTRA)]
+        totals = [round(r[1], 3) for r in runs]
+        timed = totals[warm:]
+        out[name] = {
+            "runs": totals,
+            "median": _median(timed),
+            "min": min(timed),
+            "build_s": round(_median(r[0] for r in runs[warm:]), 3),
+            "py4j_build": first[2],
+            "py4j_exec": first[3],
+        }
+        print(f"# {name}: {out[name]['median']}s {totals}", file=sys.stderr)
     return out
 
 
-def _queries_from_archived_runs(
-    artifact: str,
-    expect_total: float | None = None,
-    expect_n: int | None = None,
-) -> dict[str, float]:
-    """Per-query medians for a compact-format round (r12+): the final
-    stdout line no longer carries the queries map (it must fit the
-    driver's 2000-char tail — VERDICT r11 item 1), so read the
-    BENCH_RUNS.json that was committed alongside that round's artifact
-    via git, falling back to the working tree copy.
-
-    Each candidate is VALIDATED against the artifact's own compact
-    summary (ADVICE r12): the archived medians must reproduce the
-    artifact's ``value`` (within rounding) and ``n_queries``. Without
-    this, an artifact and its runs file landing in separate commits
-    made ``git show`` silently return the PREVIOUS round's runs and
-    the drift common-set ratios were computed from stale medians."""
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    candidates: list[str] = []
-    try:
-        sha = subprocess.run(
-            ["git", "log", "--diff-filter=A", "--format=%H", "-n", "1",
-             "--", artifact],
-            capture_output=True, text=True, cwd=here, timeout=30,
-        ).stdout.strip()
-        if sha:
-            shown = subprocess.run(
-                ["git", "show", f"{sha}:BENCH_RUNS.json"],
-                capture_output=True, text=True, cwd=here, timeout=30,
-            ).stdout
-            if shown:
-                candidates.append(shown)
-    except Exception:
-        pass
-    try:
-        with open(os.path.join(here, "BENCH_RUNS.json")) as f:
-            candidates.append(f.read())
-    except OSError:
-        pass
-
-    def _valid(med: dict[str, float]) -> bool:
-        if expect_n is not None and len(med) != expect_n:
-            return False
-        if expect_total is not None and abs(
-            sum(med.values()) - expect_total
-        ) > 0.05:
-            return False
-        return True
-
-    for content in candidates:
-        try:
-            data = json.loads(content)
-        except ValueError:
-            continue
-        med = data.get("medians")
-        if not (isinstance(med, dict) and med):
-            runs = data.get("runs")
-            med = (
-                _medians_from_runs(
-                    runs,
-                    int(data.get("warmup_discard", 0) or 0),
-                    data.get("warmup_overrides"),
-                )
-                if isinstance(runs, dict)
-                else {}
-            )
-        if med:
-            med = {k: float(v) for k, v in med.items()}
-            if _valid(med):
-                runs = data.get("runs")
-                _queries_from_archived_runs.last_runs = (
-                    runs if isinstance(runs, dict) else None
-                )
-                return med
-    _queries_from_archived_runs.last_runs = None
-    return {}
-
-
-#: side-channel for the validated doc's per-run samples: the drift
-#: normalizer needs prev-round MINS (for the min-of-runs regression
-#: ratio, VERDICT r14 item 2) without changing this function's
-#: medians-only return contract that tests pin.
-_queries_from_archived_runs.last_runs = None
-
-
-def _line_regressions(
-    timings: dict[str, float],
-    runs: dict[str, list[float]],
-    prev_medians: dict[str, float],
-    prev_runs: dict[str, list[float]] | None,
-) -> dict:
-    """Per-line ratio vs the prior committed round, by median AND by
-    min-of-runs (VERDICT r14 item 2): r14's PERF.md asserted "zero lines
-    above 1.3x" in prose while the committed runs file showed 14 — bench
-    claims must be artifact fields a test can check, never prose. The
-    min-of-runs ratio (this round's best run / prior round's best run)
-    is the noise-robust leg: a line over 1.3x by median but not by min
-    is scheduling noise; over by BOTH is a real regression."""
-    ratio_median: dict[str, float] = {}
-    ratio_min: dict[str, float] = {}
-    for name, now in timings.items():
-        then = prev_medians.get(name)
-        if then and then > 0:
-            ratio_median[name] = round(now / then, 3)
-        if prev_runs is not None:
-            pthen = prev_runs.get(name)
-            pnow = runs.get(name)
-            if pthen and pnow and min(pthen) > 0:
-                ratio_min[name] = round(min(pnow) / min(pthen), 3)
-    # Declared-elastic lines page the screen only when over 1.3x by BOTH
-    # statistics (the doc above already defines over-by-both as "a real
-    # regression"); their raw ratios are still emitted unconditionally
-    # in elastic_ratios so the relaxation is visible in the artifact.
-    def _other_over(other: float | None) -> bool:
-        # the comprehension below already filtered THIS statistic > 1.3;
-        # the elastic relaxation additionally requires the OTHER one over
-        # (missing other-statistic data fails closed → still pages)
-        return other is None or other > 1.3
-
-    over_med = sorted(
-        k
-        for k, r in ratio_median.items()
-        if r > 1.3
-        and (k not in ELASTIC_LINES or _other_over(ratio_min.get(k)))
-    )
-    over_min = sorted(
-        k
-        for k, r in ratio_min.items()
-        if r > 1.3
-        and (k not in ELASTIC_LINES or _other_over(ratio_median.get(k)))
-    )
-    elastic = {
-        k: {"median": ratio_median.get(k), "min": ratio_min.get(k)}
-        for k in sorted(ELASTIC_LINES)
-        if k in ratio_median or k in ratio_min
-    }
-    return {
-        "ratio_median": ratio_median,
-        "ratio_min": ratio_min,
-        "over_1p3x_median": over_med,
-        "over_1p3x_min": over_min,
-        "elastic_ratios": elastic,
-    }
-
-
-def _drift_normalization(
-    timings: dict[str, float],
-    canary_timings: dict[str, float],
-    runs: dict[str, list[float]] | None = None,
-) -> dict:
-    """Compare this run against the most recent committed BENCH_r*.json.
-
-    Drift = median of per-canary (now / then) ratios, preferring the
-    multi-second synthetic canaries when the prior artifact carries
-    them (r11+), falling back to the registry canaries otherwise. ALL
-    individual ratios are emitted (``canary_ratios``, stderr+side file)
-    so a 0.94-vs-1.48 spread like r10's is visible instead of laundered
-    into a single median, and the registry-vs-synthetic medians are
-    cross-checked in-artifact (``canary_basis_disagreement`` — VERDICT
-    r11 item 3). Returns {} if no prior artifact is readable. Handles
-    all three artifact generations: legacy full-line (≤r10), truncated
-    tail (r11), and compact line + archived BENCH_RUNS.json (r12+)."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev, prev_canaries, prev_round, prev_runs = None, {}, None, None
-    _queries_from_archived_runs.last_runs = None  # clear the side-channel
-    candidates = [
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        # main-board artifacts only: side legs like BENCH_r17_c8.json
-        # (the driver's low-core run) carry canaries from a different
-        # core count and must not become the normalization baseline
-        for m in [re.search(r"BENCH_r(\d+)\.json$", p)]
-        if m
-    ]
-    prev_leg = None
-    for rnd, path in sorted(candidates, reverse=True):
-        # main artifact first, then the same round's SIDE LEGS (e.g.
-        # BENCH_r17_c8.json) before dropping a whole round: r17
-        # committed the c8 leg's BENCH_RUNS.json (last bench.py run
-        # wins the file), so the main artifact's archived-runs replay
-        # fails its own value check and the old code silently
-        # normalized r18 against r16 — a two-round-stale baseline that
-        # overstates round-over-round ratios. A same-round side leg
-        # (validated against ITS OWN compact value) is the honest
-        # fallback; ``baseline_leg`` marks it in the artifact.
-        legs = [path] + sorted(
-            glob.glob(os.path.join(here, f"BENCH_r{rnd}_*.json"))
-        )
-        for leg_path in legs:
-            try:
-                with open(leg_path) as f:
-                    data = json.load(f)
-            except (OSError, ValueError):
-                continue
-            try:
-                parsed = data.get("parsed") or {}
-                q = parsed.get("queries") if isinstance(parsed, dict) else None
-                c = parsed.get("canaries") if isinstance(parsed, dict) else None
-                if not (isinstance(q, dict) and q):
-                    if isinstance(c, dict) and c:
-                        # compact format: canaries in-line, queries archived
-                        q = _queries_from_archived_runs(
-                            os.path.basename(leg_path),
-                            expect_total=(
-                                float(parsed["value"])
-                                if isinstance(parsed.get("value"), (int, float))
-                                else None
-                            ),
-                            expect_n=(
-                                int(parsed["n_queries"])
-                                if isinstance(parsed.get("n_queries"), int)
-                                else None
-                            ),
-                        )
-                    elif isinstance(data.get("tail"), str):
-                        q, c = _recover_from_tail(data["tail"])
-                if isinstance(q, dict) and q:
-                    prev = {k: float(v) for k, v in q.items()}
-                    prev_runs = _queries_from_archived_runs.last_runs
-                    if isinstance(c, dict):
-                        prev_canaries = {k: float(v) for k, v in c.items()}
-                    prev_round = rnd
-                    m = re.search(r"BENCH_r\d+_(\w+)\.json$", leg_path)
-                    prev_leg = m.group(1) if m else None
-                    break
-            except (ValueError, AttributeError, TypeError):
-                continue
-        if prev:
-            break
-    if not prev:
-        return {}
-    # side-leg baseline (different core count): per-line/total RAW
-    # ratios are meaningful (the board is construction-bound — the r17
-    # c8 and c32 totals differ by 6%), but its canaries are NOT — a c8
-    # cpu canary is ~4x a c32 one and would "normalize" the board by a
-    # fantasy factor. Disable canary normalization, keep everything
-    # else (raw ratios, regression ledger).
-    if prev_leg is not None:
-        prev = {k: v for k, v in prev.items() if not k.startswith("canary")}
-        prev_canaries = {}
-    per_canary: dict[str, float] = {}
-    for c in CANARIES:
-        if c in timings and prev.get(c):
-            per_canary[c] = round(timings[c] / prev[c], 4)
-    for c, t in canary_timings.items():
-        if prev_canaries.get(c):
-            per_canary[c] = round(t / prev_canaries[c], 4)
-    if not per_canary and prev_leg is None:
-        return {}
-    by_class: dict[str, list[float]] = {}
-    for k, v in per_canary.items():
-        by_class.setdefault(CANARY_CLASS.get(k, "registry"), []).append(v)
-    class_med = {
-        cls: sorted(vs)[len(vs) // 2] for cls, vs in by_class.items()
-    }
-    # Basis preference (r17, test-pinned): canary_cpu alone when both
-    # rounds carry it — the r17 same-box A/B measured its same-code
-    # between-session spread at 1.03x vs canary_shuffle's 1.35x, and
-    # the 2-element synthetic-class "median" (sorted[n//2]) always
-    # picks the LARGER ratio, i.e. whichever canary drifted more.
-    # Fallbacks: synthetic class median (pre-r11-style artifacts
-    # without a cpu ratio), then registry. The fixed-overhead class
-    # never normalizes compute.
-    if prev_leg is not None:
-        drift, basis = None, "none (side-leg baseline)"
-    elif "canary_cpu" in per_canary:
-        drift, basis = per_canary["canary_cpu"], "cpu"
-    elif "synthetic" in class_med:
-        drift, basis = class_med["synthetic"], "synthetic"
-    else:
-        drift, basis = class_med.get("registry"), "registry"
-    if drift is None and prev_leg is None:
-        # prior artifact carried only fixed-class canaries
-        return {}
-    out = {
-        "prev_round": prev_round,
-        # non-None when the baseline came from a same-round SIDE leg
-        # (e.g. "c8") because the main leg's archived runs failed their
-        # value check — comparable in round but from a different core
-        # count; read the per-line ratios with that caveat
-        "baseline_leg": prev_leg,
-        "canary_drift": round(drift, 4) if drift is not None else None,
-        "canary_drift_basis": basis,
-        "canary_ratios": per_canary,
-    }
-    common = [k for k in timings if k in prev]
-    prev_sum = sum(prev[k] for k in common)
-    if common and prev_sum > 0:  # a fully-renamed board has no overlap
-        raw = sum(timings[k] for k in common) / prev_sum
-        out.update(common_n=len(common), common_raw_ratio=round(raw, 4))
-        if drift is not None:
-            out["common_norm_ratio"] = round(raw / drift, 4)
-    # in-artifact contradiction flag (VERDICT r11 item 3, widened per
-    # r14 item 3, CALIBRATED per r16 item 2): each non-basis CLASS
-    # median is compared to the drift basis — registry-vs-synthetic
-    # disagreement means short-query overhead moved differently from
-    # compute; fixed-vs-synthetic separates "box added per-query
-    # latency" from "box compute slowed". The raw max disagreement is
-    # still emitted for series continuity, but the CONFLICT flag now
-    # applies CANARY_TOLERANCE: a class gates only beyond its measured
-    # same-code between-session spread (see the constant's docstring —
-    # the flat 0.20 threshold fired on box noise by construction).
-    basis_cls = "synthetic" if basis == "cpu" else basis
-    others = {} if drift is None else {
-        cls: round(abs(med / drift - 1.0), 4)
-        for cls, med in class_med.items()
-        if cls != basis_cls
-    }
-    if basis == "cpu" and "synthetic" in class_med:
-        # with the cpu basis, shuffle-vs-cpu divergence is still worth
-        # surfacing: report the synthetic class median against the basis
-        others["synthetic"] = round(abs(class_med["synthetic"] / drift - 1.0), 4)
-    if others:
-        out["canary_class_medians"] = {
-            c: round(m, 4) for c, m in class_med.items()
-        }
-        out["canary_basis_disagreement"] = max(others.values())
-        over = {
-            cls: dis
-            for cls, dis in others.items()
-            if CANARY_TOLERANCE.get(cls, 0.20) is not None
-            and dis > CANARY_TOLERANCE.get(cls, 0.20)
-        }
-        out["canary_class_tolerance"] = {
-            c: CANARY_TOLERANCE.get(c, 0.20) for c in others
-        }
-        out["canary_class_over_tolerance"] = over
-        out["canary_basis_conflict"] = bool(over)
-        # r18 (VERDICT r17 item 5): when classes disagree >= 0.40 the
-        # artifact ADJUDICATES instead of just flagging — the cpu canary
-        # is authoritative (measured same-code between-session spread
-        # 1.03x vs shuffle 1.35x / fixed 2.81x; see CANARY_TOLERANCE).
-        # Non-basis classes stay reported above but do not normalize.
-        if max(others.values()) >= 0.40:
-            out["canary_basis_adjudication"] = {
-                "authoritative": basis,
-                "rule": (
-                    "class disagreement >= 0.40: the drift basis"
-                    " (cpu canary when present) is authoritative;"
-                    " non-basis class medians are reported but do"
-                    " not normalize"
-                ),
-            }
-    # per-line regression ledger (VERDICT r14 item 2): counts go on the
-    # compact stdout line; the full ratio maps ride BENCH_RUNS.json via
-    # the private _vs_prev key (popped by main before printing).
-    if runs is not None:
-        reg = _line_regressions(timings, runs, prev, prev_runs)
-        out["_vs_prev"] = {"prev_round": prev_round, **reg}
-        out["lines_over_1p3x"] = {
-            "median": len(reg["over_1p3x_median"]),
-            "min": len(reg["over_1p3x_min"]),
-        }
-    return out
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    names = (sys.argv[1:] if argv is None else argv) or HEADLINE
+    unknown = sorted(set(names) - set(entry.queries()) - set(EXTRA))
+    if unknown:
+        raise SystemExit(f"unknown line(s): {' '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
     spark = get_spark("bench")
     warm_up(spark)
-
-    # Per-query MEDIAN of N runs (default 3): round-over-round deltas on a
-    # shared box were dominated by scheduling noise (a zero-shuffle query
-    # once swung +32% with an unchanged plan); the median pins the signal.
-    # Sub-second queries flap hardest (r6: b28_mixture's [0.43, 0.88,
-    # 0.31] read as a fake 1.6× regression), so when the first 3 runs
-    # median under a second, 2 extra runs widen the sample to 5.
-    runs_n = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    extra_subsec = int(os.environ.get("SPARK_GRAFT_BENCH_SUBSEC_EXTRA", "2"))
-    # Per-query warm-up discard (r15, the b1_snapshot_diff root cause):
-    # run 1 of a query pays JIT/codegen cold-start — up to 3x its steady
-    # state (b1's to_json projection is the board's worst). r14's driver
-    # box inflated early-session times past the 1.0 s threshold, the
-    # sub-second extra-runs rule stopped triggering, and 3-run medians
-    # landed entirely on cold runs: b1 read 3.7x with byte-identical
-    # code (interleaved A/B at the r13 sha vs HEAD: statistically
-    # identical). One untimed warm-up per query makes the median a
-    # steady-state reading regardless of box speed — the same rule the
-    # synthetic canaries have always used (2 discarded warmups).
-    warmup_discard = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-    queries = entry.queries()
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = EXTRA.get(name) or queries[name]
-        samples = []
-        q_warmup = max(warmup_discard, DEEP_WARMUP.get(name, 0))
-        for _ in range(runs_n + q_warmup):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
-        timed = samples[q_warmup:]
-        if sorted(timed)[len(timed) // 2] < 1.0:
-            for _ in range(extra_subsec):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
-            # q_warmup, NOT warmup_discard (r17 ADVICE): slicing by the
-            # global discard re-included the DEEP_WARMUP JIT tail for
-            # sub-second deep-warmup lines (b1's steady state is ~0.7 s,
-            # so this branch always fires for the exact line the override
-            # targets), making main()'s median disagree with the
-            # doc-carried warmup_overrides replay in _medians_from_runs.
-            timed = samples[q_warmup:]
-        if name in ELASTIC_LINES:
-            # widen the sample over more box states (see ELASTIC_LINES):
-            # the r16 A/B measured within-sha pass-to-pass medians
-            # swinging up to 1.79x on 3-run samples of these lines
-            for _ in range(
-                int(os.environ.get("SPARK_GRAFT_BENCH_ELASTIC_EXTRA", "4"))
-            ):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
-            timed = samples[q_warmup:]  # match the replay slice (see above)
-        all_runs[name] = samples  # warmups kept visible in the side file
-        timings[name] = sorted(timed)[len(timed) // 2]
-        print(f"# {name}: {timings[name]}s {samples}", file=sys.stderr)
-
-    # synthetic canaries: two DISCARDED warmups, then median-of-runs_n,
-    # kept OUT of the queries dict so the common-set ratio stays a code
-    # signal. The warmups matter: the shuffle canary's first executions
-    # pay first-touch page allocation for ~1 GB of shuffle blocks and
-    # only settle on run 3 (measured [25.9, 9.4, 4.4] cold and
-    # [7.3, 6.8, 4.1, 4.2, 4.1] warm-ish) — that's memory-subsystem
-    # warmup, not the box speed the canary exists to measure.
-    canary_timings: dict[str, float] = {}
-    for name, fn in SYNTH_CANARIES.items():
-        samples = []
-        for i in range(runs_n + 2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
-        all_runs[name] = samples  # warmups kept visible in the side file
-        steady = samples[2:]
-        canary_timings[name] = sorted(steady)[len(steady) // 2]
-        print(f"# {name}: {canary_timings[name]}s {samples}", file=sys.stderr)
-
-    total = round(sum(timings.values()), 3)
-    norm = _drift_normalization(timings, canary_timings, runs=all_runs)
-    vs_prev = norm.pop("_vs_prev", None)
-
-    # Companion-run plumbing (VERDICT r12 item 7): the driver-box and the
-    # builder's quiet-box read the same code ~10% apart (the documented
-    # box-swing band), and reconciling them used to require PERF.md prose.
-    # The builder's end-of-round run sets SPARK_GRAFT_BENCH_ROLE=companion,
-    # which snapshots its own compact summary to BENCH_COMPANION.json; the
-    # driver's run then embeds that snapshot verbatim as ``companion_run``
-    # so both readings live in one artifact.
-    here = os.path.dirname(os.path.abspath(__file__))
-    companion_path = os.path.join(here, "BENCH_COMPANION.json")
-    role = os.environ.get("SPARK_GRAFT_BENCH_ROLE", "driver")
-    if role == "companion":
-        try:
-            import subprocess
-
-            sha7 = subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, cwd=here, timeout=30,
-            ).stdout.strip() or None
-        except Exception:
-            sha7 = None
-        snap = {
-            "sha": sha7,
-            "total": total,
-            "n_queries": len(timings),
-            "common_raw_ratio": norm.get("common_raw_ratio"),
-            "common_norm_ratio": norm.get("common_norm_ratio"),
-            "canary_drift": norm.get("canary_drift"),
-        }
-        try:
-            with open(companion_path, "w") as f:
-                json.dump(snap, f)
-                f.write("\n")
-        except OSError:
-            pass
-    else:
-        try:
-            with open(companion_path) as f:
-                snap = json.load(f)
-            if isinstance(snap, dict) and snap.get("total") is not None:
-                norm["companion_run"] = {
-                    k: snap.get(k)
-                    for k in ("sha", "total", "common_norm_ratio")
-                }
-        except (OSError, ValueError):
-            pass
-    # The stdout contract is ONE COMPACT line: the driver tail-captures
-    # only the last ~2000 chars of stdout. The r5 artifact broke on
-    # embedded raw samples; the r11 artifact broke again when the
-    # queries map + canary_ratios pushed the line past the window
-    # (BENCH_r11 "parsed": null — VERDICT r11 item 1). Per-query medians
-    # and per-canary ratios therefore go to stderr + BENCH_RUNS.json
-    # (committed per round; _queries_from_archived_runs reads them back
-    # via git for the next round's common-set ratio), and the final
-    # stdout line stays a compact summary well under the capture window.
-    canary_ratios = norm.pop("canary_ratios", None)
-    print(f"# queries: {json.dumps(timings)}", file=sys.stderr)
-    if canary_ratios is not None:
-        print(f"# canary_ratios: {json.dumps(canary_ratios)}", file=sys.stderr)
-    print(f"# runs: {json.dumps(all_runs)}", file=sys.stderr)
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_RUNS.json"), "w") as f:
-            json.dump(
-                {
-                    "sf": sf,
-                    "runs_per_query": runs_n,
-                    "warmup_discard": warmup_discard,
-                    "warmup_overrides": DEEP_WARMUP,
-                    "runs": all_runs,
-                    "medians": timings,
-                    "canary_medians": canary_timings,
-                    "canary_ratios": canary_ratios,
-                    # full per-line regression ledger (VERDICT r14
-                    # item 2); the compact line carries only counts
-                    "vs_prev": vs_prev,
-                },
-                f,
-            )
-            f.write("\n")
-    except OSError:
-        pass
-    line = json.dumps(
-        {
-            "metric": "headline_query_wall_total",
-            "value": total,
-            "unit": "sec",
-            "n_queries": len(timings),
-            "canaries": canary_timings,
-            "sf": sf,
-            "runs_per_query": runs_n,
-            "warmup_runs": warmup_discard,
-            # box-drift normalization vs the previous committed round
-            # (VERDICT r8 item 2): the ≤1.05 round-over-round criterion
-            # applies to common_norm_ratio, ending the box-drift
-            # argument inside the artifact itself.
-            **norm,
-        }
-    )
-    if len(line) >= 1200:
-        # never lose the artifact to growth: degrade to the minimal
-        # summary instead of overflowing the driver's ~2000-char tail
-        # capture (the r5/r11 failure mode) or crashing with no line
-        print(f"# oversized summary ({len(line)}B), degrading", file=sys.stderr)
-        line = json.dumps(
-            {
-                "metric": "headline_query_wall_total",
-                "value": total,
-                "unit": "sec",
-                "n_queries": len(timings),
-                "sf": sf,
-                "canary_drift": norm.get("canary_drift"),
-                "common_norm_ratio": norm.get("common_norm_ratio"),
-                "lines_over_1p3x": norm.get("lines_over_1p3x"),
-            }
-        )
-    print(line)
+    lines = time_lines(spark, names, sf_dir)
+    print(f"# lines: {json.dumps(lines)}", file=sys.stderr)
+    print(json.dumps({
+        "metric": "headline_query_wall_total",
+        "value": round(sum(r["median"] for r in lines.values()), 3),
+        "unit": "sec",
+        "n_queries": len(lines),
+        "sf": float(m.group(1)) if m else -1.0,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "runs_per_query": TIMED_RUNS,
+        "warmup_runs": WARMUP_RUNS,
+    }))
 
 
 if __name__ == "__main__":

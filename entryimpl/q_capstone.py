@@ -594,11 +594,14 @@ def q_b24_corpus_v7(spark, sf_dir):
             ).alias("__d"),
         )
     )
-    # r18 (guide §5): gated_ids has exactly ONE consumer (the kept
-    # checkpoint's job below), so it pipelines into that job instead of
-    # paying its own eager materialization — fps/flagged stay
-    # checkpointed (multi-consumer), so the inlined subtree is two RDD
-    # scans + one agg, not a re-derivation
+    # gated_ids is NOT checkpointed although it has TWO consumers through
+    # ``gated``: the kept checkpoint's job (via ``sized``) and the
+    # n_gated aggregate in ``counts``, so its subtree is derived in both
+    # jobs. fps/flagged stay checkpointed (multi-consumer), so that
+    # subtree is two RDD scans + one agg. Restoring
+    # gated_ids.localCheckpoint() won only 3 of 5 interleaved same-box
+    # pairs of the line (medians 5.00 s lazy vs 4.57 s checkpointed), short
+    # of the 4 of 5 needed to change it.
     gated_ids = per_doc.filter(F.col("__d") * 2 < F.col("__w")).select(
         "doc_id"
     )

@@ -2078,11 +2078,14 @@ def kcore_peel(
 
     Scale shape: per round one src-keyed degree agg (map-side combine)
     + TWO keyed semi-joins (src-survivors, dst-survivors) — no
-    cartesian, no global window; the edge relation is localCheckpoint'd
-    PER ROUND because each round's stats branch AND the next round both
-    consume it (the LPA double-reference rule — a lazy chain would
+    cartesian, no global window. INTERMEDIATE rounds' edges are
+    localCheckpoint'd: each round's stats branch AND the next round both
+    consume them (the LPA double-reference rule — a lazy chain would
     re-peel prior rounds per consumer; join budget pinned in
-    tests/test_plans.py).
+    tests/test_plans.py). The FINAL round's subgraph feeds only its own
+    stats leg and pipelines into the output job uncheckpointed: one
+    fewer eager job, and the line was faster that way in 5 of 6
+    interleaved same-box pairs against the checkpoint-every-round form.
 
     Output: one row per round 0..rounds — ``(round, n_nodes, n_edges,
     min_deg, max_deg)`` of the surviving subgraph (round 0 = input;
@@ -2148,13 +2151,15 @@ def bellman_ford(
     (≤ |nodes| rows, broadcast-sized for any bounded node universe)
     equi-joins edges on ``src``, candidate ``dist + w`` values union
     with the standing distances, and a keyed min contracts back to one
-    row per node. INTERMEDIATE rounds' distances are localCheckpoint'd —
-    each is double-referenced (the next round's union leg + join leg),
-    so an uncheckpointed chain re-executes prior rounds exponentially
-    (the LPA/de6ad9c rule; join budget pinned in tests/test_plans.py);
-    the FINAL round has exactly one consumer (the return) and pipelines
-    into the caller's plan uncheckpointed (r18 — one fewer eager job +
-    materialization per call, same results).
+    row per node. Distances are localCheckpoint'd EVERY round. An
+    intermediate round is double-referenced (the next round's union leg
+    + join leg), so an uncheckpointed chain re-executes prior rounds
+    exponentially (the LPA/de6ad9c rule; join budget pinned in
+    tests/test_plans.py). The final round has one consumer and is
+    checkpointed too, so every round follows one policy: pipelining it
+    uncheckpointed read slower on both r18 board legs, 32 and 8 cores
+    (1.29 → 1.54/1.64 s), and won only 3 of 6 interleaved same-box
+    pairs.
 
     Output: ``(node, dist)`` — nodes never reached within ``rounds``
     relaxations are absent (callers left-join their node universe to
@@ -2171,7 +2176,7 @@ def bellman_ford(
     )
     # r17 construction pass 2: per-round relax/contract as SQL strings —
     # identical trees, re-gated bit-exact
-    for rnd in range(rounds):
+    for _ in range(rounds):
         relax = dist.join(e, dist["node"] == e["src"]).selectExpr(
             "dst as node", "cast(dist + w as bigint) as dist"
         )
@@ -2179,9 +2184,8 @@ def bellman_ford(
             dist.unionByName(relax)
             .groupBy("node")
             .agg(F.expr("cast(min(dist) as bigint) as dist"))
+            .localCheckpoint()
         )
-        if rnd < rounds - 1:
-            dist = dist.localCheckpoint()
     return dist
 
 

@@ -805,11 +805,11 @@ _ITERATIVE_JOIN_BUDGETS = {
     # in the plan = 2 joins (a dropped INTERMEDIATE checkpoint still
     # multiplies the count severalfold past this)
     "b30_kcore": 4,
-    # r13: INTERMEDIATE rounds' distances checkpointed (union leg + join
-    # leg both consume them); r18: the final round pipelines
-    # uncheckpointed (single consumer), so its relax join + the final
-    # nation left-join survive = 2 joins
-    "b30_bellman_ford": 4,
+    # r13: per-round distances checkpointed (union leg + join leg both
+    # consume them): only the final nation left-join survives = 1 join
+    # (r14: tightened from 4 — the 3 joins of slack could have masked a
+    # dropped-checkpoint regression, the exact class this pin exists for)
+    "b30_bellman_ford": 2,
 }
 
 

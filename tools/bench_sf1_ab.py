@@ -5,9 +5,12 @@ item 3; refreshed per VERDICT r11 item 4 when the headline board grows).
 The sf0.1 run inside this artifact IS the box normalization — both runs
 land within the same session on the same box, so per-line ratios are
 box-drift-free. The non-board registry lines of ``SCALE_FAMILIES`` are
-timed the same way with tools/profile_line.py at both scales and judged
-by the same super-linear criterion. Timing fixture ONLY — sf0.01 remains
-the correctness scale and /tmp/sf1 is never oracle-checked.
+timed by ``bench.py <scale lines>`` at both scales, so they follow the
+board's sampling rule (deep warm-ups, sub-second and elastic extra runs;
+the committed BENCH_SF1.json predates this and timed them with 1 warm-up
++ median of 3), and are judged by the same super-linear criterion.
+Timing fixture ONLY — sf0.01 remains the correctness scale and /tmp/sf1
+is never oracle-checked.
 
 Usage::
 
@@ -39,8 +42,8 @@ DESIGNED_LINEAR = {"b29_semantic_decontam"}
 #: every operator family of the retired synthetic 10x smoke, mapped to
 #: the registry line whose builder calls the same library function (for
 #: inline query shapes: the registry line of that shape). Board lines are
-#: timed by the bench.py half; the rest ("scale lines") by
-#: tools/profile_line.py. None: no registry line carries the family.
+#: timed by the bench.py board run; the rest ("scale lines") by a second
+#: bench.py run naming them. None: no registry line carries the family.
 SCALE_FAMILIES = {
     "bootstrap_images": "a6_bootstrap",
     "hash_agg": "b10_agg_pricing",
@@ -139,30 +142,23 @@ SCALE_FAMILIES = {
 }
 
 
-def _run(script: str, sf_dir: str, *args: str) -> tuple[dict, str]:
-    """Run a repo script at ``sf_dir`` as the driver does; return its last
-    stdout line (compact JSON by contract) and its stderr."""
+def run_bench(sf_dir: str, *names: str) -> dict:
+    """Run ``bench.py [names]`` at ``sf_dir`` in a fresh process: its
+    last stdout line (the compact summary), plus the per-line records
+    from its ``# lines:`` stderr line under ``lines``."""
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, script), *args],
+        [sys.executable, os.path.join(REPO, "bench.py"), *names],
         capture_output=True, text=True, cwd=REPO, env=env,
     )
     if proc.returncode != 0:
         raise RuntimeError(
-            f"{script} failed at {sf_dir}: {proc.stderr[-2000:]}"
+            f"bench.py failed at {sf_dir}: {proc.stderr[-2000:]}"
         )
-    return json.loads(proc.stdout.strip().splitlines()[-1]), proc.stderr
-
-
-def run_bench(sf_dir: str) -> dict:
-    """bench.py's summary, plus the queries map recovered from its stderr
-    echo."""
-    summary, stderr = _run("bench.py", sf_dir)
-    queries = {}
-    for line in stderr.splitlines():
-        if line.startswith("# queries: "):
-            queries = json.loads(line[len("# queries: "):])
-    summary["queries"] = queries
+    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    for line in proc.stderr.splitlines():
+        if line.startswith("# lines: "):
+            summary["lines"] = json.loads(line[len("# lines: "):])
     return summary
 
 
@@ -180,19 +176,17 @@ def main() -> None:
         else:
             a_dir = "/root/testdata/sf0.1"
     a = run_bench(a_dir)
-    print(f"# sf0.1 total {a['value']}s over {len(a['queries'])}", flush=True)
+    print(f"# sf0.1 total {a['value']}s over {len(a['lines'])}", flush=True)
     b = run_bench(SF1_DIR)
-    print(f"# sf1 total {b['value']}s over {len(b['queries'])}", flush=True)
+    print(f"# sf1 total {b['value']}s over {len(b['lines'])}", flush=True)
     scale_lines = sorted(
         {v for v in SCALE_FAMILIES.values() if v and v not in bench.HEADLINE}
     )
-    # profile_line.py: bench.py's session conf and warm-up; its last line
-    # maps name -> median/min/runs
-    sa, _ = _run("tools/profile_line.py", a_dir, *scale_lines)
-    sb, _ = _run("tools/profile_line.py", SF1_DIR, *scale_lines)
+    sa = run_bench(a_dir, *scale_lines)["lines"]
+    sb = run_bench(SF1_DIR, *scale_lines)["lines"]
     print(f"# scale lines timed: {len(scale_lines)}", flush=True)
-    a_times = {**a["queries"], **{k: v["median"] for k, v in sa.items()}}
-    b_times = {**b["queries"], **{k: v["median"] for k, v in sb.items()}}
+    a_times = {k: v["median"] for k, v in {**a["lines"], **sa}.items()}
+    b_times = {k: v["median"] for k, v in {**b["lines"], **sb}.items()}
     ratios = {
         k: round(b_times[k] / max(a_times[k], 1e-6), 3)
         for k in a_times if k in b_times
@@ -249,8 +243,6 @@ def main() -> None:
         "total_sf01_sec": a["value"],
         "total_sf1_sec": b["value"],
         "total_ratio": round(b["value"] / max(a["value"], 1e-6), 3),
-        "canaries_sf01": a.get("canaries"),
-        "canaries_sf1": b.get("canaries"),
         "ratios": ratios,
         "sf01": a,
         "sf1": b,
