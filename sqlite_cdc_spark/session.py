@@ -4,6 +4,14 @@ Local testing runs on ``local[N]``; the same conf block is what we would
 ship to a 1000-executor cluster — AQE for runtime re-planning (skew joins,
 partition coalescing), Arrow for any Pandas-UDF exchange, and a shuffle
 partition count that AQE is free to shrink.
+
+The session also swaps Hadoop's local filesystem for the one in
+``jvm/nio-localfs.jar`` (source beside it, rebuilt by
+``tools/build_jvm.py``). Without ``libhadoop.so`` the stock one starts a
+``chmod`` process for every local file and directory it creates and a
+``readlink`` for every ``FileContext`` rename, which is most of the cost of
+a CDC micro-batch's offset and commit log writes. The replacement does both
+through ``java.nio``: same modes, same ``.crc`` sidecars, no processes.
 """
 
 from __future__ import annotations
@@ -11,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
 
 
 def get_spark(
@@ -58,5 +68,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # local[N]: the executors run in the driver JVM, so the driver
+        # classpath is theirs too
+        .config("spark.driver.extraClassPath", LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", "sqlitecdc.NioLocalFs$Local")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "sqlitecdc.NioLocalFs$Context")
     )
     return builder.getOrCreate()

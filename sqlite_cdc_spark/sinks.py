@@ -45,13 +45,16 @@ def collecting_handler(store: list) -> Callable[[DataFrame, int], None]:
     return run
 
 
-def http_handler(
-    url: str, timeout_s: float = 10.0, session=None
-) -> Callable[[DataFrame, int], None]:
+def http_handler(url: str, timeout_s: float = 10.0) -> Callable[[DataFrame, int], None]:
     """POST each batch as ``{"changes": [...]}`` — parity with
     ``handlers/http.go:41-74``: non-2xx raises, which fault-stops the
     stream exactly like the reference's engine-stop contract. No retry,
     matching the reference (README.md:126-131).
+
+    At-least-once: a batch whose offsets were not committed before a crash
+    is posted again under the same id. Each POST carries that id in an
+    ``X-Batch-Id`` header so the receiver can drop a repeat; the body is
+    the reference's, unchanged.
     """
     import urllib.request
 
@@ -61,7 +64,9 @@ def http_handler(
         ]
         body = json.dumps({"changes": changes}).encode()
         req = urllib.request.Request(
-            url, data=body, headers={"Content-Type": "application/json"}
+            url,
+            data=body,
+            headers={"Content-Type": "application/json", "X-Batch-Id": str(batch_id)},
         )
         with urllib.request.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
             if not 200 <= resp.status < 300:
@@ -77,6 +82,10 @@ def partitioned_http_handler(
 
     Trades the reference's total-order guarantee for throughput — order
     holds within a partition only. Use for idempotent sinks at scale.
+
+    At-least-once, like :func:`http_handler`, and more so: a retried task
+    posts its partition again, so a receiver can see a partition's POST
+    twice within one batch. Every POST carries the ``X-Batch-Id`` header.
     """
 
     def run(batch: DataFrame, batch_id: int) -> None:
@@ -90,7 +99,9 @@ def partitioned_http_handler(
                 return
             body = json.dumps({"changes": changes}).encode()
             req = urllib.request.Request(
-                url, data=body, headers={"Content-Type": "application/json"}
+                url,
+                data=body,
+                headers={"Content-Type": "application/json", "X-Batch-Id": str(batch_id)},
             )
             with urllib.request.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
                 if not 200 <= resp.status < 300:

@@ -51,7 +51,7 @@ def test_http_handler_posts_batch(spark, sf_dir):
     class Sink(http.server.BaseHTTPRequestHandler):
         def do_POST(self):  # noqa: N802
             n = int(self.headers["Content-Length"])
-            received.append(json.loads(self.rfile.read(n)))
+            received.append((self.headers["X-Batch-Id"], json.loads(self.rfile.read(n))))
             self.send_response(200)
             self.end_headers()
 
@@ -66,7 +66,13 @@ def test_http_handler_posts_batch(spark, sf_dir):
         batch = events_as_changes(load_table(spark, sf_dir, "events")).limit(7)
         sinks.http_handler(url)(batch, 0)
         assert len(received) == 1
-        assert len(received[0]["changes"]) == 7
+        batch_id, body = received[0]
+        assert batch_id == "0"
+        assert list(body) == ["changes"] and len(body["changes"]) == 7
+        received.clear()
+        sinks.partitioned_http_handler(url)(batch.repartition(2), 5)
+        assert {b for b, _ in received} == {"5"}
+        assert sum(len(body["changes"]) for _, body in received) == 7
     finally:
         srv.shutdown()
 

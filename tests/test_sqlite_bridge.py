@@ -288,6 +288,56 @@ def test_poll_log_no_ack_keyset_cursor(db, tmp_path):
     assert db.execute("SELECT count(*) FROM __cdc_log").fetchone()[0] == 120
 
 
+def test_poll_log_publishes_page_atomically(db, tmp_path, monkeypatch):
+    # the page is written under a hidden temp name and renamed into place:
+    # a listing of the watched directory never sees it half-written
+    import os
+
+    import pyarrow.parquet as pq
+
+    sqlite_bridge.setup(db, ["affinity_test"])
+    _insert_rows(db, 120)
+    out = str(tmp_path / "log")
+    real_write = pq.write_table
+    during_write = []
+
+    def write_table(table, where, **kw):
+        names = os.listdir(out)
+        during_write.append(
+            (sum(not n.startswith(".") for n in names), [n for n in names if n.startswith(".")])
+        )
+        real_write(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    assert sqlite_bridge.poll_log(db, out, batch_size=50) == 120
+    # while page k is written, only the k-1 earlier pages are visible and
+    # page k exists under its hidden temp name alone
+    assert [v for v, _ in during_write] == [0, 1, 2]
+    assert all(len(h) == 1 and h[0].endswith(".parquet") for _, h in during_write)
+    assert all(not n.startswith(".") for n in os.listdir(out))
+    assert len(os.listdir(out)) == 3
+
+
+def test_poll_log_failed_publish_leaves_rows_unacked(db, tmp_path, monkeypatch):
+    import os
+
+    sqlite_bridge.setup(db, ["affinity_test"])
+    _insert_rows(db, 120)
+    out = str(tmp_path / "log")
+
+    def boom(src, dst):
+        raise OSError("injected rename failure")
+
+    monkeypatch.setattr(sqlite_bridge.os, "replace", boom)
+    with pytest.raises(OSError, match="injected"):
+        sqlite_bridge.poll_log(db, out, batch_size=50)
+    assert os.listdir(out) == []  # no visible page, no leftover temp file
+    assert db.execute("SELECT count(*) FROM __cdc_log").fetchone()[0] == 120
+    monkeypatch.undo()
+    assert sqlite_bridge.poll_log(db, out, batch_size=50) == 120
+    assert db.execute("SELECT count(*) FROM __cdc_log").fetchone()[0] == 0
+
+
 def test_follow_log_delivers_post_start_writes(db, tmp_path):
     # parity: the reference event loop keeps following the live DB
     # (triggers.go:122-162) — writes that happen AFTER the loop starts are
