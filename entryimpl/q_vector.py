@@ -140,7 +140,7 @@ def q_b20_covariance(spark, sf_dir):
     products, |partitions|·d² transfer), property-tested ≈ this one
     (similarity.py: covariance_matrix)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.covariance_matrix(emb, quantize=1_000_000)
+    return similarity.covariance_matrix(emb)
 
 
 def q_b20_kmeans(spark, sf_dir):

@@ -109,42 +109,22 @@ def compact_log(
     key: Column | str,
     order_cols: Sequence[str] = ("id",),
     drop_deletes: bool = True,
-    use_max_by: bool = False,
 ) -> DataFrame:
     """Collapse a change log to current state: last image per key wins; keys
     whose final operation is DELETE are dropped — the "read replica" use
     case (``/root/reference/README.md:26-30``).
 
-    Scale: one shuffle on the key; the rank is a per-key top-1, which AQE
-    handles under skew. For truly HOT keys pass ``use_max_by=True``:
-    the top-1 becomes a ``max(struct(order, row))`` aggregate — partial
-    (map-side) combine reduces every partition's contribution to one
-    row per key BEFORE the shuffle, so a key with a million log entries
-    ships ~|partitions| rows instead of a million into one window task.
-    Identical output whenever ``order_cols`` is a total order per key
-    (the log id is; equivalence is tested). The window form keeps the
-    original column order/types exactly, so it stays the default.
+    Scale: one shuffle on the key; the rank is a per-key top-1 window,
+    which AQE handles under skew, and which keeps the log's column order
+    and types exactly.
     """
     k = F.col(key) if isinstance(key, str) else key
-    if use_max_by:
-        ordered = F.struct(
-            *[F.col(c) for c in order_cols],
-            F.struct(*[F.col(c) for c in changes.columns]).alias("__row"),
-        )
-        latest = (
-            changes.groupBy(k.alias("__k"))
-            .agg(F.max(ordered).alias("__m"))
-            .select("__m.__row.*")
-        )
-    else:
-        w = Window.partitionBy(k).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    w = Window.partitionBy(k).orderBy(*[F.col(c).desc() for c in order_cols])
+    latest = (
+        changes.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
     if drop_deletes:
         latest = latest.filter(F.col("operation") != OP_DELETE)
     return latest
@@ -958,43 +938,7 @@ def pagerank(
     Output: ``(node_id, rank_units bigint)`` — one row per node that
     appears in any edge.
     """
-    num, den = damping
-    e = edges.select("src", "dst")
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .union(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__od"))
-    base = (scale * (den - num)) // den
-
-    # r17 construction pass 2 (guide §4, driver side): the per-round
-    # projections render as SQL strings parsed once in the JVM — the
-    # Column form re-built the floor-division tree every iteration over
-    # py4j. Identical trees (the fdiv chain, coalesce, casts map 1:1),
-    # re-gated bit-exact against the oracle.
-    share_sql = _fdiv_sql(f"__r * {num}", f"{den} * __od") + " as __share"
-    ranks = nodes.withColumn("__r", F.lit(scale).cast("long"))
-    for _ in range(iters):
-        shares = ranks.join(
-            outdeg, ranks["node_id"] == outdeg["src"]
-        ).selectExpr("src", share_sql)
-        inflow = (
-            e.join(shares, "src")
-            .groupBy("dst")
-            .agg(F.expr("sum(__share) as __in"))
-        )
-        ranks = nodes.join(
-            inflow, nodes["node_id"] == inflow["dst"], "left"
-        ).selectExpr(
-            "node_id",
-            f"cast({base} + coalesce(__in, 0) as bigint) as __r",
-        )
-    return ranks.select("node_id", F.col("__r").alias("rank_units"))
+    return _rank_walk(edges, None, iters, damping, scale, assume_distinct)
 
 
 def personalized_pagerank(
@@ -1029,8 +973,25 @@ def personalized_pagerank(
     r17 (guide §2.4, same as :func:`pagerank`): ``assume_distinct``
     skips the defensive edge distinct for by-construction-distinct
     callers; the e_od pre-attach variant was A/B-rejected (see
-    :func:`pagerank`).
+    :func:`pagerank`). Both run the one walk, :func:`_rank_walk`.
     """
+    return _rank_walk(edges, seeds, iters, damping, scale, assume_distinct)
+
+
+def _rank_walk(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    iters: int,
+    damping: tuple[int, int],
+    scale: int,
+    assume_distinct: bool,
+) -> DataFrame:
+    """The integer random walk behind :func:`pagerank` and
+    :func:`personalized_pagerank`. Each node carries ``__seed`` (1 on a
+    teleport target, 0 elsewhere): rank starts at ``scale`` on seeds and
+    0 elsewhere, and every round's teleport base lands on seeds only.
+    PageRank is the walk with every node seeded (``seeds=None``: a
+    literal ``__seed = 1``, no join)."""
     num, den = damping
     e = edges.select("src", "dst")
     if not assume_distinct:
@@ -1041,18 +1002,24 @@ def personalized_pagerank(
         .union(e.select(F.col("dst").alias("node_id")))
         .distinct()
     )
-    sd = seeds.select(
-        F.col(seeds.columns[0]).alias("node_id"),
-        F.lit(1).alias("__seed"),
-    ).distinct()
-    nodes = nodes.join(sd, "node_id", "left").select(
-        "node_id", F.coalesce("__seed", F.lit(0)).alias("__seed")
-    ).localCheckpoint()
+    if seeds is None:
+        nodes = nodes.localCheckpoint().withColumn("__seed", F.lit(1))
+    else:
+        sd = seeds.select(
+            F.col(seeds.columns[0]).alias("node_id"),
+            F.lit(1).alias("__seed"),
+        ).distinct()
+        nodes = nodes.join(sd, "node_id", "left").select(
+            "node_id", F.coalesce("__seed", F.lit(0)).alias("__seed")
+        ).localCheckpoint()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__od"))
     base = (scale * (den - num)) // den
 
-    # r17 construction pass 2: SQL-string per-round projections (see
-    # :func:`pagerank`) — identical trees, re-gated bit-exact
+    # r17 construction pass 2 (guide §4, driver side): the per-round
+    # projections render as SQL strings parsed once in the JVM — the
+    # Column form re-built the floor-division tree every iteration over
+    # py4j. Identical trees (the fdiv chain, coalesce, casts map 1:1),
+    # re-gated bit-exact against the oracle.
     share_sql = _fdiv_sql(f"__r * {num}", f"{den} * __od") + " as __share"
     ranks = nodes.withColumn(
         "__r",

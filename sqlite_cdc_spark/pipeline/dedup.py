@@ -18,7 +18,6 @@ xxhash64 with fixed per-seed salts, no RNG.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -671,10 +670,7 @@ LAST_CC_ROUNDS: int = 0
 
 
 def _cc_propagate(
-    edges: DataFrame,
-    max_iter: int,
-    raise_on_exhaust: bool = True,
-    verts: DataFrame | None = None,
+    edges: DataFrame, max_iter: int, verts: DataFrame | None = None
 ) -> DataFrame | None:
     """Min-label propagation CC over symmetric ``(src, dst)`` edges.
 
@@ -699,12 +695,10 @@ def _cc_propagate(
     and the next round would re-execute all prior rounds' shuffles
     (measured: a lazy-rounds variant was ~15% SLOWER end-to-end on the
     b19 capstones — cross-action shuffle reuse does not exist at the SQL
-    layer; only a materialization truncates the replay). Raises
-    ``RuntimeError`` if ``max_iter`` rounds were not enough — returning
-    non-converged labels silently would yield cluster_ids that are not the
-    component min, breaking the invariant :func:`update_clusters` depends
-    on; with ``raise_on_exhaust=False`` exhaustion returns ``None``
-    instead (the ``algorithm="auto"`` probe path).
+    layer; only a materialization truncates the replay). Returns ``None``
+    if ``max_iter`` rounds were not enough: non-converged labels are not
+    the component min, which :func:`update_clusters` depends on, so the
+    caller restarts on :func:`_cc_star` instead.
 
     ``verts`` (optional) seeds the label table with the full vertex
     universe — isolated vertices then label themselves through the same
@@ -741,26 +735,12 @@ def _cc_propagate(
         labels = edges.select(F.col("src").alias("v")).distinct().select(
             "v", F.col("v").alias("label")
         )
-    converged = False
     for it in range(max_iter):
         labels, n_moved = step(labels)
         LAST_CC_ROUNDS = it + 1
         if n_moved == 0:
-            converged = True
-            break
-    if not converged and not raise_on_exhaust:
-        return None
-    if not converged:
-        raise RuntimeError(
-            f"dup_clusters(algorithm='propagate') did not converge within "
-            f"max_iter={max_iter} rounds — a component's diameter exceeds "
-            f"the round budget, so the returned cluster_ids would NOT be "
-            f"component minima (and a later update_clusters merge would "
-            f"silently diverge from the from-scratch result). Raise "
-            f"max_iter, or use algorithm='star' (large-star/small-star, "
-            f"O(log n) rounds regardless of diameter)."
-        )
-    return labels
+            return labels
+    return None
 
 
 def _star_edges_converged(cur: DataFrame, prev: DataFrame) -> bool:
@@ -790,8 +770,8 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
 
     At the fixpoint the edge set is a forest of stars centered at each
     component's minimum vertex; labels read straight off the edges.
-    Raises ``RuntimeError`` on ``max_iter`` exhaustion (same contract as
-    :func:`_cc_propagate`). Returns ``(v, label)``.
+    Raises ``RuntimeError`` on ``max_iter`` exhaustion: there is no
+    further backend to fall back to. Returns ``(v, label)``.
     """
     global LAST_CC_ROUNDS
     # orient big→small: every symmetric pair (a,b)/(b,a) becomes (max,min)
@@ -831,9 +811,8 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
         e = new
     if not converged:
         raise RuntimeError(
-            f"dup_clusters(algorithm='star') did not converge within "
-            f"max_iter={max_iter} rounds; raise max_iter (O(log n) rounds "
-            f"suffice — this indicates max_iter was set very low)."
+            f"large-star/small-star CC did not converge within "
+            f"{max_iter} rounds (O(log n) rounds suffice)"
         )
     # fixpoint edges are (member → component-min) stars; centers label self
     return (
@@ -851,6 +830,16 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
 #: a few MB — far below executor memory; the distributed rounds take
 #: over beyond it.
 CC_LOCAL_EDGE_LIMIT = 100_000
+
+#: min-label propagation rounds tried above :data:`CC_LOCAL_EDGE_LIMIT`:
+#: near-dup graphs have diameter 2-4, so real corpora converge within
+#: them (the PERF.md round-count table); a graph that has not is
+#: pathologically deep and restarts on large-star/small-star.
+CC_PROPAGATE_ROUNDS = 4
+
+#: round bound of the large-star/small-star backend, which converges in
+#: O(log n) rounds regardless of component diameter.
+CC_STAR_ROUNDS = 25
 
 
 def _cc_local(e: DataFrame) -> DataFrame:
@@ -911,12 +900,7 @@ def _cc_local(e: DataFrame) -> DataFrame:
 
 
 def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    algorithm: str = "auto",
-    propagate_rounds: int = 4,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over near-dup pairs: every doc appearing in a
     pair gets a ``cluster_id`` = the smallest doc id in its component.
@@ -924,31 +908,20 @@ def dup_clusters(
     the keep/drop decision needs the transitive closure (keep cluster min,
     drop the rest); this is that closure.
 
-    Two interchangeable backends (property-tested label-identical), plus
-    an auto-selector:
+    The backend follows from the pair set itself (see
+    :func:`_clusters_from_pairs`):
 
-    - ``algorithm="auto"`` (default): run min-label propagation for up to
-      ``propagate_rounds`` rounds (near-dup graphs have diameter 2-4, so
-      real corpora converge here at propagate cost); if it has NOT
-      converged by then the component diameter is pathological — restart
-      on the large-star/small-star backend, whose round count is
-      O(log n) regardless of diameter. The caller never has to know
-      which shape their dup graph has. (The ≤``propagate_rounds``
-      discarded rounds are bounded, cheap joins; the PERF.md round-count
-      table motivates k≈4.)
-    - ``algorithm="propagate"``: min-label propagation —
-      O(component diameter) rounds, one equi-join + one min-agg per
-      round. Near-dup clusters are short chains (a doc and its close
-      variants), so 2-4 rounds in practice; cheapest for real corpora.
-    - ``algorithm="star"``: large-star/small-star (Kiveris et al. 2014) —
-      O(log n) rounds regardless of diameter; the 100-TB path for
-      adversarially long chains (see :func:`_cc_star`).
+    - up to :data:`CC_LOCAL_EDGE_LIMIT` pairs, one single-task union-find
+      (:func:`_cc_local`);
+    - above it, min-label propagation for up to
+      :data:`CC_PROPAGATE_ROUNDS` rounds (near-dup graphs have diameter
+      2-4, so real corpora converge there); a graph that has not
+      converged by then is pathologically deep and restarts on
+      large-star/small-star (:func:`_cc_star`), whose round count is
+      O(log n) regardless of diameter.
 
-    The explicit backends raise ``RuntimeError`` instead of silently
-    returning non-converged labels when ``max_iter`` is exhausted — a
-    non-min cluster_id would corrupt any later :func:`update_clusters`
-    merge.
-    The per-round convergence probe is the one driver-side action every
+    All three backends yield identical labels (property-tested). The
+    per-round convergence probe is the one driver-side action every
     distributed iterative algorithm needs; the data itself never leaves
     the executors, and ``localCheckpoint`` keeps the per-round plan flat.
     """
@@ -960,17 +933,16 @@ def dup_clusters(
     e = pairs.selectExpr(
         f"cast({bq(id_a)} as bigint) as src", f"cast({bq(id_b)} as bigint) as dst"
     ).localCheckpoint(eager=False)
-    return _clusters_from_pairs(e, max_iter, algorithm, propagate_rounds)
+    return _clusters_from_pairs(e)
 
 
-def _clusters_from_pairs(
-    e: DataFrame, max_iter: int, algorithm: str, propagate_rounds: int = 4
-) -> DataFrame:
+def _clusters_from_pairs(e: DataFrame) -> DataFrame:
     """CC + labeling over an already-CHEAP ``(src, dst)`` pair frame (a
     checkpoint, or cheap joins of checkpointed frames — it is re-read
     once for the vertex universe and once for the edge materialization).
     The shared tail of :func:`dup_clusters` and :func:`update_clusters`.
     """
+    global LAST_CC_ROUNDS
     # adaptive backend selection (r8, VERDICT r7 item 3): when the edge
     # relation is provably small — one bounded limit-probe against the
     # checkpointed frame — the whole closure runs as a single-task
@@ -979,57 +951,32 @@ def _clusters_from_pairs(
     # contracted graph of update_clusters is batch-bounded by contract,
     # so the CDC merge path takes this branch at any corpus scale;
     # corpus-scale pair sets exceed the probe and keep the rounds.
-    if algorithm == "auto":
-        n_probe = e.limit(CC_LOCAL_EDGE_LIMIT + 1).count()
-        if n_probe <= CC_LOCAL_EDGE_LIMIT:
-            global LAST_CC_ROUNDS
-            LAST_CC_ROUNDS = 1  # single union-find pass
-            labels = _cc_local(e)
-            return labels.selectExpr(
-                "v as doc_id",
-                "label as cluster_id",
-                "cast(count(1) over (partition by label) as bigint)"
-                " as cluster_size",
-            )
-    # vertex universe BEFORE dropping self-loops: a (a,a)-only vertex still
-    # deserves a singleton cluster. The propagate backend is SEEDED with
-    # it (isolated vertices ride the rounds labeling themselves — no
-    # coalesce-join afterwards); the star backend only sees real edges,
-    # so its output is coalesce-joined back over the universe below.
-    verts = (
-        e.selectExpr("src as v")
-        .unionByName(e.selectExpr("dst as v"))
-        .distinct()
-    )
-    edges = (
-        e.unionByName(e.selectExpr("dst as src", "src as dst"))
-        .where("src != dst")
-        .distinct()
-        .localCheckpoint(eager=False)  # reused every round: compute the pair plan once
-    )
-    need_vert_join = False
-    if algorithm == "auto":
-        labels = _cc_propagate(
-            edges, min(propagate_rounds, max_iter), raise_on_exhaust=False,
-            verts=verts,
-        )
-        if labels is None:  # pathological diameter: restart on the
-            labels = _cc_star(edges, max_iter)  # O(log n) backend
-            need_vert_join = True
-    elif algorithm == "propagate":
-        labels = _cc_propagate(edges, max_iter, verts=verts)
-    elif algorithm == "star":
-        labels = _cc_star(edges, max_iter)
-        need_vert_join = True
+    n_probe = e.limit(CC_LOCAL_EDGE_LIMIT + 1).count()
+    if n_probe <= CC_LOCAL_EDGE_LIMIT:
+        LAST_CC_ROUNDS = 1  # single union-find pass
+        labels = _cc_local(e)
     else:
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: expected 'auto', "
-            f"'propagate' or 'star'"
+        # vertex universe BEFORE dropping self-loops: a (a,a)-only vertex
+        # still deserves a singleton cluster. Propagation is SEEDED with
+        # it (isolated vertices ride the rounds labeling themselves); the
+        # star backend only sees real edges, so its output is
+        # coalesce-joined back over the universe.
+        verts = (
+            e.selectExpr("src as v")
+            .unionByName(e.selectExpr("dst as v"))
+            .distinct()
         )
-    if need_vert_join:
-        labels = verts.join(labels, "v", "left").selectExpr(
-            "v", "coalesce(label, v) as label"
+        edges = (
+            e.unionByName(e.selectExpr("dst as src", "src as dst"))
+            .where("src != dst")
+            .distinct()
+            .localCheckpoint(eager=False)  # reused every round: compute the pair plan once
         )
+        labels = _cc_propagate(edges, CC_PROPAGATE_ROUNDS, verts=verts)
+        if labels is None:  # pathological diameter: restart on the
+            labels = verts.join(  # O(log n) backend
+                _cc_star(edges, CC_STAR_ROUNDS), "v", "left"
+            ).selectExpr("v", "coalesce(label, v) as label")
     return labels.selectExpr(
         "v as doc_id",
         "label as cluster_id",
@@ -1043,9 +990,6 @@ def update_clusters(
     new_pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
-    algorithm: str = "auto",
-    materialize_labels: bool = True,
 ) -> DataFrame:
     """Incremental dup-cluster maintenance under CDC: merge a batch of NEW
     near-dup pairs into an existing assignment without re-running
@@ -1063,19 +1007,19 @@ def update_clusters(
     the old root IS the min member id, so the min over contracted
     vertices is the min over all underlying members. Invariant
     (tested): ``update_clusters(dup_clusters(P1), P2) ==
-    dup_clusters(P1 ∪ P2)``.
+    dup_clusters(P1 ∪ P2)``. The backend is chosen from the contracted
+    graph's size, as in :func:`dup_clusters`.
 
     The label table is referenced three times (two contraction sides,
     expansion) — when ``labels`` is a live plan (a fresh
     :func:`dup_clusters` output) each reference would replay its
     window-count + join tail, so it is ``localCheckpoint``-ed once
-    here. Pass ``materialize_labels=False`` when ``labels`` is already
-    a materialized table (parquet/checkpoint) to skip the copy.
+    here. A label table already read from parquet pays one extra
+    |labels|-row copy for it.
     """
-    if materialize_labels:
-        labels = labels.select(
-            "doc_id", "cluster_id", "cluster_size"
-        ).localCheckpoint(eager=False)
+    labels = labels.select(
+        "doc_id", "cluster_id", "cluster_size"
+    ).localCheckpoint(eager=False)
     lab = labels.selectExpr(
         "cast(doc_id as bigint) as v",
         "cast(cluster_id as bigint) as label",
@@ -1112,7 +1056,7 @@ def update_clusters(
         # two joins, so materialize the |batch|-bounded result once
         .localCheckpoint(eager=False)
     )
-    sub = _clusters_from_pairs(m, max_iter, algorithm)
+    sub = _clusters_from_pairs(m)
     roots = sub.selectExpr(
         "doc_id as __cv", "cluster_id as __nl"
     ).localCheckpoint(eager=False)
@@ -1355,6 +1299,21 @@ def sorted_neighborhood_pairs(
     )
 
 
+#: planned input size (Catalyst's ``sizeInBytes`` of the
+#: :func:`set_similarity_join` input) up to which its gram-frequency
+#: relation is broadcast. That relation holds one row per distinct
+#: shingle, so it grows with the text: ``b19_prefix_filter``'s corpus
+#: plans at 509,628 bytes at sf0.1 (27,718 distinct grams) and at
+#: 5,234,036 bytes on the ``tools/make_sf1.py`` 10× set, whose
+#: per-replica token suffixes make the vocabulary 10× as large — both
+#: broadcast, with 3× headroom at 10×, as they ran green in the 10×
+#: check. Much larger inputs could carry a vocabulary that approaches
+#: the r14 driver OOM, so they take the shuffle-hash form. The planned
+#: size over-estimates after filters, so a wrong guess lands on the
+#: (slower, safe) shuffle form.
+PREFIX_BCAST_MAX_BYTES = 16 * 1024 * 1024
+
+
 def set_similarity_join(
     df: DataFrame,
     id_col: str,
@@ -1378,8 +1337,10 @@ def set_similarity_join(
     only. Rarity ordering makes prefixes maximally selective (the
     rarest shingles have the shortest posting lists).
 
-    Scale shape: shingle rows (codegen) + one bounded-vocab df agg
-    (broadcast back) + a per-doc rank window + the prefix equi-join
+    Scale shape: shingle rows (codegen) + one vocab-sized df agg
+    (broadcast back while the input's planned size is at most
+    :data:`PREFIX_BCAST_MAX_BYTES`, shuffle-hash joined above it) + a
+    per-doc rank window + the prefix equi-join
     (skew = hot shingles, pruned by rarity ordering, AQE-split) + one
     count-style intersection join for the exact verify. The pytest
     suite proves completeness against the brute-force definition;
@@ -1415,18 +1376,15 @@ def set_similarity_join(
     # the sizes join — the window needs NO exchange and the sizes join
     # lines up __d-vs-__d partitionings — versus the shuffle form's
     # re-exchange of the corpus×grams relation by __g and back by __d.
-    # The r14 failure was Catalyst's STATIC post-agg estimate
-    # undershooting the auto-broadcast threshold and OOMing the driver;
-    # an EXPLICIT broadcast is a deliberate, tested decision instead of
-    # an estimate. gdf is VOCABULARY-sized: bounded and cheap at bench
-    # scales (~1.6M grams ≈ tens of MB; re-tested green under the 10×
-    # scale smoke, where the r14 variant died), unbounded at the 100 TB
-    # target — so the switch is parameterised:
-    # SPARK_GRAFT_PREFIX_BCAST_DF=1 (default, local/bench) broadcasts;
-    # =0 keeps the r17 shuffle form for corpora whose shingle
-    # vocabulary cannot sit in executor memory (production sets this
-    # per corpus; Spark's 8 GB broadcast cap is the hard backstop).
-    if os.environ.get("SPARK_GRAFT_PREFIX_BCAST_DF", "1") == "1":
+    # The r14 failure was Catalyst's STATIC post-agg estimate of gdf
+    # undershooting the auto-broadcast threshold and OOMing the driver.
+    # gdf is VOCABULARY-sized, unbounded at the 100 TB target, so the
+    # choice is made explicitly from the INPUT's planned size (see
+    # PREFIX_BCAST_MAX_BYTES), which over- rather than under-estimates —
+    # a Catalyst statistic, no Spark job; dg stays lazy, so counting gdf
+    # would re-run the shingle pass.
+    planned = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(planned) <= PREFIX_BCAST_MAX_BYTES:
         gdf_side = F.broadcast(gdf)
     else:
         gdf_side = gdf.hint("shuffle_hash")

@@ -24,26 +24,6 @@ def as_double(vec: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _sql_lit(v) -> str | None:
-    """Render an id value as a SQL literal for the string-first greedy
-    loops (r17 construction pass 2), or ``None`` when the type has no
-    safe rendering — callers then fall back to the ``F.lit`` Column
-    path. Ints parse as INT/BIGINT exactly like ``F.lit``. bool is
-    excluded (it is an int subclass but ``F.lit(True)`` is BooleanType,
-    not '1'). Strings containing a quote or backslash are excluded too
-    (r17 ADVICE): backslash escaping is only valid while
-    ``spark.sql.parser.escapedStringLiterals`` stays false, and
-    quote-doubling cannot express a backslash portably across both
-    parser modes — the Column fallback is mode-independent."""
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, str) and "'" not in v and "\\" not in v:
-        return "'" + v + "'"
-    return None
-
-
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate — sequential fold, deterministic."""
     return F.aggregate(
@@ -169,63 +149,6 @@ def semantic_contamination(
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Attach the L2 norm — precompute once when the corpus is reused."""
     return df.withColumn("__norm", l2_norm(as_double(vec_col)))
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine via an Arrow-batched Pandas UDF (B23 fast path).
-
-    The expression-based :func:`cosine_topk` folds the dot product with
-    interpreted higher-order functions (~µs/pair); this variant ships the
-    query matrix to executors once and scores whole Arrow batches with one
-    numpy matmul — the 10-100× Pandas-UDF win for vector math. Same
-    output contract (ties by neighbor id), scores differ from the fold
-    only in float summation order.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = [r[0] for r in q_rows]
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    bqm = corpus.sparkSession.sparkContext.broadcast(qm)
-
-    # NB: no type annotations — ``from __future__ import annotations``
-    # turns them into strings, which pandas_udf can't interpret
-    def _scores(vecs):
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        s = m @ bqm.value.T  # (batch, n_queries)
-        return pd.Series(list(s))
-
-    _scores.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    scores = pandas_udf(_scores, "array<double>")
-
-    scored = corpus.select(
-        F.col(id_col).alias("neighbor_id"), scores(F.col(vec_col)).alias("s")
-    ).select(
-        "neighbor_id",
-        F.posexplode("s").alias("qidx", "score"),
-    )
-    qmap = F.array(*[F.lit(int(i)) for i in q_ids])
-    scored = scored.select(
-        F.element_at(qmap, F.col("qidx") + 1).alias("query_id"),
-        "neighbor_id",
-        "score",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rnk") <= k
-    )
 
 
 # --- LSH-bucketed ANN (the scale path) ---------------------------------------
@@ -1048,31 +971,33 @@ def group_centroids(
 # --- B20 depth: covariance / PCA over the embedding column ------------------
 
 
+#: quantization step of :func:`covariance_matrix`: components become
+#: ``floor(v·COV_QUANT)`` integers (error ~1e-6 of the covariance)
+COV_QUANT = 1_000_000
+
+
 def covariance_matrix(
     df: DataFrame,
     vec_col: str = "embedding",
     ddof: int = 0,
-    quantize: int | None = None,
     round_to: int = 8,
 ) -> DataFrame:
-    """Distributed covariance of an embedding column as ``(i, j, cov)``
+    """Engine-exact covariance of an embedding column as ``(i, j, cov)``
     rows (upper triangle, ``i <= j``) — the statistic behind embedding
     whitening / PCA normalization of a vector corpus.
+
+    Values quantize to ``floor(v·COV_QUANT)`` integers first, making
+    every sum exact integer arithmetic, so the result replays
+    bit-identically on any engine at any parallelism. The covariance
+    returned is of the QUANTIZED variable rescaled back (documented
+    deterministic approximation, error ~1/COV_QUANT). Float covariance
+    is :func:`covariance_matrix_fast`.
 
     Plan: posexplode to (row, dim, value), per-row self equi-join on the
     row id restricted to ``i <= j`` (d·(d+1)/2 pair rows per vector, NO
     cross-row pairs — never a cartesian), then one map-side-combinable
     power-sum agg keyed by (i, j): cov = (Σxy − ΣxΣy/n)/(n − ddof). The
-    shuffle volume is |rows|·d²/2 narrow rows; for large d prefer
-    :func:`covariance_matrix_fast` (per-partition numpy outer products —
-    same result, |partitions|·d² transfer).
-
-    ``quantize`` = the engine-portable oracle mode: values quantize to
-    ``floor(v·quantize)`` integers first, making every sum exact integer
-    arithmetic, so the result replays bit-identically on any engine at
-    any parallelism (the float path's Σ order varies). The covariance
-    returned is of the QUANTIZED variable rescaled back (documented
-    deterministic approximation, error ~1/quantize).
+    shuffle volume is |rows|·d²/2 narrow rows.
     """
     # the row id must be minted BEFORE the explode (a separate Project):
     # monotonically_increasing_id is nondeterministic, and minting it in
@@ -1081,49 +1006,28 @@ def covariance_matrix(
     ex = df.withColumn("__rid", F.monotonically_increasing_id()).select(
         "__rid", F.posexplode(as_double(vec_col)).alias("dim", "v")
     )
-    if quantize:
-        ex = ex.select(
-            "__rid",
-            "dim",
-            F.floor(F.col("v") * F.lit(float(quantize)))
-            .cast("bigint")
-            .alias("q"),
-        )
-        a = ex.select("__rid", F.col("dim").alias("i"), F.col("q").alias("qi"))
-        b = ex.select("__rid", F.col("dim").alias("j"), F.col("q").alias("qj"))
-        pairs = a.join(b, "__rid").filter(F.col("i") <= F.col("j"))
-        sums = pairs.groupBy("i", "j").agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            F.sum("qi").cast("double").alias("sx"),
-            F.sum("qj").cast("double").alias("sy"),
-            F.sum(F.col("qi") * F.col("qj")).cast("double").alias("sxy"),
-        )
-        scale = float(quantize) * float(quantize)
-        return sums.select(
-            F.col("i").cast("int").alias("i"),
-            F.col("j").cast("int").alias("j"),
-            F.round(
-                (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n"))
-                / (F.col("n") - F.lit(float(ddof)))
-                / F.lit(scale),
-                round_to,
-            ).alias("cov"),
-        )
-    a = ex.select("__rid", F.col("dim").alias("i"), F.col("v").alias("vi"))
-    b = ex.select("__rid", F.col("dim").alias("j"), F.col("v").alias("vj"))
+    ex = ex.select(
+        "__rid",
+        "dim",
+        F.floor(F.col("v") * F.lit(float(COV_QUANT))).cast("bigint").alias("q"),
+    )
+    a = ex.select("__rid", F.col("dim").alias("i"), F.col("q").alias("qi"))
+    b = ex.select("__rid", F.col("dim").alias("j"), F.col("q").alias("qj"))
     pairs = a.join(b, "__rid").filter(F.col("i") <= F.col("j"))
     sums = pairs.groupBy("i", "j").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("vi").alias("sx"),
-        F.sum("vj").alias("sy"),
-        F.sum(F.col("vi") * F.col("vj")).alias("sxy"),
+        F.sum("qi").cast("double").alias("sx"),
+        F.sum("qj").cast("double").alias("sy"),
+        F.sum(F.col("qi") * F.col("qj")).cast("double").alias("sxy"),
     )
+    scale = float(COV_QUANT) * float(COV_QUANT)
     return sums.select(
         F.col("i").cast("int").alias("i"),
         F.col("j").cast("int").alias("j"),
         F.round(
             (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n"))
-            / (F.col("n") - F.lit(float(ddof))),
+            / (F.col("n") - F.lit(float(ddof)))
+            / F.lit(scale),
             round_to,
         ).alias("cov"),
     )
@@ -1134,13 +1038,12 @@ def covariance_matrix_fast(
     vec_col: str = "embedding",
     ddof: int = 0,
 ) -> DataFrame:
-    """Production twin of :func:`covariance_matrix`: per-partition numpy
-    outer-product partials via ``mapInPandas`` (Arrow batches), then one
-    final d²-row agg — the scale path when d is large (shuffle volume is
-    |partitions|·d² instead of |rows|·d²/2; the per-row work is BLAS).
-    Float sums are partition-order-dependent in the last ulp, so this is
-    the pipeline mode; use ``covariance_matrix(quantize=...)`` when an
-    engine-exact replay is required. Output: ``(i, j, cov)``, i <= j,
+    """Float covariance: per-partition numpy outer-product partials via
+    ``mapInPandas`` (Arrow batches), then one final d²-row agg — shuffle
+    volume is |partitions|·d² instead of |rows|·d²/2 and the per-row
+    work is BLAS. Float sums are partition-order-dependent in the last
+    ulp, so this is the pipeline mode; use :func:`covariance_matrix`
+    when an engine-exact replay is required. Output: ``(i, j, cov)``, i <= j,
     unrounded doubles.
     """
     import pandas as pd
@@ -1507,9 +1410,10 @@ def kcenter_greedy(
 
     Scale shape (r17, guide §1.2 "remove passes"): per iteration ONE
     narrow codegen pass computes each row's distance to the single
-    newly-picked center and folds it into a running (min-dist, rank,
-    center-id) triple — the argmin is CARRIED through the loop, so the
-    final assignment needs no extra k·n·d re-computation pass (the
+    newly-picked center and folds it into a running (min-dist, rank)
+    pair — the argmin is CARRIED through the loop, and each rank's center
+    id is read off the data at the end, so the final assignment needs no
+    extra k·n·d re-computation pass (the
     pre-r17 form recomputed every row's distance to all k centers at
     the end, doubling total distance work). Each generation is lazily
     localCheckpoint'd and materialized BY the pick's own (dist, id)
@@ -1542,12 +1446,12 @@ def kcenter_greedy(
         ).alias("__qe"),
     ).localCheckpoint()
 
-    def dist_to(center_vec: list[int]) -> Column:
+    def dist_sql(center_vec: list[int]) -> str:
         # r17: SQL-string form — the Column form built d+~30 nodes over
         # py4j PER PICK (k picks per query); one parsed expression is
         # the identical tree (see kmeans_exact.assign)
         lits = ", ".join(str(int(x)) for x in center_vec)
-        return F.expr(
+        return (
             f"aggregate(zip_with(__qe, array({lits}),"
             " (x, m) -> (x - m) * (x - m)),"
             " cast(0 as bigint), (acc, x) -> acc + x)"
@@ -1571,16 +1475,14 @@ def kcenter_greedy(
             F.lit(0).cast("long").alias("radius_sq"),
         )
     seed = seed_rows[0]
-    centers = [(seed[id_col], list(seed["__qe"]))]
-    # running (min-dist, rank, center-id), persisted per pick; each
-    # iteration computes exactly one new distance column and CARRIES
-    # the argmin, so the final assignment needs no k·n·d re-scan
+    # running (min-dist, rank), persisted per pick; each iteration
+    # computes exactly one new distance column and CARRIES the argmin,
+    # so the final assignment needs no k·n·d re-scan
     cur = base.select(
         F.col(id_col),
         "__qe",
-        dist_to(centers[0][1]).alias("__d"),
+        F.expr(dist_sql(seed["__qe"])).alias("__d"),
         F.lit(0).cast("int").alias("__r"),
-        F.lit(seed[id_col]).alias("__cid"),
     ).localCheckpoint(eager=False)
     # r17 construction pass 2 (guide §4, driver side): loop-invariant
     # argmax sort keys hoisted (Columns are immutable and reusable
@@ -1599,65 +1501,40 @@ def kcenter_greedy(
             # fewer than k distinct points: every remaining point is
             # already a picked center — stop instead of duplicating
             break
-        centers.append((nxt[id_col], list(nxt["__qe"])))
         # strict < keeps the earliest-picked center on distance ties —
         # identical to the (d, r, cid) array_min struct tie-break
-        cid = _sql_lit(nxt[id_col])
-        if cid is not None:
-            lits = ", ".join(str(int(x)) for x in nxt["__qe"])
-            nd_sql = (
-                f"aggregate(zip_with(__qe, array({lits}),"
-                " (x, m) -> (x - m) * (x - m)),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
+        cur = (
+            cur.selectExpr("*", f"{dist_sql(nxt['__qe'])} as __nd")
+            .selectExpr(
+                bq(id_col),
+                "__qe",
+                "case when __nd < __d then __nd else __d end as __d",
+                f"case when __nd < __d then cast({i} as int)"
+                " else __r end as __r",
             )
-            cur = (
-                cur.selectExpr("*", f"{nd_sql} as __nd")
-                .selectExpr(
-                    bq(id_col),
-                    "__qe",
-                    "case when __nd < __d then __nd else __d end as __d",
-                    f"case when __nd < __d then cast({i} as int)"
-                    " else __r end as __r",
-                    f"case when __nd < __d then {cid}"
-                    " else __cid end as __cid",
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            upd = F.col("__nd") < F.col("__d")
-            cur = (
-                cur.withColumn("__nd", dist_to(list(nxt["__qe"])))
-                .select(
-                    F.col(id_col),
-                    "__qe",
-                    F.when(upd, F.col("__nd"))
-                    .otherwise(F.col("__d"))
-                    .alias("__d"),
-                    F.when(upd, F.lit(i).cast("int"))
-                    .otherwise(F.col("__r"))
-                    .alias("__r"),
-                    F.when(upd, F.lit(nxt[id_col]))
-                    .otherwise(F.col("__cid"))
-                    .alias("__cid"),
-                )
-                .localCheckpoint(eager=False)
-            )
+            .localCheckpoint(eager=False)
+        )
+    # rank → center id, read off the data rather than spliced in as a
+    # literal, so no id value ever enters SQL text: the row picked at
+    # rank r lands on rank r at distance 0, and any other row there at
+    # distance 0 is a quantized duplicate that tied it at the pick and
+    # lost the id tie-break — the center is the MIN id at distance 0
+    centers = cur.groupBy("__r").agg(
+        F.expr(f"min(case when __d = 0 then {bq(id_col)} end) as center_id"),
+        F.expr("count(1) as n_assigned"),
+        F.expr("max(cast(__d as bigint)) as radius_sq"),
+    )
     if assignments:
-        return cur.select(
-            F.col(id_col),
-            F.col("__r").alias("center_rank"),
-            F.col("__cid").alias("center_id"),
-            F.col("__d").cast("long").alias("dist_sq"),
+        return cur.join(
+            F.broadcast(centers.select("__r", "center_id")), "__r"
+        ).selectExpr(
+            bq(id_col),
+            "__r as center_rank",
+            "center_id",
+            "cast(__d as bigint) as dist_sq",
         )
-    return (
-        cur.groupBy(
-            F.col("__r").alias("center_rank"),
-            F.col("__cid").alias("center_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_assigned"),
-            F.max(F.col("__d").cast("long")).alias("radius_sq"),
-        )
+    return centers.selectExpr(
+        "__r as center_rank", "center_id", "n_assigned", "radius_sq"
     )
 
 
@@ -1809,11 +1686,11 @@ def mmr_rerank(
         ).alias("__qe"),
     ).localCheckpoint()
 
-    def dot_to(vec: list[int]) -> Column:
+    def dot_sql(vec: list[int]) -> str:
         # r17: SQL-string form, one parse per pick instead of d+~30
         # py4j-built nodes (see kmeans_exact.assign)
         lits = ", ".join(str(int(x)) for x in vec)
-        return F.expr(
+        return (
             f"aggregate(zip_with(__qe, array({lits}), (x, m) -> x * m),"
             " cast(0 as bigint), (acc, x) -> acc + x)"
         )
@@ -1825,7 +1702,7 @@ def mmr_rerank(
     cur = base.filter(F.col(id_col) != query_id).select(
         F.col(id_col),
         "__qe",
-        dot_to(qvec).alias("__rel"),
+        F.expr(dot_sql(qvec)).alias("__rel"),
         F.lit(0).cast("long").alias("__ms"),
     )
     if topn is not None:
@@ -1840,13 +1717,11 @@ def mmr_rerank(
     # re-built the argmax sort keys and the fold projection node-by-node
     # over py4j EVERY pick (~185 round-trips/pick measured). Columns are
     # immutable expression wrappers, so the loop-invariant sort keys are
-    # hoisted and reused across generations, and the per-pick filter +
-    # fold render as SQL strings parsed once in the JVM — identical
-    # trees, identical picks (oracle re-gated).
-    by_score = [
-        (2 * F.col("__rel") - F.col("__ms")).desc(),
-        F.col(id_col).asc(),
-    ]
+    # hoisted and reused across generations, and the per-pick fold
+    # renders as a SQL string parsed once in the JVM — identical trees,
+    # identical picks (oracle re-gated).
+    id_c = F.col(id_col)
+    by_score = [(2 * F.col("__rel") - F.col("__ms")).desc(), id_c.asc()]
     picks: list[tuple] = []
     for rank in range(k):
         # this argmax action is what materializes cur's checkpoint —
@@ -1864,35 +1739,18 @@ def mmr_rerank(
                 2 * int(p["__rel"]) - int(p["__ms"]),
             )
         )
-        pvec = list(p["__qe"])
-        pid = _sql_lit(p[id_col])
-        if pid is not None:
-            lits = ", ".join(str(int(x)) for x in pvec)
-            dot_sql = (
-                f"aggregate(zip_with(__qe, array({lits}), (x, m) -> x * m),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
+        # the picked id enters as one F.lit literal node, never as SQL
+        # text, so no id value can break the parse
+        cur = (
+            cur.where(id_c != F.lit(p[id_col]))
+            .selectExpr(
+                bq(id_col),
+                "__qe",
+                "__rel",
+                f"greatest(__ms, {dot_sql(p['__qe'])}) as __ms",
             )
-            cur = (
-                cur.where(f"not ({bq(id_col)} = {pid})")
-                .selectExpr(
-                    bq(id_col),
-                    "__qe",
-                    "__rel",
-                    f"greatest(__ms, {dot_sql}) as __ms",
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            cur = (
-                cur.filter(F.col(id_col) != p[id_col])
-                .select(
-                    F.col(id_col),
-                    "__qe",
-                    "__rel",
-                    F.greatest(F.col("__ms"), dot_to(pvec)).alias("__ms"),
-                )
-                .localCheckpoint(eager=False)
-            )
+            .localCheckpoint(eager=False)
+        )
     id_type = base.schema[id_col].dataType.simpleString()
     return df.sparkSession.createDataFrame(
         picks,

@@ -49,11 +49,11 @@ def bpe_ish_token_count(col: Column | str) -> Column:
 
 
 # r17 construction pass 2 (guide §4 applied to the driver boundary):
-# the helpers below render their expression trees as SQL strings parsed
-# once in the JVM when given a column NAME (every repo call site does).
-# The Column path built the stopword literal arrays and the lang-id
-# argmax CASE chain node-by-node over py4j — several hundred round-trips
-# per quality_features/lang_id call, re-paid on every bench rebuild of
+# the helpers below take a column NAME and render their expression trees
+# as SQL strings parsed once in the JVM. The Column form they replaced
+# built the stopword literal arrays and the lang-id argmax CASE chain
+# node-by-node over py4j — several hundred round-trips per
+# quality_features/lang_id call, re-paid on every bench rebuild of
 # every capstone. The parsed trees are identical (Column reuse in the
 # old form COPIED each referenced subtree, exactly like the string
 # form's textual repetition; double literals carry the D suffix so they
@@ -78,34 +78,28 @@ def _stopword_hits_sql(col: str, lang: str) -> str:
     )
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
+def stopword_hits(col: str, lang: str) -> Column:
     """Number of tokens (with multiplicity) found in ``lang``'s stopword
     list — ``filter``/``array_contains``, not ``array_intersect`` (which
     would dedup and undercount)."""
-    if isinstance(col, str):
-        return F.expr(_stopword_hits_sql(col, lang))
-    lst = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(lst, t))).cast(
-        "bigint"
-    )
+    return F.expr(_stopword_hits_sql(col, lang))
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
+def lang_scores(col: str) -> dict[str, Column]:
     return {lang: stopword_hits(col, lang) for lang in STOPWORDS}
 
 
-def _lang_id_sql(col: str) -> str:
-    """SQL-string twin of the :func:`lang_id` Column chain.
+def lang_id(col: str) -> Column:
+    """Deterministic language guess: argmax stopword-hit rate, ties broken
+    by language code order, 'und' (undetermined) when nothing hits.
 
     GROWTH NOTE (r17 ADVICE): each iteration embeds the running
     ``best_score`` CASE text twice (and the language's stopword-hits
     expression twice), so the rendered SQL is O(2^n) in the language
-    count — the exact tree the Column form builds by copying subtrees,
-    but as TEXT it must also be parsed. Fine at the current 4
-    languages (~10 KB); if ``STOPWORDS`` grows past ~8 entries,
-    restructure as a linear argmax (e.g. ``array_max`` over
-    ``struct(score, lang)`` with the tie order encoded) instead of
-    extending this chain."""
+    count. Fine at the current 4 languages (~10 KB); if ``STOPWORDS``
+    grows past ~8 entries, restructure as a linear argmax (e.g.
+    ``array_max`` over ``struct(score, lang)`` with the tie order
+    encoded) instead of extending this chain."""
     best_lang = "'und'"
     best_score = "cast(0 as bigint)"
     for lang in sorted(STOPWORDS):  # later langs win only on strict >
@@ -113,23 +107,7 @@ def _lang_id_sql(col: str) -> str:
         is_better = f"({s}) > ({best_score})"
         best_lang = f"case when {is_better} then '{lang}' else {best_lang} end"
         best_score = f"case when {is_better} then {s} else {best_score} end"
-    return best_lang
-
-
-def lang_id(col: Column | str) -> Column:
-    """Deterministic language guess: argmax stopword-hit rate, ties broken
-    by language code order, 'und' (undetermined) when nothing hits."""
-    if isinstance(col, str):
-        return F.expr(_lang_id_sql(col))
-    scores = lang_scores(col)
-    best_lang = F.lit("und")
-    best_score = F.lit(0).cast("bigint")
-    for lang in sorted(STOPWORDS):  # later langs win only on strict >
-        s = scores[lang]
-        is_better = s > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, s).otherwise(best_score)
-    return best_lang
+    return F.expr(best_lang)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:

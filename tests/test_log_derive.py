@@ -729,29 +729,6 @@ def test_distributed_row_number_matches_builtin_on_skewed_groups(spark):
     assert got == want
 
 
-def test_compact_log_max_by_equals_window(spark, sf_dir):
-    # the hot-key aggregate form must match the window form row-for-row
-    # (the log id is a total order per key), and its plan must contain
-    # a partial aggregate instead of a window
-    from sqlite_cdc_spark.log import events_as_changes
-    from sqlite_cdc_spark.sources import load_table
-
-    ch = events_as_changes(load_table(spark, sf_dir, "events"))
-    key = F.get_json_object(
-        F.coalesce("after", "before"), "$.user_id"
-    ).cast("long")
-    a = derive.compact_log(ch, key)
-    b = derive.compact_log(ch, key, use_max_by=True)
-    ka = sorted(tuple(r) for r in a.select(sorted(a.columns)).collect())
-    kb = sorted(tuple(r) for r in b.select(sorted(b.columns)).collect())
-    assert ka == kb
-    plan = b._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "WindowExec" not in plan
-    assert "HashAggregate" in plan or "SortAggregate" in plan or "ObjectHashAggregate" in plan
-
-
 def test_incremental_join_view_both_sides_same_key(spark):
     # the hard case of the delta rule: A and B both mutate rows sharing
     # ONE join key in the same batch — the ΔA⋈ΔB cross term must cancel

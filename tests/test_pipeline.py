@@ -9,6 +9,17 @@ from sqlite_cdc_spark.pipeline import text as textops
 from sqlite_cdc_spark.sources import load_table
 
 
+def _distributed_cc(monkeypatch, backend: str) -> None:
+    """Send ``dup_clusters`` past its union-find fast path to one
+    distributed backend: ``"star"`` gets no propagate rounds, so the
+    large-star/small-star restart fires at once; ``"propagate"`` gets
+    rounds enough for every graph in these tests."""
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_LIMIT", 0)
+    monkeypatch.setattr(
+        dedup, "CC_PROPAGATE_ROUNDS", 0 if backend == "star" else 60
+    )
+
+
 def test_exact_dedup_keeps_min_id(spark):
     df = spark.createDataFrame(
         [(3, "a"), (1, "a"), (2, "b"), (9, "a")], ["id", "t"]
@@ -387,16 +398,45 @@ def test_synth_ppm_resize_matches_closed_form(spark):
         assert (r.sum_r, r.sum_g, r.sum_b) == tuple(sums), did
 
 
-def test_cosine_topk_pandas_matches_fold(spark, sf_dir):
-    # B23: the numpy Pandas-UDF fast path returns the same neighbor sets
-    # as the expression fold (scores differ only in float summation order)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 6)
-    fold = similarity.cosine_topk(emb, q, k=5)
-    fast = similarity.cosine_topk_pandas(emb, q, k=5)
-    a = {(r.query_id, r.neighbor_id, r.rnk) for r in fold.collect()}
-    b = {(r.query_id, r.neighbor_id, r.rnk) for r in fast.collect()}
-    assert a == b
+def test_kcenter_and_mmr_picks_survive_hostile_string_ids(spark):
+    # ids carrying a quote, a backslash or a double quote must not break
+    # the per-pick SQL of either greedy loop: the picks must equal those
+    # over integer ids that sort the same way
+    ids = ["a\\b", "b", "o'brien", "q", 'x"y']
+    assert sorted(ids) == ids
+    vecs = [[0.0, 0.0], [1.0, 0.2], [5.0, 1.0], [0.3, 4.0], [6.0, 6.0]]
+    num = {s: i for i, s in enumerate(ids, 1)}
+
+    def frame(keys, typ):
+        return spark.createDataFrame(
+            list(zip(keys, vecs)), f"vec_id {typ}, embedding array<double>"
+        )
+
+    hostile, plain = frame(ids, "string"), frame(sorted(num.values()), "long")
+
+    def as_ints(rows, *id_fields):
+        return sorted(
+            tuple(num[v] if f in id_fields else v for f, v in r.asDict().items())
+            for r in rows
+        )
+
+    centers = similarity.kcenter_greedy(hostile, k=3).collect()
+    # the three hostile ids are the three picks (seed, then farthest)
+    assert {r.center_id for r in centers} == {"a\\b", 'x"y', "o'brien"}
+    assert as_ints(centers, "center_id") == sorted(
+        tuple(r) for r in similarity.kcenter_greedy(plain, k=3).collect()
+    )
+    assigned = similarity.kcenter_greedy(hostile, k=3, assignments=True)
+    assert as_ints(assigned.collect(), "vec_id", "center_id") == sorted(
+        tuple(r)
+        for r in similarity.kcenter_greedy(plain, k=3, assignments=True).collect()
+    )
+    picks = similarity.mmr_rerank(hostile, query_id="o'brien", k=4).collect()
+    assert len(picks) == 4
+    assert as_ints(picks, "vec_id") == sorted(
+        tuple(r)
+        for r in similarity.mmr_rerank(plain, query_id=num["o'brien"], k=4).collect()
+    )
 
 
 def test_embedding_near_dups_lsh_vs_exact(spark, sf_dir):
@@ -610,58 +650,58 @@ def test_dup_clusters_long_chain_converges(spark):
     assert all(r.cluster_size == 13 for r in rows)
 
 
-def test_dup_clusters_star_matches_propagate(spark):
-    # both backends produce identical canonical-min labels on a mixed
-    # fixture (chain + disjoint pairs + a bridge), regardless of pair
-    # orientation
-    from sqlite_cdc_spark.pipeline import dedup
-
+def test_dup_clusters_star_matches_propagate(spark, monkeypatch):
+    # both distributed backends produce identical canonical-min labels
+    # on a mixed fixture (chain + disjoint pairs + a bridge), regardless
+    # of pair orientation
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11), (21, 20), (3, 40), (40, 41), (7, 7)],
         "id_a long, id_b long",
     )
-    prop = sorted(
-        (r.doc_id, r.cluster_id, r.cluster_size)
-        for r in dedup.dup_clusters(pairs).collect()
-    )
-    star = sorted(
-        (r.doc_id, r.cluster_id, r.cluster_size)
-        for r in dedup.dup_clusters(pairs, algorithm="star").collect()
-    )
+
+    def clusters():
+        return sorted(
+            (r.doc_id, r.cluster_id, r.cluster_size)
+            for r in dedup.dup_clusters(pairs).collect()
+        )
+
+    _distributed_cc(monkeypatch, "propagate")
+    prop = clusters()
+    _distributed_cc(monkeypatch, "star")
+    star = clusters()
     assert prop == star
     assert (7, 7, 1) in prop  # self-pair-only vertex keeps its singleton
 
 
 def test_dup_clusters_long_chain_star_converges_propagate_raises(spark):
     # a 24-hop path has diameter 24: min-label propagation needs ~24
-    # rounds, so at max_iter=8 it must REFUSE (silently returning non-min
+    # rounds, so within 8 it must return None, not labels (non-min
     # labels would corrupt a later update_clusters merge) — while
     # large-star/small-star converges in O(log n) rounds under the same
-    # budget and yields the exact component labels
+    # budget and yields the exact component labels; it has no fallback,
+    # so its own exhaustion raises
     import pytest
 
-    from sqlite_cdc_spark.pipeline import dedup
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(24)], "id_a long, id_b long"
+    path = [(i, i + 1) for i in range(24)]
+    edges = spark.createDataFrame(
+        path + [(b, a) for a, b in path], "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_clusters(pairs, max_iter=8, algorithm="propagate")
-    rows = dedup.dup_clusters(pairs, max_iter=8, algorithm="star").collect()
+    assert dedup._cc_propagate(edges, 8) is None
+    rows = dedup._cc_star(edges, 8).collect()
     assert dedup.LAST_CC_ROUNDS <= 8
-    assert {r.cluster_id for r in rows} == {0}
-    assert all(r.cluster_size == 25 for r in rows)
+    assert {r.label for r in rows} == {0}
+    assert {r.v for r in rows} == set(range(25))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup._cc_star(edges, 1)
 
 
-def test_dup_clusters_auto_backend_handles_any_diameter(spark):
-    """VERDICT r5 item 6: algorithm='auto' (the new default) must converge
-    WITHOUT the caller choosing a backend — propagate for shallow dup
-    graphs, automatic restart on large-star/small-star when the diameter
-    exceeds the propagate round budget — and the labels must be identical
-    to both explicit backends."""
-    from sqlite_cdc_spark.pipeline import dedup
-
-    # pathological: a 40-hop path (diameter 40 >> propagate_rounds=4)
+def test_dup_clusters_auto_backend_handles_any_diameter(spark, monkeypatch):
+    """VERDICT r5 item 6: dup_clusters must converge WITHOUT the caller
+    choosing a backend — propagate for shallow dup graphs, automatic
+    restart on large-star/small-star when the diameter exceeds the
+    propagate round budget — and the labels must be identical to both
+    distributed backends."""
+    # pathological: a 40-hop path (diameter 40 >> CC_PROPAGATE_ROUNDS)
     # plus a disjoint triangle and a self-loop singleton
     chain = [(i, i + 1) for i in range(100, 140)]
     extra = [(7, 8), (8, 9), (7, 9), (55, 55)]
@@ -671,10 +711,11 @@ def test_dup_clusters_auto_backend_handles_any_diameter(spark):
         return {r.doc_id: (r.cluster_id, r.cluster_size) for r in rows}
 
     auto = labelmap(dedup.dup_clusters(pairs).collect())
-    star = labelmap(dedup.dup_clusters(pairs, algorithm="star").collect())
-    prop = labelmap(
-        dedup.dup_clusters(pairs, max_iter=60, algorithm="propagate").collect()
-    )
+    _distributed_cc(monkeypatch, "star")
+    star = labelmap(dedup.dup_clusters(pairs).collect())
+    _distributed_cc(monkeypatch, "propagate")
+    prop = labelmap(dedup.dup_clusters(pairs).collect())
+    monkeypatch.undo()
     assert auto == star == prop
     assert auto[139] == (100, 41)
     assert auto[7] == (7, 3) and auto[9] == (7, 3)
@@ -916,7 +957,7 @@ def test_covariance_matrix_matches_numpy_both_paths(spark, sf_dir):
     ref = np.cov(m, rowvar=False, ddof=0)
     exact = {
         (r.i, r.j): r.cov
-        for r in similarity.covariance_matrix(emb, quantize=10**6).collect()
+        for r in similarity.covariance_matrix(emb).collect()
     }
     fast = {
         (r.i, r.j): r.cov
@@ -1359,11 +1400,9 @@ def test_dup_clusters_distributed_auto_path_still_restarts(spark, monkeypatch):
     assert dedup.LAST_CC_ROUNDS > 1  # distributed rounds actually ran
 
 
-def test_cc_local_labels_match_distributed_backends(spark):
+def test_cc_local_labels_match_distributed_backends(spark, monkeypatch):
     # the fast path must be label-identical to both distributed backends
     # on a mixed graph (chain + triangle + self-loop + isolated pair)
-    from sqlite_cdc_spark.pipeline import dedup
-
     pairs = spark.createDataFrame(
         [(5, 3), (3, 9), (9, 5), (20, 21), (21, 22), (55, 55), (70, 71)],
         "id_a long, id_b long",
@@ -1372,11 +1411,11 @@ def test_cc_local_labels_match_distributed_backends(spark):
     def labelmap(rows):
         return {r.doc_id: (r.cluster_id, r.cluster_size) for r in rows}
 
-    local = labelmap(dedup.dup_clusters(pairs).collect())  # auto -> local
-    star = labelmap(dedup.dup_clusters(pairs, algorithm="star").collect())
-    prop = labelmap(
-        dedup.dup_clusters(pairs, algorithm="propagate").collect()
-    )
+    local = labelmap(dedup.dup_clusters(pairs).collect())
+    _distributed_cc(monkeypatch, "star")
+    star = labelmap(dedup.dup_clusters(pairs).collect())
+    _distributed_cc(monkeypatch, "propagate")
+    prop = labelmap(dedup.dup_clusters(pairs).collect())
     assert local == star == prop
     assert local[22] == (20, 3) and local[55] == (55, 1)
 

@@ -319,23 +319,22 @@ def test_filtered_agg_single_pass(spark, sf_dir):
 def test_prefix_filter_broadcast_policy_is_explicit_and_parameterised(
     spark, sf_dir, monkeypatch
 ):
-    """r18 policy (supersedes the r6 'never broadcast' pin): the
-    gram-frequency relation IS broadcast by default — an EXPLICIT,
-    deliberate decision (10×-smoke-tested, 2 fewer corpus-sized
-    exchanges), unlike the r6 failure where Catalyst's static post-agg
-    estimate broadcast it by accident. The escape hatch for
-    unbounded-vocabulary corpora must actually work: with
-    SPARK_GRAFT_PREFIX_BCAST_DF=0 the r17 shuffle form returns and NO
-    broadcast of the vocab relations appears. Accidental nested-loop/
-    cartesian shapes stay banned in both modes."""
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_BCAST_DF", "0")
-    plan = _plan(spark, sf_dir, "b19_prefix_filter")
-    assert "BroadcastHashJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_BCAST_DF", "1")
+    """The gram-frequency relation is broadcast while the input's planned
+    size is under PREFIX_BCAST_MAX_BYTES — an EXPLICIT decision from a
+    size (2 fewer corpus-sized exchanges), unlike the r6 failure where
+    Catalyst's static post-agg estimate broadcast it by accident. Above
+    the bound (here: a bound of 0) the shuffle form must return with NO
+    broadcast of the vocab relations. Accidental nested-loop/cartesian
+    shapes stay banned in both forms."""
+    from sqlite_cdc_spark.pipeline import dedup
+
     plan = _plan(spark, sf_dir, "b19_prefix_filter")
     assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    monkeypatch.setattr(dedup, "PREFIX_BCAST_MAX_BYTES", 0)
+    plan = _plan(spark, sf_dir, "b19_prefix_filter")
+    assert "BroadcastHashJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -687,14 +686,14 @@ def test_driver_materialization_policy():
         "sqlite_cdc_spark/derive.py": 1,
         # ordered drain generator: hands bounded pages to a consumer
         "sqlite_cdc_spark/log.py": 1,
-        # similarity: broadcast probe sets (bounded queries), IVF train
-        # sample (limit(sample_size)), d x d covariance + d-row means,
-        # k seed centroids + k x d centroid readback per k-means round,
-        # k-center seed + per-pick limit(1) readback (k x d components,
-        # never |rows| — the k-means centroid-literal pattern), and the
-        # r13 MMR twin: query-vector readback + per-pick limit(1)
-        # argmax (again k x d components, never |rows|)
-        "sqlite_cdc_spark/pipeline/similarity.py": 10,
+        # similarity: IVF train sample (limit(sample_size)), d x d
+        # covariance + d-row means, k seed centroids + k x d centroid
+        # readback per k-means round, k-center seed + per-pick limit(1)
+        # readback (k x d components, never |rows| — the k-means
+        # centroid-literal pattern), and the r13 MMR twin: query-vector
+        # readback + per-pick limit(1) argmax (again k x d components,
+        # never |rows|)
+        "sqlite_cdc_spark/pipeline/similarity.py": 9,
     }
     counts: dict = {}
     for rel, _line in scan_collect.scan():

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -142,11 +143,16 @@ def test_dup_clusters_is_valid_partition(spark, edges):
             u for u in verts if label[u] == label[v]
         )  # canonical min labeling
         assert size[v] == members[label[v]]
-    # the large-star/small-star backend is label-identical on ANY pair set
-    star = sorted(
-        (r.doc_id, r.cluster_id, r.cluster_size)
-        for r in dedup.dup_clusters(pairs, algorithm="star").collect()
-    )
+    # the large-star/small-star backend is label-identical on ANY pair
+    # set: no local fast path and no propagate rounds route dup_clusters
+    # straight to it
+    with mock.patch.object(dedup, "CC_LOCAL_EDGE_LIMIT", 0), mock.patch.object(
+        dedup, "CC_PROPAGATE_ROUNDS", 0
+    ):
+        star = sorted(
+            (r.doc_id, r.cluster_id, r.cluster_size)
+            for r in dedup.dup_clusters(pairs).collect()
+        )
     assert star == sorted((r.doc_id, r.cluster_id, r.cluster_size) for r in rows)
 
 

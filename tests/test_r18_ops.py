@@ -1,12 +1,10 @@
 """Round-18 focused tests: identifier quoting in the string-first paths
-(r17 ADVICE), the SQL-literal fallback, and the graph-kernel argmax
-rewrite's tie semantics."""
+(r17 ADVICE) and the graph-kernel argmax rewrite's tie semantics."""
 
 from pyspark.sql import functions as F
 
 from sqlite_cdc_spark import derive
 from sqlite_cdc_spark.pipeline import dedup, text
-from sqlite_cdc_spark.pipeline.similarity import _sql_lit
 from sqlite_cdc_spark.sqlident import bq
 
 
@@ -42,16 +40,6 @@ def test_quality_features_handles_backtick_column_name(spark):
     df = spark.createDataFrame([(1, "the quick brown fox")], ["doc_id", "t`xt"])
     out = text.quality_features(df, text_col="t`xt").collect()
     assert len(out) == 1 and out[0]["q_tokens"] == 4
-
-
-def test_sql_lit_falls_back_on_quotes_and_backslashes():
-    assert _sql_lit(7) == "7"
-    assert _sql_lit(True) is None          # bool is not an int literal
-    assert _sql_lit("doc_42") == "'doc_42'"
-    # quote/backslash strings must use the Column fallback: backslash
-    # escaping is parser-mode-dependent (escapedStringLiterals)
-    assert _sql_lit("o'brien") is None
-    assert _sql_lit("a\\b") is None
 
 
 def test_lpa_argmax_matches_window_semantics(spark):

@@ -979,9 +979,8 @@ def test_streaming_incremental_decontam_equals_batch(spark, tmp_path):
 
 def test_incremental_clusters_from_parquet_state(spark, tmp_path):
     # the REAL-SCALE incremental flow: standing labels + LSH index live
-    # as parquet between batches (not as live plans); update_clusters is
-    # told so (materialize_labels=False — no redundant checkpoint copy)
-    # and the merged result must still equal the from-scratch recompute
+    # as parquet between batches (not as live plans), and the merged
+    # result must still equal the from-scratch recompute
     from pyspark.sql import functions as F
 
     from sqlite_cdc_spark.pipeline import dedup
@@ -1010,10 +1009,7 @@ def test_incremental_clusters_from_parquet_state(spark, tmp_path):
     standing_index = spark.read.parquet(index_path)
     standing_labels = spark.read.parquet(labels_path)
     hits = dedup.query_lsh_index(standing_index, batch, "doc_id", "text", **K)
-    merged = dedup.update_clusters(
-        standing_labels, hits, "new_id", "corpus_id",
-        materialize_labels=False,
-    )
+    merged = dedup.update_clusters(standing_labels, hits, "new_id", "corpus_id")
     scratch = dedup.dup_clusters(
         dedup.minhash_candidates(
             docs.unionByName(batch), "doc_id", "text", **K
