@@ -278,15 +278,20 @@ def warm_up(spark) -> None:
 def _py4j_counter():
     """Count py4j round-trips (``ClientServerConnection.send_command``
     calls, pinned-thread mode — the PySpark default) inside the block.
+    The release commands py4j sends for garbage-collected ``JavaObject``s
+    are not counted: they follow the GC's timing, not the line's code.
     The hook is removed on exit, so only the runs inside it carry it."""
+    from py4j import protocol
     from py4j.clientserver import ClientServerConnection
 
     orig = ClientServerConnection.send_command
     calls = [0]
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
-    def counting(conn, *a, **kw):
-        calls[0] += 1
-        return orig(conn, *a, **kw)
+    def counting(conn, command, *a, **kw):
+        if not command.startswith(release):
+            calls[0] += 1
+        return orig(conn, command, *a, **kw)
 
     ClientServerConnection.send_command = counting
     try:

@@ -280,34 +280,6 @@ def teardown(
         raise
 
 
-def _publish_page(table, out_dir: str, name: str) -> None:
-    """Write ``table`` to ``out_dir/name`` atomically and durably.
-
-    The page is written under a ``.``-prefixed name (hidden from Spark's
-    file source and from ``*.parquet`` globs), fsynced, renamed into place
-    and the directory fsynced, so the caller's ack never deletes rows whose
-    page a crash could still lose or a listing could see half-written.
-    """
-    import pyarrow.parquet as pq
-
-    tmp = os.path.join(out_dir, "." + name)
-    try:
-        with open(tmp, "wb") as f:
-            pq.write_table(table, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(out_dir, name))
-    except BaseException:
-        if os.path.exists(tmp):
-            os.remove(tmp)
-        raise
-    fd = os.open(out_dir, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
 def poll_log(
     conn: sqlite3.Connection,
     out_dir: str,
@@ -320,12 +292,16 @@ def poll_log(
     Each page (``ORDER BY id ASC LIMIT batch``, parity triggers.go:167) is
     written as ONE parquet file so Spark's ``maxFilesPerTrigger=1``
     reproduces the reference's one-batch-at-a-time delivery, and published
-    atomically (:func:`_publish_page`): a listing never sees a partial page.
+    atomically and durably (:func:`~sqlite_cdc_spark.storage.publish_parquet`):
+    a listing never sees a partial page, and the ack never deletes rows
+    whose page a crash could still lose.
     After a page lands durably, ack-by-delete runs in its own transaction
     (``DELETE ... WHERE id <= max``, triggers.go:209-221) — at-least-once,
     exactly the reference's contract. Returns number of changes drained.
     """
     import pyarrow as pa
+
+    from .storage import publish_parquet
 
     ensure_wal(conn)  # library-level parity: drain must not block writers
     os.makedirs(out_dir, exist_ok=True)
@@ -360,7 +336,7 @@ def poll_log(
                 "after": pa.array([r[5] for r in rows], pa.string()),
             }
         )
-        _publish_page(table, out_dir, f"batch-{time.time_ns()}-{ids[-1]}.parquet")
+        publish_parquet(table, out_dir, f"batch-{time.time_ns()}-{ids[-1]}.parquet")
         if ack:
             conn.execute("BEGIN")
             conn.execute(f"DELETE FROM {_q(log_table)} WHERE id <= ?", (ids[-1],))

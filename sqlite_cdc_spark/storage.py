@@ -24,12 +24,20 @@ test (tests/test_storage.py):
 - :func:`compact_files` — bin small files up to a target size; the
   small-file problem is the dominant operational failure of long-lived
   streaming sinks (every file is a task + a namenode entry).
+
+Publishing files into a directory that a stream or a reader lists:
+:func:`publish_parquet` lands a driver-side Arrow table as one parquet
+file (``sqlite_bridge.poll_log``'s log pages, ``sinks.parquet_sink_handler``'s
+one-partition batches); :func:`publish_partitions` lands a DataFrame that
+stays distributed as one file per partition. Both make every file visible
+under its final name only once it is complete and durable.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -152,6 +160,69 @@ def compact_files(
         out = out.sortWithinPartitions(*sort_cols)
     out.write.mode("overwrite").parquet(dst)
     return n_out
+
+
+def _fsync_dir(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def publish_parquet(table, out_dir: str, name: str) -> None:
+    """Write the Arrow ``table`` to ``out_dir/name`` atomically and durably.
+
+    The file is written under a ``.``-prefixed name (hidden from Spark's
+    file source, from pyarrow datasets and from ``*.parquet`` globs),
+    fsynced, renamed into place and the directory fsynced. A listing never
+    sees a half-written file, and once this returns a crash cannot lose
+    it. Publishing an existing ``name`` again replaces it whole. Needs a
+    local POSIX directory, where a rename is atomic.
+    """
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(out_dir, "." + name)
+    try:
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(out_dir, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    _fsync_dir(out_dir)
+
+
+def publish_partitions(df: DataFrame, out_dir: str, stem: str) -> int:
+    """Write ``df`` through Spark as ``out_dir/<stem>-<k>.parquet``, one
+    file per non-empty partition, and return how many files that is.
+
+    Spark writes into the hidden directory ``out_dir/.<stem>`` (overwriting
+    what a failed attempt left there); each part file is then fsynced and
+    renamed into place in order, and ``out_dir`` fsynced. The files land
+    directly in ``out_dir`` rather than in a subdirectory because
+    ``spark.read.parquet(out_dir)`` reads only the files directly under an
+    unpartitioned directory. A reader may see a prefix of the parts while
+    they are renamed. Publishing the same ``stem`` again replaces parts
+    ``0 … n-1``; removing surplus parts of an earlier, larger attempt is
+    the caller's job. Needs a local POSIX directory.
+    """
+    tmp = os.path.join(out_dir, "." + stem)
+    df.write.mode("overwrite").parquet(tmp)
+    parts = sorted(
+        n for n in os.listdir(tmp) if n.endswith(".parquet") and not n.startswith(".")
+    )
+    for k, part in enumerate(parts):
+        src = os.path.join(tmp, part)
+        with open(src, "rb") as f:
+            os.fsync(f.fileno())
+        os.replace(src, os.path.join(out_dir, f"{stem}-{k}.parquet"))
+    _fsync_dir(out_dir)
+    shutil.rmtree(tmp)
+    return len(parts)
 
 
 def read_pruned(spark: SparkSession, path: str) -> DataFrame:

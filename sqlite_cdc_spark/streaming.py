@@ -173,16 +173,18 @@ class StreamEngine:
         the handler's own job, no exchange. A batch with more partitions
         (several files admitted at once, or a stateful stream such as
         ``bootstrap_and_cdc``'s dedup) keeps ``orderBy``, a parallel range
-        sort. The partition count is read from the batch's planned input,
-        which fires no job.
+        sort. The partition count is read without planning anything:
+        ``foreachBatch`` hands a Python handler a batch whose logical plan
+        is a ``LogicalRDD`` over the micro-batch's already planned RDD, and
+        that RDD's partition count is the one the planned batch would have
+        (``tests/test_streaming.py`` pins both facts).
         """
 
         def run(batch: DataFrame, batch_id: int) -> None:
             if ordered:
                 key = F.col("id").asc()
-                # the planned RDD's partitions; ``batch.rdd`` would first
-                # plan a deserializing copy, at about twice the cost
-                rdd = batch._jdf.queryExecution().toRdd()
+                # the LogicalRDD's own RDD: no analysis, no planning, no job
+                rdd = batch._jdf.logicalPlan().rdd()
                 if rdd.getNumPartitions() <= 1:
                     batch = batch.sortWithinPartitions(key)
                 else:

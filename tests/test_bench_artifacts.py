@@ -97,6 +97,38 @@ def test_py4j_counts_come_from_a_hook_removed_after_the_first_run(
     assert _send_command_is_pristine()
 
 
+def test_py4j_counter_skips_the_release_commands_of_collected_objects(
+    spark, monkeypatch
+):
+    # py4j releases a garbage-collected JavaObject with a command of its
+    # own, sent when the GC runs: the counter must see only explicit calls
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent: list = []
+    orig = ClientServerConnection.send_command
+
+    def recording(conn, command, *a, **kw):
+        sent.append(command)
+        return orig(conn, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", recording)
+    held = spark._jvm.java.util.ArrayList()
+    dropped = [held.subList(0, 0) for _ in range(40)]
+    with bench._py4j_counter() as calls:
+        del dropped
+        gc.collect()
+        for _ in range(5):
+            held.size()
+        # the finalizer thread sends the releases asynchronously
+        end = time.monotonic() + 30
+        while sum(c.startswith("m\nd\n") for c in sent) < 40:
+            assert time.monotonic() < end, "py4j sent no release commands"
+            time.sleep(0.05)
+    assert calls[0] == 5
+
+
 def test_compact_summary_line_fits_the_driver_tail_window(
     spark, monkeypatch, capsys
 ):

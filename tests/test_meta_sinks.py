@@ -84,6 +84,24 @@ def test_parquet_sink_roundtrip(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
+def test_parquet_sink_replaces_an_earlier_attempt_of_either_form(spark, tmp_path):
+    # a batch's partition count can differ between attempts (say, a restart
+    # on another core count): each attempt removes the other form's files
+    import os
+
+    out = str(tmp_path / "landed")
+    sink = sinks.parquet_sink_handler(out)
+    rows = spark.range(40).withColumnRenamed("id", "v")
+    sink(rows.repartition(3), 5)
+    assert sorted(os.listdir(out)) == [f"batch-5-{k}.parquet" for k in range(3)]
+    sink(rows.coalesce(1), 5)
+    assert os.listdir(out) == ["batch-5.parquet"]
+    sink(rows.repartition(3), 5)
+    sink(rows.repartition(2), 5)  # fewer parts than the attempt before
+    assert sorted(os.listdir(out)) == [f"batch-5-{k}.parquet" for k in range(2)]
+    assert sorted(r.v for r in spark.read.parquet(out).collect()) == list(range(40))
+
+
 def test_profile_table_stats(spark):
     from pyspark.sql import functions as F
 

@@ -143,6 +143,169 @@ def test_multi_partition_batch_keeps_total_order(spark, tmp_path):
     ]
 
 
+def test_deliver_probe_reads_the_logical_rdd_partition_count(spark, tmp_path):
+    # deliver counts a batch's partitions from its LogicalRDD without
+    # planning it; a Spark upgrade that hands foreachBatch another node, or
+    # an RDD with another partition count, must fail here
+    d = str(tmp_path / "log")
+    _write_pages(spark, d, n_pages=3, rows_per_page=50, files_per_page=1)
+    eng = streaming.StreamEngine(spark, d, str(tmp_path / "ckpt"))
+    seen: list = []
+
+    def handler(batch, batch_id):
+        plan = batch._jdf.logicalPlan()
+        seen.append((
+            plan.getClass().getName(),
+            plan.rdd().getNumPartitions(),
+            batch._jdf.queryExecution().toRdd().getNumPartitions(),
+        ))
+
+    # ordered=False hands the handler the very batch deliver's run probes
+    eng.deliver(
+        eng.read_log_stream(max_files_per_trigger=2), handler, ordered=False
+    ).awaitTermination(120)
+    # pages 0+1 arrive as two partitions, page 2 as one
+    assert seen == [
+        ("org.apache.spark.sql.execution.LogicalRDD", 2, 2),
+        ("org.apache.spark.sql.execution.LogicalRDD", 1, 1),
+    ]
+
+
+def _sink_files(out):
+    """Sink file name → (inode, mtime): a rewritten file changes both."""
+    import os
+
+    out_files = {}
+    for n in os.listdir(out):
+        st = os.stat(os.path.join(out, n))
+        out_files[n] = (st.st_ino, st.st_mtime_ns)
+    return out_files
+
+
+def _sink_ids(out):
+    import pyarrow.parquet as pq
+
+    return sorted(pq.read_table(out, columns=["id"]).column("id").to_pylist())
+
+
+def test_parquet_sink_is_exactly_once_across_kill_restart(spark, tmp_path):
+    """A crash after the sink wrote batch 1 but before its offsets
+    committed replays batch 1 on restart; the replay rewrites the same
+    file, so the sink holds every captured id once."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    d, out, ckpt = (str(tmp_path / n) for n in ("log", "out", "ckpt"))
+    _write_pages(spark, d, n_pages=3, rows_per_page=100, files_per_page=1)
+    eng = streaming.StreamEngine(spark, d, ckpt)
+    sink = sinks.parquet_sink_handler(out)
+    calls: list = []
+    at_crash: dict = {}
+
+    def handler(batch, batch_id):
+        sink(batch, batch_id)
+        calls.append(batch_id)
+        if batch_id == 1 and not at_crash:
+            at_crash.update(_sink_files(out))
+            raise RuntimeError("injected crash: sink written, offsets not committed")
+
+    q = eng.deliver(eng.read_log_stream(), handler)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    q2 = eng.deliver(eng.read_log_stream(), handler)
+    q2.awaitTermination(120)
+    assert q2.id == q.id  # one checkpoint, one query id
+    assert calls == [0, 1, 1, 2]  # batch 1 replayed
+    files = _sink_files(out)
+    assert sorted(files) == [f"batch-{q.id}-{b}.parquet" for b in range(3)]
+    # the replay replaced batch 1's file under its own name
+    assert set(at_crash) == {f"batch-{q.id}-{b}.parquet" for b in (0, 1)}
+    assert files[f"batch-{q.id}-0.parquet"] == at_crash[f"batch-{q.id}-0.parquet"]
+    assert files[f"batch-{q.id}-1.parquet"] != at_crash[f"batch-{q.id}-1.parquet"]
+    assert _sink_ids(out) == list(range(300))
+
+    # a fresh checkpoint over the same sink delivers everything again
+    # under its own query id and leaves the earlier files as they were
+    eng2 = streaming.StreamEngine(spark, d, str(tmp_path / "ckpt2"))
+    q3 = eng2.deliver(eng2.read_log_stream(), sink)
+    q3.awaitTermination(120)
+    assert q3.id != q.id
+    after = _sink_files(out)
+    assert {n: after[n] for n in files} == files
+    assert sorted(set(after) - set(files)) == [
+        f"batch-{q3.id}-{b}.parquet" for b in range(3)
+    ]
+    assert _sink_ids(out) == sorted(list(range(300)) * 2)
+
+
+def test_parquet_sink_failed_publish_leaves_no_visible_file(spark, tmp_path, monkeypatch):
+    import os
+
+    from sqlite_cdc_spark import storage
+
+    out = str(tmp_path / "out")
+    batch = spark.createDataFrame(
+        [(i, "t", dt.datetime(2024, 1, 1), "INSERT", None, "{}") for i in range(10)],
+        LOG_SCHEMA,
+    ).coalesce(1)
+    sink = sinks.parquet_sink_handler(out)
+
+    def boom(src, dst):
+        raise OSError("injected rename failure")
+
+    monkeypatch.setattr(storage.os, "replace", boom)
+    with pytest.raises(OSError, match="injected"):
+        sink(batch, 4)
+    assert os.listdir(out) == []  # no visible file, no leftover temp file
+    monkeypatch.undo()
+    sink(batch, 4)  # outside a stream the name is the batch id alone
+    assert os.listdir(out) == ["batch-4.parquet"]
+    assert _sink_ids(out) == list(range(10))
+
+
+def test_parquet_sink_multi_partition_batch_lands_once_under_replay(spark, tmp_path):
+    """A batch of more than one partition is written by Spark and lands
+    as one part file per partition; the replay rewrites the same parts.
+    Both readers read the set of one-file and multi-file batches."""
+    import pyarrow.parquet as pq
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    d, out, ckpt = (str(tmp_path / n) for n in ("log", "out", "ckpt"))
+    _write_pages(spark, d, n_pages=3, rows_per_page=100, files_per_page=1)
+    eng = streaming.StreamEngine(spark, d, ckpt)
+    sink = sinks.parquet_sink_handler(out)
+    crashed: list = []
+
+    def handler(batch, batch_id):
+        sink(batch, batch_id)
+        if batch_id == 0 and not crashed:
+            crashed.append(_sink_files(out))
+            raise RuntimeError("injected crash: sink written, offsets not committed")
+
+    def start():
+        # unordered, so the two-file batch reaches the sink as two partitions
+        return eng.deliver(
+            eng.read_log_stream(max_files_per_trigger=2), handler, ordered=False
+        )
+
+    q = start()
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    start().awaitTermination(120)
+    files = _sink_files(out)
+    assert sorted(crashed[0]) == [f"batch-{q.id}-0-{k}.parquet" for k in (0, 1)]
+    assert sorted(files) == sorted(crashed[0]) + [f"batch-{q.id}-1.parquet"]
+    assert all(files[n] != ino for n, ino in crashed[0].items())  # rewritten
+    assert _sink_ids(out) == list(range(300))
+    want = sorted(spark.read.parquet(d).collect())
+    got = spark.read.parquet(out)
+    assert got.dtypes == spark.read.parquet(d).dtypes
+    assert sorted(got.collect()) == want
+    t = pq.read_table(out).sort_by("id")
+    assert t.column_names == LOG_SCHEMA.fieldNames()
+    assert t.column("id").to_pylist() == [r.id for r in want]
+    assert t.column("timestamp").to_pylist() == [r.timestamp for r in want]
+
+
 def test_checkpoint_resume_no_redelivery(spark, sf_dir, log_dir, tmp_path):
     # A13: offsets replace ack-by-delete — a restarted query delivers nothing new
     eng = streaming.StreamEngine(spark, log_dir, str(tmp_path / "ckpt"))
