@@ -54,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
         help="cdc mode: keep polling the SQLite log (continuous daemon) "
              "instead of draining once",
     )
-    p.add_argument("--poll-interval", type=float, default=0.25)
     # corpus-pipeline mode options (see the pipeline modes below)
     p.add_argument("--threshold", type=float, default=0.7,
                    help="dedup-clusters: near-dup Jaccard threshold")
@@ -250,8 +249,7 @@ def main(argv: list[str] | None = None) -> int:
                 try:
                     sqlite_bridge.follow_log(  # check_same_thread)
                         sqlite_conn(), args.log_dir, args.log_table,
-                        args.batch_size, args.poll_interval,
-                        stop=follow_stop.is_set,
+                        args.batch_size, stop=follow_stop.is_set,
                     )
                 except BaseException as e:  # a silent dead follow loop
                     follow_err.append(e)    # looks like a healthy idle one

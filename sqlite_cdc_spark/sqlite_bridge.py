@@ -15,6 +15,10 @@ this module is the one deliberately non-distributed edge of the engine:
   engine's ``maxFilesPerTrigger`` admission mirrors the reference's batch
   bound), then ack-by-delete in its own transaction
   (``triggers.go:209-221``).
+- :func:`follow_log` — the live loop: drain, then wait for one wake
+  signal, ``PRAGMA data_version``, to move before draining again. It moves
+  only for commits of OTHER connections, so application writes must come
+  from a connection other than the one the loop owns.
 
 Downstream of the parquet hand-off everything is distributed Spark
 (:mod:`sqlite_cdc_spark.streaming`). Differences from the reference, by
@@ -34,7 +38,8 @@ DEFAULT_LOG_TABLE = "__cdc_log"  # parity: triggers.go:18-21
 DEFAULT_BATCH = 50
 MAX_COLUMNS = 1000  # parity: triggers.go:457-518 hard cap
 JSON_CHUNK = 63  # 127-arg json_object limit → 63 k/v pairs
-FOLLOW_CHECK_INTERVAL = 0.02  # follow_log's filesystem check period, seconds
+BUSY_TIMEOUT_MS = 5000  # parity: cmd/sqlite-cdc/main.go:57
+FOLLOW_CHECK_INTERVAL = 0.02  # follow_log's data_version check period, seconds
 
 
 @dataclass
@@ -91,22 +96,25 @@ def _json_object_sql(info: TableInfo, rowref: str, blob_support: bool) -> str:
     return out
 
 
-def _now_expr(conn: sqlite3.Connection, subsec: bool) -> str:
+def _now_expr(conn: sqlite3.Connection) -> str:
     """Parity: triggers.go:438-443 — subsecond timestamps need SQLite
     ≥3.42 (WithoutSubsecondTime is the reference's fallback knob); probe
     the runtime instead of trusting the caller."""
-    if subsec:
-        try:
-            if conn.execute("SELECT datetime('now','subsec')").fetchone()[0]:
-                return "datetime('now','subsec')"
-        except sqlite3.Error:
-            pass
+    try:
+        if conn.execute("SELECT datetime('now','subsec')").fetchone()[0]:
+            return "datetime('now','subsec')"
+    except sqlite3.Error:
+        pass
     return "datetime('now')"
 
 
-def ensure_wal(
-    conn: sqlite3.Connection, busy_timeout_ms: int = 5000
-) -> None:
+def _iso_ts(text: str) -> str:
+    """SQLite's UTC timestamp text ``'YYYY-MM-DD HH:MM:SS[.SSS]'`` as the
+    ISO form arrow casts to ``timestamp('us')``, always with milliseconds."""
+    return (text + ".000" if "." not in text else text).replace(" ", "T")
+
+
+def ensure_wal(conn: sqlite3.Connection) -> None:
     """Apply the reference's stated operating prerequisites at the LIBRARY
     level (r7, VERDICT r6 item 5 — previously only the CLI path did this,
     `cli.py`): WAL journal mode so the CDC reader never blocks the
@@ -121,7 +129,7 @@ def ensure_wal(
     Idempotent and cheap (two PRAGMAs). Must run OUTSIDE a transaction
     (SQLite rejects journal-mode changes mid-transaction).
     """
-    conn.execute(f"PRAGMA busy_timeout={int(busy_timeout_ms)}")
+    conn.execute(f"PRAGMA busy_timeout={BUSY_TIMEOUT_MS}")
     # inside an open transaction SQLite REFUSES the mode change but
     # reports it silently (the PRAGMA returns the old mode, no error) —
     # so check the returned mode instead of trusting the call
@@ -138,7 +146,6 @@ def setup(
     tables: list[str],
     log_table: str = DEFAULT_LOG_TABLE,
     blob_support: bool = False,
-    subsec: bool = True,
 ) -> None:
     """Create the log table + 3 capture triggers per table, in one
     transaction (parity: Setup, triggers.go:334-364). Ensures WAL +
@@ -163,7 +170,7 @@ def setup(
                 after TEXT
             )"""
         )
-        now = _now_expr(conn, subsec)
+        now = _now_expr(conn)
         for t in tables:
             _install_triggers(cur, conn, t, log_table, now, blob_support)
         conn.commit()
@@ -217,7 +224,6 @@ def resync(
     tables: list[str],
     log_table: str = DEFAULT_LOG_TABLE,
     blob_support: bool = False,
-    subsec: bool = True,
 ) -> None:
     """Re-install capture triggers from CURRENT table metadata.
 
@@ -250,7 +256,7 @@ def resync(
     cur = conn.cursor()
     cur.execute("BEGIN")
     try:
-        now = _now_expr(conn, subsec)
+        now = _now_expr(conn)
         for t in tables:
             _install_triggers(
                 cur, conn, t, log_table, now, blob_support, replace=True
@@ -285,7 +291,6 @@ def poll_log(
     out_dir: str,
     log_table: str = DEFAULT_LOG_TABLE,
     batch_size: int = DEFAULT_BATCH,
-    ack: bool = True,
 ) -> int:
     """Drain the SQLite log into parquet files under ``out_dir``.
 
@@ -297,7 +302,10 @@ def poll_log(
     whose page a crash could still lose.
     After a page lands durably, ack-by-delete runs in its own transaction
     (``DELETE ... WHERE id <= max``, triggers.go:209-221) — at-least-once,
-    exactly the reference's contract. Returns number of changes drained.
+    exactly the reference's contract. The ack is what moves the drain past
+    a page: the next query reads from the first unacked id. It is a commit
+    of ``conn`` itself, so it does not move the ``PRAGMA data_version``
+    that :func:`follow_log` waits on. Returns number of changes drained.
     """
     import pyarrow as pa
 
@@ -306,24 +314,16 @@ def poll_log(
     ensure_wal(conn)  # library-level parity: drain must not block writers
     os.makedirs(out_dir, exist_ok=True)
     total = 0
-    # Keyset cursor: without ack it is what moves us past a written page;
-    # with ack the DELETE has already removed every id <= last_id (and
-    # AUTOINCREMENT never reuses one), so the same query reads the same rows.
-    last_id = 0
     while True:
         rows = conn.execute(
             f"SELECT id, timestamp, tablename, operation, before, after "
-            f"FROM {_q(log_table)} WHERE id > ? ORDER BY id ASC LIMIT ?",
-            (last_id, batch_size),
+            f"FROM {_q(log_table)} ORDER BY id ASC LIMIT ?",
+            (batch_size,),
         ).fetchall()
         if not rows:
             break
         ids = [r[0] for r in rows]
-        # log timestamps are UTC text 'YYYY-MM-DD HH:MM:SS[.SSS]'
-        ts = [
-            (r[1] + ".000" if "." not in r[1] else r[1]).replace(" ", "T")
-            for r in rows
-        ]
+        ts = [_iso_ts(r[1]) for r in rows]
         table = pa.table(
             {
                 "id": pa.array(ids, pa.int64()),
@@ -337,11 +337,9 @@ def poll_log(
             }
         )
         publish_parquet(table, out_dir, f"batch-{time.time_ns()}-{ids[-1]}.parquet")
-        if ack:
-            conn.execute("BEGIN")
-            conn.execute(f"DELETE FROM {_q(log_table)} WHERE id <= ?", (ids[-1],))
-            conn.commit()
-        last_id = ids[-1]
+        conn.execute("BEGIN")
+        conn.execute(f"DELETE FROM {_q(log_table)} WHERE id <= ?", (ids[-1],))
+        conn.commit()
         total += len(rows)
         if len(rows) < batch_size:
             # short page: the log is drained; don't issue one more empty query
@@ -369,7 +367,6 @@ def bootstrap_scan(
     out_dir: str,
     batch_size: int = DEFAULT_BATCH,
     blob_support: bool = False,
-    timestamp: str | None = None,
 ) -> int:
     """Keyset-scan LIVE tables into synthetic-INSERT parquet pages.
 
@@ -390,8 +387,7 @@ def bootstrap_scan(
     import pyarrow.parquet as pq
 
     os.makedirs(out_dir, exist_ok=True)
-    ts = timestamp or conn.execute("SELECT datetime('now')").fetchone()[0]
-    ts = (ts + ".000" if "." not in ts else ts).replace(" ", "T")
+    ts = _iso_ts(conn.execute("SELECT datetime('now')").fetchone()[0])
     total = 0
     for t in tables:
         info = _table_info(conn, t)
@@ -446,27 +442,8 @@ def bootstrap_scan(
     return total
 
 
-def _watch_paths(conn: sqlite3.Connection) -> list[str]:
-    """The files the reference watches for wakeups: main db + WAL + SHM
-    (``/root/reference/triggers.go:122-162`` registers exactly these with
-    fsnotify). Empty for in-memory databases."""
-    for _seq, name, file in conn.execute("PRAGMA database_list"):
-        if name == "main" and file:
-            return [file, file + "-wal", file + "-shm"]
-    return []
-
-
-def _fs_state(paths: list[str]) -> tuple:
-    """(mtime_ns, size) per watched file; None for a missing file — a WAL
-    appearing/disappearing is itself a change worth a drain."""
-    state = []
-    for p in paths:
-        try:
-            s = os.stat(p)
-            state.append((s.st_mtime_ns, s.st_size))
-        except OSError:
-            state.append(None)
-    return tuple(state)
+def _data_version(conn: sqlite3.Connection) -> int:
+    return conn.execute("PRAGMA data_version").fetchone()[0]
 
 
 def follow_log(
@@ -474,38 +451,34 @@ def follow_log(
     out_dir: str,
     log_table: str = DEFAULT_LOG_TABLE,
     batch_size: int = DEFAULT_BATCH,
-    poll_interval: float = 0.25,
     stop=None,
 ) -> int:
     """Continuously drain the SQLite log into the parquet stream source.
 
-    Event-driven wakeup, fsnotify parity: the reference's loop blocks on
-    filesystem notifications for the db/WAL files and re-drains until
-    quiet (``/root/reference/triggers.go:122-162``). Portable equivalent:
-    between drains we stat the db/-wal/-shm files every
-    :data:`FOLLOW_CHECK_INTERVAL` seconds (cheap: three ``os.stat`` calls)
-    and drain IMMEDIATELY when any (mtime, size) moves, instead of sleeping
-    a fixed ``poll_interval`` — write-to-drain latency is ~the check
-    interval, not ``poll_interval``.
-    ``poll_interval`` remains the idle re-drain deadline (safety net for
-    clock-granularity misses and same-ns writes). Each tick is one
-    :func:`poll_log` drain (ack-by-delete, at-least-once); the baseline
-    snapshot is taken AFTER the drain so our own ack writes don't wake us.
+    The reference's loop wakes on filesystem notifications for the db/WAL
+    files and re-drains until quiet (reference ``triggers.go:122-162``).
+    The wake signal here is ``PRAGMA data_version`` on ``conn``: SQLite
+    moves it exactly when ANOTHER connection commits to the database, and
+    never for ``conn``'s own ack ``DELETE`` or reads. It is read before
+    each :func:`poll_log` drain (ack-by-delete, at-least-once) and then
+    every :data:`FOLLOW_CHECK_INTERVAL` seconds; once it has moved, the
+    loop drains again. A commit that lands during a drain therefore wakes
+    the next one at once, and an idle loop issues no drain at all.
+
+    ``conn`` must be the loop's own connection: writes made through it
+    (or through an in-memory database no other connection reaches) never
+    wake the loop. The CLI's ``--follow`` thread opens its own.
     ``stop`` is an optional zero-arg callable (e.g.
-    ``threading.Event().is_set``) checked on every filesystem check.
+    ``threading.Event().is_set``) checked on every check.
     Returns total changes drained.
     """
-    paths = _watch_paths(conn)
-    check = min(FOLLOW_CHECK_INTERVAL, poll_interval) if paths else poll_interval
     total = 0
     while stop is None or not stop():
+        version = _data_version(conn)
+        # module-level lookup on every drain: instrumentation may wrap it
         total += poll_log(conn, out_dir, log_table, batch_size)
-        baseline = _fs_state(paths)
-        deadline = time.monotonic() + poll_interval
-        while time.monotonic() < deadline:
+        while _data_version(conn) == version:
             if stop is not None and stop():
-                break
-            time.sleep(check)
-            if paths and _fs_state(paths) != baseline:
-                break  # filesystem moved — wake and drain now
+                return total
+            time.sleep(FOLLOW_CHECK_INTERVAL)
     return total

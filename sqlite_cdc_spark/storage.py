@@ -223,9 +223,3 @@ def publish_partitions(df: DataFrame, out_dir: str, stem: str) -> int:
     _fsync_dir(out_dir)
     shutil.rmtree(tmp)
     return len(parts)
-
-
-def read_pruned(spark: SparkSession, path: str) -> DataFrame:
-    """Plain partitioned-parquet reader; exists so call sites document
-    that pruning comes from the LAYOUT, not reader options."""
-    return spark.read.parquet(path)

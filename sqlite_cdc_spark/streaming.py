@@ -46,37 +46,20 @@ ROCKSDB_STATE_STORE = (
 )
 
 
-def configure_state_store(
-    spark: SparkSession,
-    backend: str = "rocksdb",
-    changelog_checkpointing: bool = True,
-) -> dict[str, str | None]:
-    """Select the state-store backend for subsequent streaming queries.
+def configure_state_store(spark: SparkSession) -> dict[str, str | None]:
+    """Put subsequent streaming queries on the RocksDB state store with
+    changelog checkpointing.
 
     The provider is a SESSION conf read at query START (each query pins
     the provider for its checkpoint lifetime — never flip it on an
     existing checkpoint). Returns the previous values so callers/tests
     can restore: ``{conf_key: old_value_or_None}``.
-
-    ``backend``: ``"rocksdb"`` (disk-backed, bounded heap — the at-scale
-    default) or ``"hdfs"`` (Spark's heap-backed default, fine for small
-    key cardinalities).
     """
-    confs: dict[str, str] = {}
-    if backend == "rocksdb":
-        confs["spark.sql.streaming.stateStore.providerClass"] = (
-            ROCKSDB_STATE_STORE
-        )
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        ] = "true" if changelog_checkpointing else "false"
-    elif backend == "hdfs":
-        confs["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming."
-            "state.HDFSBackedStateStoreProvider"
-        )
-    else:  # pragma: no cover - guard
-        raise ValueError(f"unknown state backend: {backend!r}")
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_STATE_STORE,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+            "true",
+    }
     prev: dict[str, str | None] = {}
     for k, v in confs.items():
         try:
@@ -98,21 +81,10 @@ class StreamEngine:
     (A13).
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        log_dir: str,
-        checkpoint_dir: str,
-        state_backend: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, log_dir: str, checkpoint_dir: str):
         self.spark = spark
         self.log_dir = log_dir
         self.checkpoint_dir = checkpoint_dir
-        if state_backend is not None:
-            # applied session-wide; each query pins the provider at start
-            # (see configure_state_store) — pass "rocksdb" for stateful
-            # pipelines whose live-key count outgrows executor heap
-            configure_state_store(spark, state_backend)
 
     # --- A17: setup / teardown ------------------------------------------
 
@@ -149,7 +121,6 @@ class StreamEngine:
         handler: Callable[[DataFrame, int], None],
         ordered: bool = True,
         available_now: bool = True,
-        query_name: str = "cdc-deliver",
     ):
         """Serialized batch delivery via ``foreachBatch``.
 
@@ -193,7 +164,7 @@ class StreamEngine:
 
         writer = (
             changes.writeStream.foreachBatch(run)
-            .queryName(query_name)
+            .queryName("cdc-deliver")
             .option("checkpointLocation", self.checkpoint_dir)
         )
         if available_now:
@@ -334,9 +305,7 @@ class StandingState:
         return self.spark.read.parquet(vdir)
 
 
-def prune_log(
-    spark: SparkSession, log_dir: str, up_to_id: int, dry_run: bool = False
-) -> list[str]:
+def prune_log(spark: SparkSession, log_dir: str, up_to_id: int) -> list[str]:
     """Retention GC for the parquet change log — the distributed analog of
     the reference's ack-by-delete (``triggers.go:209-221``: "log size ≈
     unacked backlog").
@@ -344,7 +313,7 @@ def prune_log(
     File-granular: a file is removed only when its **max** ``id`` is ≤ the
     committed watermark, so partially-consumed files survive (at-least-once
     preserved). Metadata-only decision — reads parquet footer statistics,
-    never row data. Returns the deleted (or would-delete) paths.
+    never row data. Returns the deleted paths.
 
     SMALL-LOG ONLY: the footer walk is a driver-side loop over every file —
     fine for the bounded unacked backlog it mirrors, wrong for a
@@ -370,9 +339,8 @@ def prune_log(
                     max_id = m if max_id is None else max(max_id, m)
         if max_id is not None and max_id <= up_to_id:
             doomed.append(path)
-    if not dry_run:
-        for path in doomed:
-            os.remove(path)
+    for path in doomed:
+        os.remove(path)
     return doomed
 
 

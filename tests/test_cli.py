@@ -86,7 +86,6 @@ def test_cli_cdc_follow_keeps_delivering_until_stopped(tmp_path, spark, capsys):
         "--db", db, "--tables", "widgets",
         "--log-dir", str(tmp_path / "log"),
         "--checkpoint-dir", str(tmp_path / "ckpt"),
-        "--poll-interval", "0.1",
         "--follow", "--cdc", "-",
     ]
     t = threading.Thread(target=lambda: result.append(cli.main(argv)))

@@ -830,3 +830,37 @@ def test_nearest_join_rejects_nonpositive_tolerance(spark):
                 df, df, ["id"], "id", "ts", "id", "ts",
                 tolerance_seconds=bad,
             )
+
+
+def test_snapshot_diff_handles_backtick_column_names(spark):
+    # a column name containing a backtick
+    # parsed wrong (or errored) in the string-first rename path
+    old = spark.createDataFrame(
+        [(1, "a"), (2, "b")], ["id", "we`ird"]
+    )
+    new = spark.createDataFrame(
+        [(1, "a"), (2, "c")], ["id", "we`ird"]
+    )
+    out = derive.snapshot_diff(old, new, keys=["id"]).collect()
+    ops = {r["id"]: r["operation"] for r in out}
+    assert ops == {2: "UPDATE"}
+
+
+def test_lpa_argmax_matches_window_semantics(spark):
+    # the aggregate must pick (max count, ties -> smallest label),
+    # exactly like the replaced row_number window — including the
+    # zero-count self-vote keep-old rule for no-in-edge nodes
+    edges = spark.createDataFrame(
+        [(1, 3), (2, 3), (4, 5), (9, 9)], ["src", "dst"]
+    )
+    out = {
+        r["node_id"]: r["label"]
+        for r in derive.label_propagation(edges, iters=1).collect()
+    }
+    # node 3 gets votes from labels {1, 2} (count 1 each) + self-vote 3
+    # (count 0) -> tie between 1 and 2 at count 1 -> smallest label 1
+    assert out[3] == 1
+    # node 5's only vote is 4; nodes 1,2,4 have no in-edges -> keep own
+    assert out[5] == 4 and out[1] == 1 and out[2] == 2 and out[4] == 4
+    # self-loop: node 9 votes for itself with count 1
+    assert out[9] == 9

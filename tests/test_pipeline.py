@@ -1540,3 +1540,17 @@ def test_winnow_pair_screen_caps_hot_fingerprints(spark):
     assert {
         (r.id_a, r.id_b, r.shared_fps) for r in kept.collect()
     } == {(0, 1, 2)}
+
+
+def test_shingle_rows_handles_backtick_column_names(spark):
+    df = spark.createDataFrame(
+        [(1, "one two three four")], ["doc`id", "te`xt"]
+    )
+    rows = dedup.shingle_rows(df, "doc`id", "te`xt", k=3).collect()
+    assert {r["sh"] for r in rows} == {"one two three", "two three four"}
+
+
+def test_quality_features_handles_backtick_column_name(spark):
+    df = spark.createDataFrame([(1, "the quick brown fox")], ["doc_id", "t`xt"])
+    out = textops.quality_features(df, text_col="t`xt").collect()
+    assert len(out) == 1 and out[0]["q_tokens"] == 4

@@ -268,26 +268,6 @@ def test_bootstrap_scan_rowid_fallback(db, tmp_path):
     assert len(glob.glob(f"{out}/*.parquet")) == 3
 
 
-def test_poll_log_no_ack_keyset_cursor(db, tmp_path):
-    # regression (ADVICE r1): ack=False used to re-read the same first page
-    # forever; now a keyset cursor advances and every change lands once
-    import glob
-
-    import pyarrow.parquet as pq
-
-    sqlite_bridge.setup(db, ["affinity_test"])
-    _insert_rows(db, 120)
-    out = str(tmp_path / "noack")
-    n = sqlite_bridge.poll_log(db, out, batch_size=50, ack=False)
-    assert n == 120
-    ids = []
-    for f in glob.glob(f"{out}/*.parquet"):
-        ids += pq.read_table(f).column("id").to_pylist()
-    assert sorted(ids) == list(range(1, 121))  # no duplicates, no gaps
-    # log NOT acked: rows still present for a real consumer
-    assert db.execute("SELECT count(*) FROM __cdc_log").fetchone()[0] == 120
-
-
 def test_poll_log_publishes_page_atomically(db, tmp_path, monkeypatch):
     # the page is written under a hidden temp name and renamed into place:
     # a listing of the watched directory never sees it half-written
@@ -357,10 +337,7 @@ def test_follow_log_delivers_post_start_writes(db, tmp_path):
     def run():
         conn = sqlite3.connect(path)  # own conn: sqlite3 check_same_thread
         try:
-            sqlite_bridge.follow_log(
-                conn, out, batch_size=50, poll_interval=0.05,
-                stop=done.is_set,
-            )
+            sqlite_bridge.follow_log(conn, out, batch_size=50, stop=done.is_set)
         finally:
             conn.close()
 
@@ -404,9 +381,9 @@ def test_trigger_name_literal_escaping(tmp_path):
 
 def test_follow_log_wakes_on_write_before_poll_interval(db, tmp_path):
     # fsnotify parity (triggers.go:122-162): a write landing while the loop
-    # is idle must trigger a drain at stat-check latency (~20ms), NOT after
-    # the full poll_interval deadline — poll_interval here is 30s, so the
-    # test only passes via the filesystem wakeup
+    # is idle must trigger a drain at check latency (~20ms); the loop has
+    # no re-drain deadline, so the test only passes via the data_version
+    # wakeup
     import glob
     import threading
 
@@ -420,10 +397,7 @@ def test_follow_log_wakes_on_write_before_poll_interval(db, tmp_path):
     def run():
         conn = sqlite3.connect(path)  # own conn: sqlite3 check_same_thread
         try:
-            sqlite_bridge.follow_log(
-                conn, out, batch_size=50, poll_interval=30.0,
-                stop=done.is_set,
-            )
+            sqlite_bridge.follow_log(conn, out, batch_size=50, stop=done.is_set)
         finally:
             conn.close()
 
@@ -435,7 +409,7 @@ def test_follow_log_wakes_on_write_before_poll_interval(db, tmp_path):
     t0 = _time.time()
     _insert_rows(db, 7, offset=9000)
     total = 0
-    while _time.time() - t0 < 5:  # ≪ the 30s poll interval
+    while _time.time() - t0 < 5:
         total = sum(
             pq.read_table(f).num_rows for f in glob.glob(f"{out}/*.parquet")
         )
@@ -447,6 +421,71 @@ def test_follow_log_wakes_on_write_before_poll_interval(db, tmp_path):
     t.join(timeout=5)
     assert total == 7, "write was not drained"
     assert elapsed < 5, f"drain took {elapsed:.1f}s — wakeup did not fire"
+
+
+def test_follow_log_drains_commit_made_during_a_drain_then_idles(
+    db, tmp_path, monkeypatch
+):
+    # the race window: another connection commits while the loop's first
+    # drain is still running (after its SELECT found nothing). The wake
+    # signal read before that drain has moved, so the row must be drained
+    # at once; afterwards nothing commits, so the loop must not drain
+    # again — its own ack DELETE does not wake it
+    import threading
+    import time as _time
+
+    sqlite_bridge.setup(db, ["affinity_test"])
+    out = str(tmp_path / "race")
+    path = db.execute("PRAGMA database_list").fetchone()[2]
+    real_poll = sqlite_bridge.poll_log
+    calls: list[tuple[float, int]] = []  # (end time, rows drained)
+    committed_at: list[float] = []
+    drained = threading.Event()
+
+    def poll_log(conn, *args, **kwargs):
+        n = real_poll(conn, *args, **kwargs)
+        if not calls:
+            writer = sqlite3.connect(path)
+            try:
+                _insert_rows(writer, 1, offset=7000)
+            finally:
+                writer.close()
+            committed_at.append(_time.monotonic())
+        calls.append((_time.monotonic(), n))
+        if sum(c[1] for c in calls) >= 1:
+            drained.set()
+        return n
+
+    monkeypatch.setattr(sqlite_bridge, "poll_log", poll_log)
+    done = threading.Event()
+    errors: list[BaseException] = []
+
+    def run():
+        conn = sqlite3.connect(path)  # own conn: sqlite3 check_same_thread
+        try:
+            sqlite_bridge.follow_log(conn, out, batch_size=50, stop=done.is_set)
+        except BaseException as e:  # pragma: no cover - failure diagnostics
+            errors.append(e)
+        finally:
+            conn.close()
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    try:
+        assert drained.wait(10), f"the row was never drained: {calls}"
+        # (a) the commit made inside the first drain is drained promptly
+        lag = calls[-1][0] - committed_at[0]
+        assert lag < 2, f"drained {lag:.2f}s after the commit"
+        # (b) an idle loop makes no further drain
+        n_calls = len(calls)
+        _time.sleep(0.5)
+        assert len(calls) == n_calls, f"idle loop drained again: {calls}"
+    finally:
+        done.set()
+        t.join(timeout=5)
+    assert not errors, errors
+    assert [n for _, n in calls] == [0, 1]
+    assert db.execute("SELECT count(*) FROM __cdc_log").fetchone()[0] == 0
 
 
 def test_library_setup_ensures_wal_and_busy_timeout(tmp_path):

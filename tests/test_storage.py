@@ -32,11 +32,11 @@ def test_partitioned_write_prunes_at_planning_time(spark, sf_dir, tmp_path):
     # data filters list does NOT contain lang (pruned, not filtered)
     one = sorted(langs)[0]
     plan = _explain(
-        storage.read_pruned(spark, out).filter(F.col("lang") == one)
+        spark.read.parquet(out).filter(F.col("lang") == one)
     )
     assert "PartitionFilters" in plan
     assert f"lang = {one}" in plan or "lang#" in plan
-    got = storage.read_pruned(spark, out).filter(F.col("lang") == one).count()
+    got = spark.read.parquet(out).filter(F.col("lang") == one).count()
     want = docs.filter(F.col("lang") == one).count()
     assert got == want
 

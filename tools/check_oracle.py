@@ -51,12 +51,11 @@ def _canon_value(v) -> str:
     return str(v)
 
 
-def canon_rows(columns, rows):
+def canon_rows(columns, rows) -> list[str]:
+    """One canonical line per row of the iterable ``rows``, values in
+    column-name order, sorted."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for r in rows:
-        vals = list(r)
-        out.append("\x01".join(_canon_value(vals[i]) for i in order))
+    out = ["\x01".join(_canon_value(r[i]) for i in order) for r in rows]
     out.sort()
     return out
 
@@ -67,6 +66,12 @@ def value_hash(columns, rows) -> str:
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()
+
+
+def _fetch_rows(res, size: int = 65536):
+    """The rows of a DuckDB result, fetched ``size`` at a time."""
+    while rows := res.fetchmany(size):
+        yield from rows
 
 
 def _git_sha() -> str:
@@ -188,43 +193,44 @@ def main() -> int:
     def check_one(name, fn):
         """Returns (name, lines_to_print, failed). Spark actions are
         thread-safe (scheduler-level concurrency); each worker cursors
-        its own DuckDB connection off the shared in-memory catalog."""
+        its own DuckDB connection off the shared in-memory catalog.
+
+        Each side is held in Python only as its sorted canonical lines,
+        canonicalised as its rows arrive: a partition at a time from
+        Spark, then a fetch at a time from DuckDB. Equal lines are equal
+        value hashes."""
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            sc = canon_rows(scols, sdf.toLocalIterator(prefetchPartitions=True))
         except Exception as e:  # noqa: BLE001
             return name, [f"FAIL {name}: spark error: {e}"], True, "fail", 0, time.time() - t0
         if name not in oracles:
             return name, [
-                f"OK?  {name}: rows-only ({len(srows)} rows, no oracle) "
+                f"OK?  {name}: rows-only ({len(sc)} rows, no oracle) "
                 f"[{time.time()-t0:.1f}s]"
-            ], False, "rows_only", len(srows), time.time() - t0
+            ], False, "rows_only", len(sc), time.time() - t0
         try:
-            cur = con.cursor()
-            res = cur.execute(oracles[name])
+            res = con.cursor().execute(oracles[name])
             dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            dc = canon_rows(dcols, _fetch_rows(res))
         except Exception as e:  # noqa: BLE001
-            return name, [f"FAIL {name}: duckdb error: {e}"], True, "fail", len(srows), time.time() - t0
+            return name, [f"FAIL {name}: duckdb error: {e}"], True, "fail", len(sc), time.time() - t0
         problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
+        if len(sc) != len(dc):
+            problems.append(f"rowcount spark={len(sc)} duckdb={len(dc)}")
         if sorted(scols) != sorted(dcols):
             problems.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
-        if not problems:
-            sh, dh = value_hash(scols, srows), value_hash(dcols, drows)
-            if sh != dh:
-                problems.append("value-hash mismatch")
-                sc, dc = canon_rows(scols, srows), canon_rows(dcols, drows)
-                for i, (a, b) in enumerate(zip(sc, dc)):
-                    if a != b:
-                        problems.append(f"  first diff row {i}:\n   spark : {a!r}\n   duckdb: {b!r}")
-                        break
+        if not problems and sc != dc:
+            problems.append("value-hash mismatch")
+            for i, (a, b) in enumerate(zip(sc, dc)):
+                if a != b:
+                    problems.append(f"  first diff row {i}:\n   spark : {a!r}\n   duckdb: {b!r}")
+                    break
         if problems:
-            return name, [f"FAIL {name}: " + "; ".join(problems[:1])] + problems[1:], True, "fail", len(srows), time.time() - t0
-        return name, [f"PASS {name} ({len(srows)} rows) [{time.time()-t0:.1f}s]"], False, "pass", len(srows), time.time() - t0
+            return name, [f"FAIL {name}: " + "; ".join(problems[:1])] + problems[1:], True, "fail", len(sc), time.time() - t0
+        return name, [f"PASS {name} ({len(sc)} rows) [{time.time()-t0:.1f}s]"], False, "pass", len(sc), time.time() - t0
 
     todo = [(n, f) for n, f in queries.items() if not only or n in only]
     jobs = int(os.environ.get("SPARK_GRAFT_ORACLE_JOBS", "1"))
