@@ -1067,7 +1067,7 @@ def q_b5_partition_pruning(spark, sf_dir):
     `none` (no partition predicate) scans all 7 partitions. The real
     directory layout is pinned by test (partitionBy write →
     PartitionFilters in plan + inputFiles() confined to surviving
-    dirs, tests/test_r16_ops.py). Per-leg cost: one pruned scan +
+    dirs, tests/test_registry.py). Per-leg cost: one pruned scan +
     count; 5 bounded rows out."""
     o = _t(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("y"), "o_totalprice"

@@ -128,8 +128,9 @@ def q_b29_semantic_decontam_ann(spark, sf_dir):
     VERDICT r7 item 6): same benchmark/corpus split as
     b29_semantic_decontam, but candidates come from the portable
     integer-LSH bucket equi-join (12 tables × 4 planes — the measured
-    recall-1.0 config on the fixture — with benchmark-side multiprobe) and the exact cosine scorer runs on candidate pairs
-    only — never a corpus×benchmark product (similarity.py:
+    recall-1.0 config on the fixture — the benchmark side probes the
+    one-bit flips of its buckets) and the exact cosine scorer runs on
+    candidate pairs only — never a corpus×benchmark product (similarity.py:
     semantic_contamination_bucketed). Every step is integer-exact or
     rounded-fold arithmetic, so the oracle replays candidates AND
     scores bit-for-bit; no-collision vectors surface as clean

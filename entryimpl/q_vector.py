@@ -69,7 +69,7 @@ def q_b20_ann_recall(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 4)
     cand = similarity.ann_lsh_portable(
-        emb, queries_df, dim=64, n_planes=8, quant=1000, multiprobe=True
+        emb, queries_df, dim=64, n_planes=8, quant=1000
     )
     topk = similarity.cosine_topk(emb, queries_df, k=5).select(
         "query_id", "neighbor_id"
@@ -319,7 +319,7 @@ def q_b20_recall_curve(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 4)
     cand = similarity.ann_lsh_portable(
-        emb, queries_df, dim=64, n_planes=8, quant=1000, multiprobe=True
+        emb, queries_df, dim=64, n_planes=8, quant=1000
     )
     topk = similarity.cosine_topk(emb, queries_df, k=10).select(
         "query_id", "neighbor_id", "rnk"
@@ -480,9 +480,9 @@ def q_b20_triplet_mining_ann(spark, sf_dir):
     production, so NOT broadcast) route through the standing portable
     integer-LSH buckets alongside the corpus; candidates are the
     (table, bucket) equi-join (12 tables × 4 planes, anchor-side
-    multiprobe — the measured recall-1.0 config on this fixture), and
-    the exact cosine rescore + per-anchor positive/negative top-1 run
-    over candidates only (similarity.py: triplet_mining_ann). Bucket
+    one-bit-flip probes — the measured recall-1.0 config on this
+    fixture), and the exact cosine rescore + per-anchor positive/negative
+    top-1 run over candidates only (similarity.py: triplet_mining_ann). Bucket
     decisions are integer-exact, so the oracle replays candidates AND
     scores bit-for-bit; scores/margins are round-6 of identical
     doubles."""
@@ -498,7 +498,7 @@ def q_b20_hubness_ann(spark, sf_dir):
     scaled companion the r9 verdict asked for beside triplet mining):
     every 8th vector probes (unbounded in production — never
     broadcast); probes route through the portable integer-LSH buckets
-    (12 tables × 4 planes, probe-side multiprobe), per-probe top-10
+    (12 tables × 4 planes, probe-side one-bit flips), per-probe top-10
     comes from the exact cosine rescore of bucket equi-join candidates
     only, and the k-occurrence histogram includes the zero-occurrence
     mass (similarity.py: hubness_ann). Bucket decisions are

@@ -145,34 +145,6 @@ def write_clustered(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    num_buckets: int = 32,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a snapshot hash-bucketed by ``keys`` (catalog table).
-
-    Bucketing is the *pre-shuffled* storage layout: two tables bucketed on
-    the same keys with the same bucket count join (or aggregate) with ZERO
-    exchanges — the shuffle was paid once at write time, then amortized
-    over every subsequent join. This is the Spark-native answer for the
-    repeated change-log ⋈ snapshot merges a CDC replica performs each
-    batch (the reference re-pays per-row index lookups instead,
-    triggers.go:539-568).
-    """
-    w = (
-        df.write.bucketBy(num_buckets, keys[0], *keys[1:])
-        .sortBy(keys[0], *keys[1:])
-        .mode(mode)
-    )
-    if path:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)
-
-
 def iterate_pages(
     df: DataFrame, keys: Sequence[str], batch_size: int
 ) -> Iterator[list]:

@@ -670,7 +670,7 @@ def incremental_agg(
 
     Scale: the batch side collapses to one row per TOUCHED group before
     the merge join, so the full-outer join's streamed side is tiny; with
-    the state bucketed on ``group_cols`` (bootstrap.write_bucketed) the
+    the state bucketed on ``group_cols`` (storage.write_bucketed) the
     state side needs no shuffle at all. This is the foreachBatch body of
     a streaming MV (B17): idempotent per micro-batch when keyed by a
     drained, compacted log batch.
@@ -1167,7 +1167,7 @@ def incremental_join_view(
     Cost ∝ |batch| ⋈ the standing snapshots — three keyed joins on
     ``on`` plus one keyed merge agg; the base join is never
     recomputed. At scale ``a_old``/``b_old`` are the bucketed base
-    tables (bootstrap.write_bucketed ⇒ zero-exchange delta joins) and
+    tables (storage.write_bucketed ⇒ zero-exchange delta joins) and
     ``view`` the materialized result. Invariant (tested):
     ``incremental_join_view(A_old ⋈ B_old, …) ≡ A_new ⋈ B_new``.
 

@@ -596,12 +596,9 @@ def embedding_near_dups(
     v = sim.as_double(vec_col)
     if exact:
         # norms once per row; per-pair cost = one dot product
-        a = df.select(
-            F.col(id_col).alias("id_a"), v.alias("va"), sim.l2_norm(v).alias("na")
-        )
-        b = df.select(
-            F.col(id_col).alias("id_b"), v.alias("vb"), sim.l2_norm(v).alias("nb")
-        )
+        idc = F.col(bq(id_col))
+        a = df.select(idc.alias("id_a"), v.alias("va"), sim.l2_norm(v).alias("na"))
+        b = df.select(idc.alias("id_b"), v.alias("vb"), sim.l2_norm(v).alias("nb"))
         pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         score = sim.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
         return pairs.select("id_a", "id_b", score.alias("score")).filter(

@@ -2,13 +2,16 @@
 
 Brute-force cosine top-k is the exact baseline: broadcast the (small) query
 set against the corpus — the corpus never shuffles for scoring, only the
-per-query top-k reduction moves data. The scale path is LSH bucketing
-(random-hyperplane signs): corpus and queries hash to buckets, candidates
-come from an equi-join, and only bucket-mates are scored — the IVF-style
-recall/cost dial is the number of probe permutations.
+per-query top-k reduction moves data. The scale path is candidate-then-
+refine: corpus and probes hash to LSH buckets (random-hyperplane signs),
+candidates come from an equi-join on (table, bucket), every probe also
+visits the buckets one bit-flip away, and only candidates are scored
+exactly. Recall rises with the number of tables.
 
 Dot products use ``zip_with`` + ``aggregate`` (JVM codegen) in double
-precision; no Python in the scoring loop.
+precision; no Python in the scoring loop. Every caller-supplied column
+name goes through :func:`~sqlite_cdc_spark.sqlident.bq`, so a name with a
+dot or a backtick resolves as one column, never as a struct field.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from ..sqlident import bq
 
 
 def as_double(vec: Column | str) -> Column:
-    c = F.col(vec) if isinstance(vec, str) else vec
+    c = F.col(bq(vec)) if isinstance(vec, str) else vec
     return F.transform(c, lambda x: x.cast("double"))
 
 
@@ -41,6 +44,68 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """:func:`dot` as SQL text: the same transform/zip_with/aggregate
+    tree (``0.0D`` parses as DOUBLE like ``F.lit(0.0)``), parsed once in
+    the JVM instead of built node by node over py4j."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D,"
+        " (acc, x) -> acc + x)"
+    )
+
+
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, v: str, n: str,
+    *extra: str,
+) -> DataFrame:
+    """``(out_id, *extra, v, n)``: the id, the vector as doubles and its
+    L2 norm — the norm computed once per ROW, never per pair, so the
+    per-pair work of every scorer is exactly one dot product."""
+    vd = f"transform({bq(vec_col)}, x -> cast(x as double))"
+    return df.selectExpr(
+        f"{bq(id_col)} as {out_id}", *extra, f"{vd} as {v}",
+        f"sqrt({_dot_sql(vd, vd)}) as {n}",
+    )
+
+
+def _cosine_or_zero(a: str, b: str, na: str, nb: str) -> Column:
+    """Exact cosine of vectors ``a``, ``b`` with precomputed norms.
+    Zero-norm convention: a degenerate (all-zero) vector on either side
+    scores 0.0 — never NULL — so a flag or rank over the score never
+    sees a NULL and degenerate rows surface as dissimilar."""
+    n = f"{na} * {nb}"
+    return F.expr(
+        f"case when {n} > 0 then {_dot_sql(a, b)} / ({n}) else 0.0D end"
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    by: str = "query_id",
+    tie: str = "neighbor_id",
+    score: str = "score",
+) -> DataFrame:
+    """The ``k`` best rows per ``by``: ``score`` descending, ties to the
+    lowest ``tie`` for full determinism, the rank kept as bigint
+    ``rnk``."""
+    w = Window.partitionBy(by).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return scored.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of ``(query_id, qv, qn) × (neighbor_id, cv, cn)``
+    pairs (see :func:`_vectors`), then the per-query top ``k``."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.expr(f"{_dot_sql('qv', 'cv')} / (qn * cn)").alias("score"),
+    )
+    return _top_k(scored, k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -58,29 +123,10 @@ def cosine_topk(
     Corpus norms are computed inline; for a served index they'd be
     precomputed once (see :func:`with_norm`).
     """
-    # norms precomputed per ROW (once), never per pair — the per-pair work
-    # is exactly one dot product
-    qv = as_double(vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), qv.alias("qv"), l2_norm(qv).alias("qn")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), qv.alias("cv"), l2_norm(qv).alias("cn")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    return _score_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -110,39 +156,17 @@ def semantic_contamination(
 
     Output: ``(vec_id, nearest_bench, max_cos, contaminated)``.
     """
-    v = as_double(vec_col)
-    b = benchmark.select(
-        F.col(id_col).alias("bench_id"), v.alias("bv"), l2_norm(v).alias("bn")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), v.alias("cv"), l2_norm(v).alias("cn")
-    )
-    # zero-norm convention: a degenerate (all-zero) vector on either
-    # side scores 0.0 — never NULL — so `contaminated` is always a
-    # non-null boolean and degenerate rows surface as clean, not as
-    # silently-dropped or NULL-flagged rows
+    b = _vectors(benchmark, id_col, vec_col, "bench_id", "bv", "bn")
+    c = _vectors(corpus, id_col, vec_col, "vec_id", "cv", "cn")
     scored = c.join(F.broadcast(b)).select(
+        "vec_id", "bench_id", _cosine_or_zero("cv", "bv", "cn", "bn").alias("score")
+    )
+    max_cos = F.round("score", 6)
+    return _top_k(scored, 1, by="vec_id", tie="bench_id").select(
         "vec_id",
-        "bench_id",
-        F.when(
-            F.col("cn") * F.col("bn") > 0,
-            dot(F.col("cv"), F.col("bv")) / (F.col("cn") * F.col("bn")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("__s"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("__s").desc(), F.col("bench_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "vec_id",
-            F.col("bench_id").alias("nearest_bench"),
-            F.round("__s", 6).alias("max_cos"),
-            (F.round("__s", 6) >= F.lit(threshold)).alias("contaminated"),
-        )
+        F.col("bench_id").alias("nearest_bench"),
+        max_cos.alias("max_cos"),
+        (max_cos >= F.lit(threshold)).alias("contaminated"),
     )
 
 
@@ -196,9 +220,8 @@ def ann_topk_ivf(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    samp = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
-    )
+    idc, vc = F.col(bq(id_col)), F.col(bq(vec_col))
+    samp = corpus.select(idc, vc).orderBy(idc).limit(sample_size).collect()
     sm = np.array([np.asarray(r[1], dtype=np.float64) for r in samp])
     sm = sm / np.linalg.norm(sm, axis=1, keepdims=True)
     n_centroids = min(n_centroids, len(sm))
@@ -228,15 +251,15 @@ def ann_topk_ivf(
 
     v = as_double(vec_col)
     cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+        idc.alias("neighbor_id"),
         v.alias("neighbor_v"),
         # corpus rows live in exactly ONE cell (their nearest): element 1
-        F.element_at(cells_udf(F.col(vec_col)), 1).alias("cell"),
+        F.element_at(cells_udf(vc), 1).alias("cell"),
     )
     qb = queries.select(
-        F.col(id_col).alias("query_id"),
+        idc.alias("query_id"),
         v.alias("query_v"),
-        F.explode(cells_udf(F.col(vec_col))).alias("cell"),
+        F.explode(cells_udf(vc)).alias("cell"),
     )
     cand = (
         qb.join(cb, "cell")
@@ -246,18 +269,9 @@ def ann_topk_ivf(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (
-            dot(F.col("query_v"), F.col("neighbor_v"))
-            / (l2_norm(F.col("query_v")) * l2_norm(F.col("neighbor_v")))
-        ).alias("score"),
+        cosine(F.col("query_v"), F.col("neighbor_v")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k)
 
 
 #: LCG constants for portable Rademacher hyperplanes (see plane_sign)
@@ -292,6 +306,27 @@ def _plane_table(spark, dim: int, n_planes: int, n_tables: int) -> DataFrame:
     )
 
 
+def _quantized_components(
+    df: DataFrame, id_col: str, vec_col: str, quant: int
+) -> DataFrame:
+    """``(id, d, q)``: one row per vector component, ``q = floor(v·quant)``
+    as int64 — the integer form every engine-portable index
+    (LSH buckets, IVF cells, PQ codes) takes its exact dots over."""
+    return df.selectExpr(
+        f"{bq(id_col)} as id",
+        f"posexplode(transform({bq(vec_col)}, x -> cast(x as double)))"
+        " as (d, v)",
+    ).selectExpr("id", "d", f"cast(floor(v * {quant}) as bigint) as q")
+
+
+def _quantize(vec_col: str, quant: int) -> Column:
+    """The vector as an array of ``floor(v·quant)`` int64 components."""
+    return F.transform(
+        as_double(vec_col),
+        lambda x: F.floor(x * F.lit(float(quant))).cast("long"),
+    )
+
+
 def portable_lsh_buckets(
     df: DataFrame,
     planes: DataFrame,
@@ -300,21 +335,14 @@ def portable_lsh_buckets(
     quant: int = 1000,
 ) -> DataFrame:
     """Engine-portable hyperplane bucket assignment ``(id, t, bucket)``
-    — the integer-exact LSH core shared by :func:`ann_lsh_portable` and
-    :func:`semantic_contamination_bucketed`: components floor-quantized
-    to int64, sign bits from exact integer dots against the broadcast
-    plane relation, bucket = the n_planes-bit code per table."""
-    # r17 construction pass 2 (guide §4, driver side): SQL-string form —
-    # identical parsed trees (posexplode/ transform/ floor/ shiftleft
-    # map 1:1; the column shift amount always needed the SQL form), so
-    # buckets replay bit-for-bit (oracle re-gated on every consumer)
-    comp = df.selectExpr(
-        f"{bq(id_col)} as id",
-        f"posexplode(transform({bq(vec_col)}, x -> cast(x as double)))"
-        " as (d, v)",
-    ).selectExpr("id", "d", f"cast(floor(v * {quant}) as bigint) as q")
+    — the integer-exact LSH core of every portable-LSH path
+    (:func:`_lsh_candidates`): components floor-quantized to int64
+    (:func:`_quantized_components`), sign bits from exact integer dots
+    against the broadcast plane relation, bucket = the n_planes-bit code
+    per table."""
     dots = (
-        comp.join(F.broadcast(planes), "d")
+        _quantized_components(df, id_col, vec_col, quant)
+        .join(F.broadcast(planes), "d")
         .groupBy("id", "t", "p")
         .agg(F.expr("sum(s * q) as dp"))
     )
@@ -324,6 +352,44 @@ def portable_lsh_buckets(
             " else cast(0 as bigint) end) as bucket"
         )
     )
+
+
+def _probe_array(bucket: str, n_planes: int) -> str:
+    """SQL array of ``bucket`` and its ``n_planes`` one-bit flips — the
+    buckets a probe visits. Only the probe side ever explodes it, so the
+    corpus is hashed once and never multiplied."""
+    flips = ", ".join(f"{bucket} ^ cast({1 << i} as bigint)" for i in range(n_planes))
+    return f"array({bucket}, {flips})"
+
+
+def _lsh_candidates(
+    corpus: DataFrame,
+    probes: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    quant: int,
+    n_tables: int,
+) -> DataFrame:
+    """Distinct portable-LSH candidate pairs ``(query_id, neighbor_id)``:
+    probe rows whose buckets (each one-bit flip included) meet a corpus
+    row's bucket in the same table. Both sides hash through
+    :func:`portable_lsh_buckets` against one plane relation; ``n_tables``
+    independent tables (table *t* uses plane rows ``t·n_planes …
+    (t+1)·n_planes−1`` of the same LCG family) union their matches.
+    Self-pairs stay in; a caller whose probes come from the corpus
+    drops them."""
+    planes = _plane_table(
+        corpus.sparkSession, dim=dim, n_planes=n_planes, n_tables=n_tables
+    )
+    cb = portable_lsh_buckets(corpus, planes, id_col, vec_col, quant).selectExpr(
+        "id as neighbor_id", "t", "bucket"
+    )
+    pb = portable_lsh_buckets(probes, planes, id_col, vec_col, quant).selectExpr(
+        "id as query_id", "t", f"explode({_probe_array('bucket', n_planes)}) as bucket"
+    )
+    return pb.join(cb, ["t", "bucket"]).select("query_id", "neighbor_id").distinct()
 
 
 def semantic_contamination_bucketed(
@@ -336,17 +402,15 @@ def semantic_contamination_bucketed(
     n_planes: int = 8,
     quant: int = 1000,
     n_tables: int = 4,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """:func:`semantic_contamination` at corpus scale — the ANN-bucketed
     variant its docstring prescribes for large×large (VERDICT r7 item
     6): both sides route through the portable integer LSH
-    (:func:`portable_lsh_buckets`), candidate pairs come from an
-    EQUI-JOIN on ``(table, bucket)`` — never a corpus×benchmark product
-    — and the exact cosine scorer runs on candidates only. The
-    benchmark side carries the multiprobe explode (it is the small
-    side: eval sets are thousands of rows) and ``n_tables``
-    independent tables are the recall dial.
+    (:func:`_lsh_candidates`), candidate pairs come from an EQUI-JOIN on
+    ``(table, bucket)`` — never a corpus×benchmark product — and the
+    exact cosine scorer runs on candidates only. The benchmark side is
+    the probe side (it is the small side: eval sets are thousands of
+    rows) and ``n_tables`` independent tables are the recall dial.
 
     Same output contract as the broadcast variant: one row per corpus
     vector. A vector with NO bucket collision reports ``max_cos 0.0,
@@ -359,69 +423,32 @@ def semantic_contamination_bucketed(
 
     Output: ``(vec_id, nearest_bench, max_cos, contaminated)``.
     """
-    planes = _plane_table(
-        corpus.sparkSession, dim=dim, n_planes=n_planes, n_tables=n_tables
+    # the benchmark probes: query_id is the benchmark id, neighbor_id the
+    # corpus id, and the best match is kept per corpus vector
+    cand = _lsh_candidates(
+        corpus, benchmark, id_col, vec_col, dim, n_planes, quant, n_tables
     )
-    cb = portable_lsh_buckets(
-        corpus, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__cid"), "t", "bucket")
-    bb = portable_lsh_buckets(
-        benchmark, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__bid"), "t", "bucket")
-    # r17 construction pass 2: SQL-string forms (identical trees — the
-    # XOR probe array, the transform/zip_with/aggregate dot and norm,
-    # and the CASE guard map 1:1; 0.0D parses as DOUBLE like F.lit(0.0))
-    if multiprobe:
-        flips = ", ".join(
-            f"bucket ^ cast({1 << i} as bigint)" for i in range(n_planes)
-        )
-        bb = bb.selectExpr(
-            "__bid", "t", f"explode(array(bucket, {flips})) as bucket"
-        )
-    cand = cb.join(bb, ["t", "bucket"]).select("__cid", "__bid").distinct()
-
-    vd = f"transform({bq(vec_col)}, x -> cast(x as double))"
-    norm = (
-        f"sqrt(aggregate(zip_with({vd}, {vd}, (x, y) -> x * y),"
-        " 0.0D, (acc, x) -> acc + x))"
-    )
-    b = benchmark.selectExpr(
-        f"{bq(id_col)} as __bid", f"{vd} as bv", f"{norm} as bn"
-    )
-    c = corpus.selectExpr(
-        f"{bq(id_col)} as __cid", f"{vd} as cv", f"{norm} as cn"
-    )
+    b = _vectors(benchmark, id_col, vec_col, "query_id", "bv", "bn")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     scored = (
-        cand.join(c, "__cid")
-        .join(b, "__bid")
-        .selectExpr(
-            "__cid",
-            "__bid",
-            "case when cn * bn > 0 then"
-            " aggregate(zip_with(cv, bv, (x, y) -> x * y), 0.0D,"
-            " (acc, x) -> acc + x) / (cn * bn)"
-            " else 0.0D end as __s",
+        cand.join(c, "neighbor_id")
+        .join(b, "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            _cosine_or_zero("cv", "bv", "cn", "bn").alias("score"),
         )
     )
-    w = Window.partitionBy("__cid").orderBy(
-        F.col("__s").desc(), F.col("__bid").asc()
-    )
-    best = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__cid", "__bid", "__s")
-    )
+    best = _top_k(scored, 1, by="neighbor_id", tie="query_id")
+    score = F.round(F.coalesce("score", F.lit(0.0)), 6)
     return (
-        corpus.select(F.col(id_col).alias("vec_id"))
-        .join(best, F.col("vec_id") == F.col("__cid"), "left")
+        corpus.selectExpr(f"{bq(id_col)} as vec_id")
+        .join(best, F.col("vec_id") == F.col("neighbor_id"), "left")
         .select(
             "vec_id",
-            F.col("__bid").alias("nearest_bench"),
-            F.round(F.coalesce("__s", F.lit(0.0)), 6).alias("max_cos"),
-            (
-                F.round(F.coalesce("__s", F.lit(0.0)), 6)
-                >= F.lit(threshold)
-            ).alias("contaminated"),
+            F.col("query_id").alias("nearest_bench"),
+            score.alias("max_cos"),
+            (score >= F.lit(threshold)).alias("contaminated"),
         )
     )
 
@@ -436,103 +463,57 @@ def triplet_mining_ann(
     n_planes: int = 4,
     quant: int = 1000,
     n_tables: int = 12,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Hard-negative triplet mining at corpus scale (VERDICT r9 item 6):
     the broadcast-anchors variant (``q_b20_triplet_mining``) caps anchor
     count at driver broadcast limits; here BOTH sides route through the
-    portable integer LSH (:func:`portable_lsh_buckets`), candidates come
-    from an equi-join on ``(table, bucket)`` — anchor count scales to
-    the full corpus, no broadcast, never an anchors×corpus product. Per
-    anchor: the top same-label candidate (positive) and top other-label
-    candidate (hardest negative) by EXACT cosine over candidates only,
-    with the triplet margin and violation flag. Anchors whose buckets
-    yield no same-label or no other-label candidate drop (inner join) —
-    the standard LSH recall trade; ``n_tables`` and anchor-side
-    multiprobe are the recall dials, and every bucket decision is
+    portable integer LSH (:func:`_lsh_candidates`, anchors probing),
+    candidates come from an equi-join on ``(table, bucket)`` — anchor
+    count scales to the full corpus, no broadcast, never an
+    anchors×corpus product. Per anchor: the top same-label candidate
+    (positive) and top other-label candidate (hardest negative) by
+    EXACT cosine over candidates only, with the triplet margin and
+    violation flag. Anchors whose buckets yield no same-label or no
+    other-label candidate drop (inner join) — the standard LSH recall
+    trade; ``n_tables`` is the recall dial, and every bucket decision is
     integer-exact so a SQL oracle replays candidates and scores
     bit-for-bit.
 
     Output: ``(anchor_id, anchor_label, positive_id, pos_score,
     negative_id, neg_score, margin, violation)``.
     """
-    planes = _plane_table(
-        corpus.sparkSession, dim=dim, n_planes=n_planes, n_tables=n_tables
+    cand = _lsh_candidates(
+        corpus, anchors, id_col, vec_col, dim, n_planes, quant, n_tables
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    a = _vectors(
+        anchors, id_col, vec_col, "query_id", "av", "an",
+        f"{bq(label_col)} as anchor_label",
     )
-    cb = portable_lsh_buckets(
-        corpus, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__cid"), "t", "bucket")
-    ab = portable_lsh_buckets(
-        anchors, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__aid"), "t", "bucket")
-    if multiprobe:
-        flips = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ],
-        )
-        ab = ab.select("__aid", "t", F.explode(flips).alias("bucket"))
-    cand = (
-        cb.join(ab, ["t", "bucket"])
-        .filter(F.col("__cid") != F.col("__aid"))
-        .select("__aid", "__cid")
-        .distinct()
-    )
-
-    v = as_double(vec_col)
-    a = anchors.select(
-        F.col(id_col).alias("__aid"),
-        F.col(label_col).alias("anchor_label"),
-        v.alias("av"),
-        l2_norm(v).alias("an"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("__cid"),
-        F.col(label_col).alias("__clabel"),
-        v.alias("cv"),
-        l2_norm(v).alias("cn"),
+    c = _vectors(
+        corpus, id_col, vec_col, "neighbor_id", "cv", "cn",
+        f"{bq(label_col)} as __clabel",
     )
     scored = (
-        cand.join(c, "__cid")
-        .join(a, "__aid")
+        cand.join(c, "neighbor_id")
+        .join(a, "query_id")
         .select(
-            "__aid",
+            "query_id",
             "anchor_label",
-            "__cid",
+            "neighbor_id",
             (F.col("anchor_label") == F.col("__clabel")).alias("__same"),
-            F.when(
-                F.col("an") * F.col("cn") > 0,
-                dot(F.col("av"), F.col("cv")) / (F.col("an") * F.col("cn")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("__s"),
+            _cosine_or_zero("av", "cv", "an", "cn").alias("score"),
         )
     )
-    w = Window.partitionBy("__aid").orderBy(
-        F.col("__s").desc(), F.col("__cid").asc()
+    pos = _top_k(scored.filter(F.col("__same")), 1).select(
+        F.col("query_id").alias("anchor_id"),
+        "anchor_label",
+        F.col("neighbor_id").alias("positive_id"),
+        F.col("score").alias("__ps"),
     )
-    pos = (
-        scored.filter(F.col("__same"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("__aid").alias("anchor_id"),
-            "anchor_label",
-            F.col("__cid").alias("positive_id"),
-            F.col("__s").alias("__ps"),
-        )
-    )
-    neg = (
-        scored.filter(~F.col("__same"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("__aid").alias("anchor_id"),
-            F.col("__cid").alias("negative_id"),
-            F.col("__s").alias("__ns"),
-        )
+    neg = _top_k(scored.filter(~F.col("__same")), 1).select(
+        F.col("query_id").alias("anchor_id"),
+        F.col("neighbor_id").alias("negative_id"),
+        F.col("score").alias("__ns"),
     )
     return pos.join(neg, "anchor_id").select(
         "anchor_id",
@@ -556,80 +537,43 @@ def hubness_ann(
     n_planes: int = 4,
     quant: int = 1000,
     n_tables: int = 12,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Hubness audit at corpus scale (VERDICT r9 item 6 companion to
     :func:`triplet_mining_ann`): the broadcast variant caps the probe
     sample at driver limits; here probes route through the portable
-    integer-LSH buckets, per-probe top-``k`` comes from the exact
-    cosine rescore of (table, bucket) equi-join candidates only, and
-    the k-occurrence histogram (how often each corpus vector lands in a
-    probe's top-k, zero-occurrence mass included) is two keyed aggs.
-    Probe count scales to the full corpus — the production form of the
-    audit is "every vector probes", which no broadcast survives. LSH
-    recall caveat: a probe with no bucket collision contributes no
-    neighbor rows (raise ``n_tables``); bucket decisions are
-    integer-exact so a SQL oracle replays candidates, ranks, and the
-    histogram bit-for-bit.
+    integer-LSH buckets (:func:`_lsh_candidates`), per-probe top-``k``
+    comes from the exact cosine rescore of (table, bucket) equi-join
+    candidates only, and the k-occurrence histogram (how often each
+    corpus vector lands in a probe's top-k, zero-occurrence mass
+    included) is two keyed aggs. Probe count scales to the full corpus
+    — the production form of the audit is "every vector probes", which
+    no broadcast survives. LSH recall caveat: a probe with no bucket
+    collision contributes no neighbor rows (raise ``n_tables``); bucket
+    decisions are integer-exact so a SQL oracle replays candidates,
+    ranks, and the histogram bit-for-bit.
 
     Output: ``(occ, n_vecs)``.
     """
-    planes = _plane_table(
-        corpus.sparkSession, dim=dim, n_planes=n_planes, n_tables=n_tables
-    )
-    cb = portable_lsh_buckets(
-        corpus, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__cid"), "t", "bucket")
-    pb = portable_lsh_buckets(
-        probes, planes, id_col=id_col, vec_col=vec_col, quant=quant
-    ).select(F.col("id").alias("__pid"), "t", "bucket")
-    if multiprobe:
-        flips = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ],
-        )
-        pb = pb.select("__pid", "t", F.explode(flips).alias("bucket"))
-    cand = (
-        cb.join(pb, ["t", "bucket"])
-        .filter(F.col("__cid") != F.col("__pid"))
-        .select("__pid", "__cid")
-        .distinct()
-    )
-    v = as_double(vec_col)
-    p = probes.select(
-        F.col(id_col).alias("__pid"), v.alias("pv"), l2_norm(v).alias("pn")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("__cid"), v.alias("cv"), l2_norm(v).alias("cn")
-    )
+    cand = _lsh_candidates(
+        corpus, probes, id_col, vec_col, dim, n_planes, quant, n_tables
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    p = _vectors(probes, id_col, vec_col, "query_id", "pv", "pn")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     scored = (
-        cand.join(c, "__cid")
-        .join(p, "__pid")
+        cand.join(c, "neighbor_id")
+        .join(p, "query_id")
         .select(
-            "__pid",
-            "__cid",
-            F.when(
-                F.col("pn") * F.col("cn") > 0,
-                dot(F.col("pv"), F.col("cv")) / (F.col("pn") * F.col("cn")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("__s"),
+            "query_id",
+            "neighbor_id",
+            _cosine_or_zero("pv", "cv", "pn", "cn").alias("score"),
         )
     )
-    w = Window.partitionBy("__pid").orderBy(
-        F.col("__s").desc(), F.col("__cid").asc()
+    topk = _top_k(scored, k).select("neighbor_id")
+    occ = topk.groupBy("neighbor_id").agg(
+        F.count(F.lit(1)).cast("long").alias("occ")
     )
-    topk = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("__cid")
-    )
-    occ = topk.groupBy("__cid").agg(F.count(F.lit(1)).cast("long").alias("occ"))
-    allv = corpus.select(F.col(id_col).alias("__cid"))
-    per_vec = allv.join(occ.hint("shuffle_hash"), "__cid", "left").select(
+    allv = corpus.selectExpr(f"{bq(id_col)} as neighbor_id")
+    per_vec = allv.join(occ.hint("shuffle_hash"), "neighbor_id", "left").select(
         F.coalesce(F.col("occ"), F.lit(0).cast("long")).alias("occ")
     )
     return per_vec.groupBy("occ").agg(
@@ -645,7 +589,6 @@ def ann_lsh_portable(
     dim: int = 64,
     n_planes: int = 8,
     quant: int = 1000,
-    multiprobe: bool = True,
     n_tables: int = 1,
 ) -> DataFrame:
     """Engine-portable hyperplane-LSH candidates ``(query_id, neighbor_id)``
@@ -653,46 +596,21 @@ def ann_lsh_portable(
     engine replays the bucket assignment bit-for-bit (no float summation
     order, no RNG).
 
-    Construction: components quantized to ``floor(v·quant)`` int64;
-    hyperplanes are Rademacher ±1 entries from :func:`plane_sign`; bucket
-    bit *p* = sign of the exact integer dot; query-side multiprobe flips
-    each bit once. ``n_tables`` independent tables (table *t* uses plane
-    rows ``t·n_planes … (t+1)·n_planes−1`` of the same LCG family — the
-    recall dial: candidates are the union of per-table bucket matches,
-    still fully integer-exact). Shape: narrow posexplode → broadcast join
-    with the tiny (n_tables·n_planes·dim) sign table → two keyed aggs →
-    equi-join on (table, bucket) — scales like the production
-    :func:`ann_topk_lsh` (which keeps Arrow matmul hashing and float
-    planes; use this variant when cross-engine reproducibility of the
-    index matters).
+    Construction (:func:`_lsh_candidates`): components quantized to
+    ``floor(v·quant)`` int64; hyperplanes are Rademacher ±1 entries from
+    :func:`plane_sign`; bucket bit *p* = sign of the exact integer dot;
+    each query also probes every one-bit flip of its bucket. ``n_tables``
+    independent tables are the recall dial: candidates are the union of
+    per-table bucket matches, still fully integer-exact. Shape: narrow
+    posexplode → broadcast join with the tiny (n_tables·n_planes·dim)
+    sign table → two keyed aggs → equi-join on (table, bucket) — scales
+    like the production :func:`ann_topk_lsh` (which keeps Arrow matmul
+    hashing and float planes; use this variant when cross-engine
+    reproducibility of the index matters).
     """
-    planes = _plane_table(
-        corpus.sparkSession, dim=dim, n_planes=n_planes, n_tables=n_tables
-    )
-
-    def buckets(df: DataFrame) -> DataFrame:
-        return portable_lsh_buckets(
-            df, planes, id_col=id_col, vec_col=vec_col, quant=quant
-        )
-
-    cb = buckets(corpus).select(F.col("id").alias("neighbor_id"), "t", "bucket")
-    qb = buckets(queries).select(F.col("id").alias("query_id"), "t", "bucket")
-    if multiprobe:
-        # r17 construction pass 2: SQL-string probe array (identical
-        # tree — ^ is BitwiseXor, cast(int literal as bigint) == the
-        # F.lit(...).cast chain)
-        flips = ", ".join(
-            f"bucket ^ cast({1 << i} as bigint)" for i in range(n_planes)
-        )
-        qb = qb.selectExpr(
-            "query_id", "t", f"explode(array(bucket, {flips})) as bucket"
-        )
-    return (
-        qb.join(cb, ["t", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    return _lsh_candidates(
+        corpus, queries, id_col, vec_col, dim, n_planes, quant, n_tables
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
 
 
 def _rescore_topk(
@@ -707,35 +625,10 @@ def _rescore_topk(
     neighbor_id)``: join the vectors back (query side broadcast), score,
     per-query top-k window with neighbor-id tiebreak. The shared tail of
     both portable ANN paths."""
-    # r17 construction pass 2: SQL-string dot/norm (identical
-    # transform/zip_with/aggregate trees, 0.0D == F.lit(0.0))
-    vd = f"transform({bq(vec_col)}, x -> cast(x as double))"
-    norm = (
-        f"sqrt(aggregate(zip_with({vd}, {vd}, (x, y) -> x * y),"
-        " 0.0D, (acc, x) -> acc + x))"
-    )
-    q = queries.selectExpr(
-        f"{bq(id_col)} as query_id", f"{vd} as qv", f"{norm} as qn"
-    )
-    c = corpus.selectExpr(
-        f"{bq(id_col)} as neighbor_id", f"{vd} as cv", f"{norm} as cn"
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0.0D,"
-            " (acc, x) -> acc + x) / (qn * cn) as score",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    return _score_topk(
+        cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"), k
     )
 
 
@@ -748,7 +641,6 @@ def ann_topk_lsh_portable(
     dim: int = 64,
     n_planes: int = 8,
     quant: int = 1000,
-    multiprobe: bool = True,
     n_tables: int = 4,
 ) -> DataFrame:
     """Deterministic, oracle-able LSH ANN top-k: :func:`ann_lsh_portable`
@@ -763,8 +655,7 @@ def ann_topk_lsh_portable(
     tables, learned nothing, Arrow matmul hashing).
     """
     cand = ann_lsh_portable(
-        corpus, queries, id_col, vec_col, dim, n_planes, quant, multiprobe,
-        n_tables,
+        corpus, queries, id_col, vec_col, dim, n_planes, quant, n_tables
     )
     return _rescore_topk(cand, corpus, queries, k, id_col, vec_col)
 
@@ -802,30 +693,20 @@ def ann_topk_ivf_portable(
     vector; candidates come from an equi-join on ``cell``. Production
     recall tuning (data-adaptive cells) stays with :func:`ann_topk_ivf`.
     """
-    cents = (
-        corpus.filter(F.col(id_col).isin(list(centroid_ids)))
-        .select(
-            F.col(id_col).alias("cid"),
-            F.posexplode(as_double(vec_col)).alias("d", "cv"),
-        )
-        .select("cid", "d", F.floor(F.col("cv") * quant).cast("long").alias("cq"))
-    )
+    cents = _quantized_components(
+        corpus.filter(F.col(bq(id_col)).isin(list(centroid_ids))),
+        id_col, vec_col, quant,
+    ).select(F.col("id").alias("cid"), "d", F.col("q").alias("cq"))
 
     def cells(df: DataFrame, take: int) -> DataFrame:
-        comp = df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(as_double(vec_col)).alias("d", "v"),
-        ).select("id", "d", F.floor(F.col("v") * quant).cast("long").alias("q"))
         dots = (
-            comp.join(F.broadcast(cents), "d")
+            _quantized_components(df, id_col, vec_col, quant)
+            .join(F.broadcast(cents), "d")
             .groupBy("id", "cid")
             .agg(F.sum(F.col("q") * F.col("cq")).alias("dp"))
         )
-        w = Window.partitionBy("id").orderBy(F.col("dp").desc(), F.col("cid").asc())
-        return (
-            dots.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= take)
-            .select("id", F.col("cid").alias("cell"))
+        return _top_k(dots, take, by="id", tie="cid", score="dp").select(
+            "id", F.col("cid").alias("cell")
         )
 
     cc = cells(corpus, 1).select(F.col("id").alias("neighbor_id"), "cell")
@@ -849,18 +730,17 @@ def ann_topk_lsh(
     n_planes: int = 6,
     n_tables: int = 8,
     seed: int = 42,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: ``n_tables`` independent hyperplane signatures;
     candidates = corpus rows sharing a (table, signature) bucket with the
-    query; exact cosine + top-k within candidates.
+    query or with one of its one-bit flips; exact cosine + top-k within
+    candidates.
 
     At 100 TB the corpus is hashed once (narrow map), the join is an
     equi-join on (table, bucket) — expected bucket size n/2^planes — and
-    only candidates are scored. Recall rises with ``n_tables`` and with
-    ``multiprobe`` (each query also probes every one-bit-flip bucket —
-    query-side only, so the corpus never re-hashes; the standard recall/
-    cost dial when true-neighbor cosine is modest).
+    only candidates are scored. Recall rises with ``n_tables``; the
+    one-bit-flip probes are query-side only, so the corpus never
+    re-hashes.
     """
     import numpy as np
     import pandas as pd
@@ -884,28 +764,20 @@ def ann_topk_lsh(
     _buckets.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
     buckets_udf = pandas_udf(_buckets, "array<long>")
 
-    def bucketize(df: DataFrame, side: str, probe: bool) -> DataFrame:
-        v = as_double(vec_col)
-        out = df.select(
-            F.col(id_col).alias(f"{side}_id"),
-            v.alias(f"{side}_v"),
-            F.posexplode(buckets_udf(F.col(vec_col))).alias("table", "bucket"),
+    def bucketize(df: DataFrame, side: str) -> DataFrame:
+        return df.select(
+            F.col(bq(id_col)).alias(f"{side}_id"),
+            as_double(vec_col).alias(f"{side}_v"),
+            F.posexplode(buckets_udf(F.col(bq(vec_col)))).alias("table", "bucket"),
         )
-        if probe:
-            flips = F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(n_planes)
-                ],
-            )
-            out = out.select(
-                f"{side}_id", f"{side}_v", "table", F.explode(flips).alias("bucket")
-            )
-        return out
 
-    cb = bucketize(corpus, "neighbor", probe=False)
-    qb = bucketize(queries, "query", probe=multiprobe)
+    cb = bucketize(corpus, "neighbor")
+    qb = bucketize(queries, "query").select(
+        "query_id",
+        "query_v",
+        "table",
+        F.explode(F.expr(_probe_array("bucket", n_planes))).alias("bucket"),
+    )
     cand = (
         qb.join(cb, ["table", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -915,18 +787,9 @@ def ann_topk_lsh(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (
-            dot(F.col("query_v"), F.col("neighbor_v"))
-            / (l2_norm(F.col("query_v")) * l2_norm(F.col("neighbor_v")))
-        ).alias("score"),
+        cosine(F.col("query_v"), F.col("neighbor_v")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def group_centroids(
@@ -950,16 +813,15 @@ def group_centroids(
     means round to ``round_to`` (float-sum order differs per engine).
     Output: ``(group_col, n_vecs, centroid: array<double>)``.
     """
-    ex = df.select(
-        F.col(group_col), F.posexplode(as_double(vec_col)).alias("dim", "v")
-    )
-    per_dim = ex.groupBy(group_col, "dim").agg(
+    g = F.col(bq(group_col))
+    ex = df.select(g, F.posexplode(as_double(vec_col)).alias("dim", "v"))
+    per_dim = ex.groupBy(g, "dim").agg(
         F.round(F.avg("v"), round_to).alias("val")
     )
-    counts = df.groupBy(group_col).agg(
+    counts = df.groupBy(g).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs")
     )
-    pooled = per_dim.groupBy(group_col).agg(
+    pooled = per_dim.groupBy(g).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "val"))),
             lambda s: s.val,
@@ -1093,7 +955,7 @@ def covariance_matrix_fast(
         )
 
     agg = (
-        df.select(vec_col)
+        df.select(F.col(bq(vec_col)))
         .mapInPandas(partials, out)
         .groupBy("i", "j")
         .agg(
@@ -1176,7 +1038,7 @@ def pca_project(
         )
         for c in comps
     ]
-    return df.select(F.col(id_col), F.array(*projs).alias("proj"))
+    return df.select(F.col(bq(id_col)), F.array(*projs).alias("proj"))
 
 
 def kmeans_exact(
@@ -1214,14 +1076,11 @@ def kmeans_exact(
     Output: ``(id_col, cluster_id int, cluster_size bigint)``.
     """
     base = df.select(
-        F.col(id_col),
-        F.transform(
-            as_double(vec_col),
-            lambda x: F.floor(x * F.lit(float(quant))).cast("long"),
-        ).alias("__qe"),
+        F.col(bq(id_col)),
+        _quantize(vec_col, quant).alias("__qe"),
     )
 
-    seed_rows = base.orderBy(F.col(id_col).asc()).limit(k).collect()
+    seed_rows = base.orderBy(F.col(bq(id_col)).asc()).limit(k).collect()
     cents = {i: list(r["__qe"]) for i, r in enumerate(seed_rows)}
     d = len(seed_rows[0]["__qe"])
 
@@ -1267,7 +1126,7 @@ def kmeans_exact(
     w = Window.partitionBy("cluster_id")
     return (
         assign(base)
-        .select(id_col, "cluster_id")
+        .select(F.col(bq(id_col)), "cluster_id")
         .withColumn("cluster_size", F.count(F.lit(1)).over(w))
     )
 
@@ -1321,19 +1180,15 @@ def ann_topk_pq(
     # row_number map 1:1, default asc null ordering matches), re-gated
     def comps(df: DataFrame, out_id: str) -> DataFrame:
         """(id, s, d, q): floor-quantized component per subspace."""
-        return df.selectExpr(
-            f"{bq(id_col)} as {out_id}",
-            f"posexplode(transform({bq(vec_col)}, x -> cast(x as double)))"
-            " as (__d, __v)",
-        ).selectExpr(
-            out_id,
-            f"cast(__d / {sub} as int) as s",
-            f"__d % {sub} as d",
-            f"cast(floor(__v * {quant}) as bigint) as q",
+        return _quantized_components(df, id_col, vec_col, quant).selectExpr(
+            f"id as {out_id}",
+            f"cast(d / {sub} as int) as s",
+            f"d % {sub} as d",
+            "q",
         )
 
     seeds = comps(
-        corpus.filter(F.col(id_col).isin(list(seed_ids))), "sid"
+        corpus.filter(F.col(bq(id_col)).isin(list(seed_ids))), "sid"
     ).selectExpr(
         "s",
         "d",
@@ -1439,11 +1294,8 @@ def kcenter_greedy(
     center_id, dist_sq bigint)``.
     """
     base = df.select(
-        F.col(id_col),
-        F.transform(
-            as_double(vec_col),
-            lambda x: F.floor(x * F.lit(float(quant))).cast("long"),
-        ).alias("__qe"),
+        F.col(bq(id_col)),
+        _quantize(vec_col, quant).alias("__qe"),
     ).localCheckpoint()
 
     def dist_sql(center_vec: list[int]) -> str:
@@ -1457,20 +1309,20 @@ def kcenter_greedy(
             " cast(0 as bigint), (acc, x) -> acc + x)"
         )
 
-    seed_rows = base.orderBy(F.col(id_col).asc()).limit(1).collect()
+    seed_rows = base.orderBy(F.col(bq(id_col)).asc()).limit(1).collect()
     if not seed_rows:
         # empty input ⇒ empty output of the declared schema (no seed to
         # pick; collect()[0] would IndexError — ADVICE r12)
         if assignments:
             return base.select(
-                F.col(id_col),
+                F.col(bq(id_col)),
                 F.lit(0).cast("int").alias("center_rank"),
-                F.col(id_col).alias("center_id"),
+                F.col(bq(id_col)).alias("center_id"),
                 F.lit(0).cast("long").alias("dist_sq"),
             )
         return base.select(
             F.lit(0).cast("int").alias("center_rank"),
-            F.col(id_col).alias("center_id"),
+            F.col(bq(id_col)).alias("center_id"),
             F.lit(0).cast("long").alias("n_assigned"),
             F.lit(0).cast("long").alias("radius_sq"),
         )
@@ -1479,7 +1331,7 @@ def kcenter_greedy(
     # computes exactly one new distance column and CARRIES the argmin,
     # so the final assignment needs no k·n·d re-scan
     cur = base.select(
-        F.col(id_col),
+        F.col(bq(id_col)),
         "__qe",
         F.expr(dist_sql(seed["__qe"])).alias("__d"),
         F.lit(0).cast("int").alias("__r"),
@@ -1490,7 +1342,7 @@ def kcenter_greedy(
     # parsed once in the JVM instead of ~14 py4j-built when/otherwise
     # nodes — identical trees (CASE WHEN == F.when().otherwise()),
     # identical picks (oracle re-gated).
-    by_dist = [F.col("__d").desc(), F.col(id_col).asc()]
+    by_dist = [F.col("__d").desc(), F.col(bq(id_col)).asc()]
     for i in range(1, k):
         # this argmax action is what materializes cur's checkpoint —
         # one job per pick (the old eager-checkpoint+collect pair was
@@ -1548,7 +1400,6 @@ def radius_search_portable(
     dim: int = 64,
     n_planes: int = 8,
     quant: int = 1000,
-    multiprobe: bool = True,
     n_tables: int = 4,
 ) -> DataFrame:
     """Deterministic, oracle-able RADIUS (range) similarity search — the
@@ -1559,7 +1410,8 @@ def radius_search_portable(
     parameter-, bounded.
 
     Candidates come from the shared portable LSH index
-    (:func:`ann_lsh_portable` — integer-exact buckets, multiprobe);
+    (:func:`ann_lsh_portable` — integer-exact buckets, one-bit-flip
+    probes);
     membership is then decided by a PURE-INTEGER threshold test on the
     quantized components: with θ = num/den > 0, ``cos ≥ θ`` ⟺
     ``dot > 0 ∧ den²·dot² ≥ num²·|q|²·|c|²`` — no float touches the
@@ -1573,17 +1425,13 @@ def radius_search_portable(
     one row per in-radius candidate pair.
     """
     cand = ann_lsh_portable(
-        corpus, queries, id_col, vec_col, dim, n_planes, quant, multiprobe,
-        n_tables,
+        corpus, queries, id_col, vec_col, dim, n_planes, quant, n_tables
     )
-    qcomp = F.transform(
-        as_double(vec_col),
-        lambda x: F.floor(x * F.lit(float(quant))).cast("long"),
-    )
+    qcomp = _quantize(vec_col, quant)
 
     def with_q(df, idname, qname, nname):
         return df.select(
-            F.col(id_col).alias(idname),
+            F.col(bq(id_col)).alias(idname),
             qcomp.alias(qname),
             F.aggregate(
                 F.transform(qcomp, lambda v: v * v),
@@ -1679,11 +1527,8 @@ def mmr_rerank(
     score bigint)`` — maxsim/score as of the moment of the pick.
     """
     base = df.select(
-        F.col(id_col),
-        F.transform(
-            as_double(vec_col),
-            lambda x: F.floor(x * F.lit(float(quant))).cast("long"),
-        ).alias("__qe"),
+        F.col(bq(id_col)),
+        _quantize(vec_col, quant).alias("__qe"),
     ).localCheckpoint()
 
     def dot_sql(vec: list[int]) -> str:
@@ -1695,12 +1540,12 @@ def mmr_rerank(
             " cast(0 as bigint), (acc, x) -> acc + x)"
         )
 
-    qrows = base.filter(F.col(id_col) == query_id).limit(1).collect()
+    qrows = base.filter(F.col(bq(id_col)) == query_id).limit(1).collect()
     if not qrows:
         raise ValueError(f"mmr_rerank: query id {query_id!r} not found")
     qvec = list(qrows[0]["__qe"])
-    cur = base.filter(F.col(id_col) != query_id).select(
-        F.col(id_col),
+    cur = base.filter(F.col(bq(id_col)) != query_id).select(
+        F.col(bq(id_col)),
         "__qe",
         F.expr(dot_sql(qvec)).alias("__rel"),
         F.lit(0).cast("long").alias("__ms"),
@@ -1709,7 +1554,7 @@ def mmr_rerank(
         # bounded-candidate prefilter: rel-topN with a deterministic id
         # tie-break; orderBy+limit plans as TakeOrderedAndProject (per-
         # partition heaps + a driver-side merge of N rows, no shuffle)
-        cur = cur.orderBy(F.col("__rel").desc(), F.col(id_col).asc()).limit(
+        cur = cur.orderBy(F.col("__rel").desc(), F.col(bq(id_col)).asc()).limit(
             topn
         )
     cur = cur.localCheckpoint(eager=False)
@@ -1720,7 +1565,7 @@ def mmr_rerank(
     # hoisted and reused across generations, and the per-pick fold
     # renders as a SQL string parsed once in the JVM — identical trees,
     # identical picks (oracle re-gated).
-    id_c = F.col(id_col)
+    id_c = F.col(bq(id_col))
     by_score = [(2 * F.col("__rel") - F.col("__ms")).desc(), id_c.asc()]
     picks: list[tuple] = []
     for rank in range(k):
@@ -1754,6 +1599,6 @@ def mmr_rerank(
     id_type = base.schema[id_col].dataType.simpleString()
     return df.sparkSession.createDataFrame(
         picks,
-        f"mmr_rank int, {id_col} {id_type}, rel long,"
+        f"mmr_rank int, {bq(id_col)} {id_type}, rel long,"
         " maxsim long, score long",
     )

@@ -381,10 +381,14 @@ def bootstrap_scan(
 
     Output schema matches :func:`sqlite_cdc_spark.bootstrap.snapshot_as_inserts`
     (tablename/timestamp/operation/before/after) so the pages union directly
-    with the trigger log downstream. Returns total rows emitted.
+    with the trigger log downstream. Each page is published like a
+    :func:`poll_log` page (:func:`~sqlite_cdc_spark.storage.publish_parquet`),
+    so a crash mid-page never leaves a truncated page visible. Returns
+    total rows emitted.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
+
+    from .storage import publish_parquet
 
     os.makedirs(out_dir, exist_ok=True)
     ts = _iso_ts(conn.execute("SELECT datetime('now')").fetchone()[0])
@@ -431,9 +435,7 @@ def bootstrap_scan(
                     "after": pa.array([r[-1] for r in rows], pa.string()),
                 }
             )
-            pq.write_table(
-                page, os.path.join(out_dir, f"bootstrap-{t}-{page_no:08d}.parquet")
-            )
+            publish_parquet(page, out_dir, f"bootstrap-{t}-{page_no:08d}.parquet")
             last = tuple(rows[-1][:-1])
             total += n
             page_no += 1

@@ -97,34 +97,6 @@ def test_write_clustered_disjoint_ranges(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == li.count()
 
 
-def test_write_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key join with ZERO exchanges —
-    the pre-shuffled layout for repeated log⋈snapshot replica merges."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    bs.write_bucketed(orders, "bkt_orders", ["o_custkey"], 8,
-                      path=str(tmp_path / "bkt_orders"))
-    bs.write_bucketed(customer, "bkt_customer", ["c_custkey"], 8,
-                      path=str(tmp_path / "bkt_customer"))
-    try:
-        bo = spark.table("bkt_orders")
-        bc = spark.table("bkt_customer")
-        # force the non-broadcast path so the bucketing does the work
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = bo.join(bc, bo.o_custkey == bc.c_custkey)
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # buckets align: no shuffle at all
-            assert joined.count() == orders.count()  # every order has a customer
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_customer")
-
-
 def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
     """CSV and JSON-lines sources roundtrip the nation table losslessly
     with an explicit schema (no inference pass)."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqlite_cdc_spark.pipeline import dedup, multimodal, similarity
@@ -437,6 +438,90 @@ def test_kcenter_and_mmr_picks_survive_hostile_string_ids(spark):
         tuple(r)
         for r in similarity.mmr_rerank(plain, query_id=num["o'brien"], k=4).collect()
     )
+
+
+#: every public vector-family call, as ``(corpus, queries, names)`` →
+#: DataFrame, where ``names`` carries ``id_col`` and ``vec_col``
+_VECTOR_CALLS = {
+    "cosine_topk": lambda c, q, n: similarity.cosine_topk(c, q, k=3, **n),
+    "semantic_contamination": lambda c, q, n: similarity.semantic_contamination(
+        c, q, **n
+    ),
+    "with_norm": lambda c, q, n: similarity.with_norm(q, n["vec_col"]),
+    "ann_topk_ivf": lambda c, q, n: similarity.ann_topk_ivf(c, q, k=3, **n),
+    "portable_lsh_buckets": lambda c, q, n: similarity.portable_lsh_buckets(
+        c, similarity._plane_table(c.sparkSession, 64, 4, 2), **n
+    ),
+    "semantic_contamination_bucketed": (
+        lambda c, q, n: similarity.semantic_contamination_bucketed(
+            c, q, n_planes=4, n_tables=4, **n
+        )
+    ),
+    "triplet_mining_ann": lambda c, q, n: similarity.triplet_mining_ann(c, q, **n),
+    "hubness_ann": lambda c, q, n: similarity.hubness_ann(c, q, k=3, **n),
+    "ann_lsh_portable": lambda c, q, n: similarity.ann_lsh_portable(c, q, **n),
+    "ann_topk_lsh_portable": lambda c, q, n: similarity.ann_topk_lsh_portable(
+        c, q, k=3, **n
+    ),
+    "ann_topk_ivf_portable": lambda c, q, n: similarity.ann_topk_ivf_portable(
+        c, q, k=3, **n
+    ),
+    "ann_topk_lsh": lambda c, q, n: similarity.ann_topk_lsh(c, q, k=3, **n),
+    "group_centroids": lambda c, q, n: similarity.group_centroids(
+        q, n["id_col"], n["vec_col"]
+    ),
+    "covariance_matrix": lambda c, q, n: similarity.covariance_matrix(
+        q, n["vec_col"]
+    ),
+    "covariance_matrix_fast": lambda c, q, n: similarity.covariance_matrix_fast(
+        q, n["vec_col"]
+    ),
+    "pca_project": lambda c, q, n: similarity.pca_project(
+        c, n["id_col"], n["vec_col"], n_components=2
+    ),
+    "kmeans_exact": lambda c, q, n: similarity.kmeans_exact(c, k=2, iters=1, **n),
+    "ann_topk_pq": lambda c, q, n: similarity.ann_topk_pq(c, q, k=3, **n),
+    "kcenter_greedy": lambda c, q, n: similarity.kcenter_greedy(c, k=3, **n),
+    "radius_search_portable": lambda c, q, n: similarity.radius_search_portable(
+        c, q, **n
+    ),
+    "mmr_rerank": lambda c, q, n: similarity.mmr_rerank(c, 0, k=3, **n),
+    "embedding_near_dups_exact": lambda c, q, n: dedup.embedding_near_dups(
+        c, threshold=0.4, exact=True, **n
+    ),
+    "embedding_near_dups_lsh": lambda c, q, n: dedup.embedding_near_dups(
+        c, threshold=0.4, **n
+    ),
+}
+
+
+def _rounded(v):
+    if isinstance(v, float):
+        return round(v, 6)
+    if isinstance(v, (list, tuple)):
+        return tuple(_rounded(x) for x in v)
+    return v
+
+
+@pytest.mark.parametrize("name", sorted(_VECTOR_CALLS))
+def test_vector_family_resolves_dotted_column_names(spark, sf_dir, name):
+    # a caller's `vec.id` must resolve as one column, never as field `id`
+    # of a struct `vec`: the call returns the rows it returns when the
+    # same columns carry plain names
+    call = _VECTOR_CALLS[name]
+    emb = load_table(spark, sf_dir, "embeddings")
+    hostile = emb.select(
+        F.col("vec_id").alias("vec.id"), F.col("embedding").alias("emb"), "label"
+    )
+
+    def rows(df, id_col, vec_col):
+        q = df.filter(F.col(f"`{id_col}`") < 8)
+        out = call(df, q, {"id_col": id_col, "vec_col": vec_col})
+        return sorted(_rounded(tuple(r)) for r in out.collect())
+
+    want = rows(emb, "vec_id", "embedding")
+    assert want
+    assert rows(hostile, "vec.id", "emb") == want
 
 
 def test_embedding_near_dups_lsh_vs_exact(spark, sf_dir):
@@ -1349,7 +1434,7 @@ def test_extract_frames_survives_comment_headers(spark):
 
 def test_semantic_contamination_bucketed_recall(spark, sf_dir):
     # the ANN-bucketed screen must agree with the exhaustive scorer on
-    # the fixture: at 4 tables + multiprobe it should recover
+    # the fixture: at 4 tables + one-bit-flip probes it should recover
     # essentially every contaminated flag, and every (vec, bench, score)
     # it does report must match the exhaustive score exactly
     emb = load_table(spark, sf_dir, "embeddings")

@@ -630,6 +630,64 @@ def test_hubness_ann_no_probe_broadcast_product(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The lines of a tree-string node's subtree (deeper-indented lines
+    that follow it)."""
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = []
+    for ln in lines[i + 1 :]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+@pytest.mark.parametrize(
+    "consumer",
+    [
+        "ann_lsh_portable",
+        "semantic_contamination_bucketed",
+        "triplet_mining_ann",
+        "hubness_ann",
+        "ann_topk_lsh",
+    ],
+)
+def test_lsh_flip_probes_explode_once_on_the_probe_side(spark, sf_dir, consumer):
+    # the corpus is hashed once and never multiplied: every Generate that
+    # explodes the one-bit-flip probe array reads the probe relation
+    # (rows from a local list, a LogicalRDD here), never the corpus scan,
+    # and a run executes exactly one of them (triplet mining plans its
+    # candidates twice, for the positive and the negative leg, and reuses
+    # the exchange)
+    import re
+
+    from sqlite_cdc_spark.pipeline import similarity
+    from sqlite_cdc_spark.sources import load_table
+
+    corpus = load_table(spark, sf_dir, "embeddings")
+    probes = spark.createDataFrame(
+        corpus.filter("vec_id < 4").collect(), corpus.schema
+    )
+    df = getattr(similarity, consumer)(corpus, probes)
+    lines = df._jdf.queryExecution().optimizedPlan().treeString().splitlines()
+    scan = re.compile(r"Relation \[.*\] parquet")
+    assert any(scan.search(ln) for ln in lines)
+    flip = "Generate explode(array(bucket"
+    flips = [i for i, ln in enumerate(lines) if flip in ln]
+    assert flips
+    for i in flips:
+        below = _subtree(lines, i)
+        assert any("LogicalRDD" in ln for ln in below)
+        assert not any(scan.search(ln) for ln in below)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count(flip) == 1
+
+
 def test_span_dups_is_linear_no_pair_join(spark, sf_dir):
     # r10 wave 2: the span-duplication screen must stay linear — one
     # fp-keyed agg joined back (never broadcast: window vocabulary is

@@ -268,6 +268,43 @@ def test_bootstrap_scan_rowid_fallback(db, tmp_path):
     assert len(glob.glob(f"{out}/*.parquet")) == 3
 
 
+def test_bootstrap_scan_crash_mid_page_leaves_no_visible_page(
+    db, tmp_path, monkeypatch
+):
+    # a writer that dies part-way through page 2 leaves neither a truncated
+    # page nor a temp file behind: a listing sees whole pages only
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _insert_rows(db, 120)
+    out = str(tmp_path / "boot")
+    real_write = pq.write_table
+    pages = []
+
+    def write_table(table, where, **kw):
+        pages.append(table.num_rows)
+        if len(pages) == 1:
+            return real_write(table, where, **kw)
+        buf = pa.BufferOutputStream()
+        real_write(table, buf, **kw)
+        partial = buf.getvalue().to_pybytes()[:100]
+        if isinstance(where, str):
+            with open(where, "wb") as f:
+                f.write(partial)
+        else:
+            where.write(partial)
+        raise OSError("injected crash mid-page")
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    with pytest.raises(OSError, match="injected"):
+        sqlite_bridge.bootstrap_scan(db, ["affinity_test"], out, batch_size=50)
+    monkeypatch.undo()
+    assert os.listdir(out) == ["bootstrap-affinity_test-00000000.parquet"]
+    assert pq.read_table(os.path.join(out, os.listdir(out)[0])).num_rows == 50
+
+
 def test_poll_log_publishes_page_atomically(db, tmp_path, monkeypatch):
     # the page is written under a hidden temp name and renamed into place:
     # a listing of the watched directory never sees it half-written
