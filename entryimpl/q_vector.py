@@ -277,25 +277,14 @@ def q_b20_cos_histogram(spark, sf_dir):
     is a floor of identical doubles on both engines. Cost ∝ probes ×
     corpus, never corpus²."""
     emb = _t(spark, sf_dir, "embeddings")
-    qv = similarity.as_double("embedding")
-    q = emb.filter(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("query_id"),
-        qv.alias("qv"),
-        similarity.l2_norm(qv).alias("qn"),
+    q = similarity._vectors(
+        emb.filter(F.col("vec_id") < 32), "vec_id", "embedding",
+        "query_id", "qv", "qn",
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        qv.alias("cv"),
-        similarity.l2_norm(qv).alias("cn"),
-    )
+    c = similarity._vectors(emb, "vec_id", "embedding", "neighbor_id", "cv", "cn")
     scored = c.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        (
-            similarity.dot(F.col("qv"), F.col("cv"))
-            / (F.col("qn") * F.col("cn"))
-        ).alias("score")
-    )
+    ).select(similarity._cosine_or_zero("qv", "cv", "qn", "cn").alias("score"))
     per = scored.select(
         F.floor(F.col("score") * 10).cast("int").alias("bucket")
     ).groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
@@ -410,21 +399,14 @@ def q_b20_triplet_mining(spark, sf_dir):
     windows over the same scored relation. Scores/margins are round-6
     of identical doubles (sqrt is correctly-rounded; the subtraction
     happens on RAW scores before rounding, both engines)."""
-    from pyspark.sql import Window
-
     emb = _t(spark, sf_dir, "embeddings")
-    qv = similarity.as_double("embedding")
-    anchors = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        qv.alias("av"),
-        similarity.l2_norm(qv).alias("an"),
+    anchors = similarity._vectors(
+        emb.filter(F.col("vec_id") < 8), "vec_id", "embedding",
+        "anchor_id", "av", "an", "label as anchor_label",
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        qv.alias("cv"),
-        similarity.l2_norm(qv).alias("cn"),
+    corpus = similarity._vectors(
+        emb, "vec_id", "embedding", "neighbor_id", "cv", "cn",
+        "label as neighbor_label",
     )
     scored = corpus.join(
         F.broadcast(anchors), F.col("anchor_id") != F.col("neighbor_id")
@@ -433,34 +415,22 @@ def q_b20_triplet_mining(spark, sf_dir):
         "anchor_label",
         "neighbor_id",
         (F.col("anchor_label") == F.col("neighbor_label")).alias("__same"),
-        (
-            similarity.dot(F.col("av"), F.col("cv"))
-            / (F.col("an") * F.col("cn"))
-        ).alias("__s"),
+        similarity._cosine_or_zero("av", "cv", "an", "cn").alias("__s"),
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("__s").desc(), F.col("neighbor_id").asc()
+
+    def nearest(same):
+        return similarity._top_k(scored.filter(same), 1, by="anchor_id", score="__s")
+
+    pos = nearest(F.col("__same")).select(
+        "anchor_id",
+        "anchor_label",
+        F.col("neighbor_id").alias("positive_id"),
+        F.col("__s").alias("__ps"),
     )
-    pos = (
-        scored.filter(F.col("__same"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            F.col("neighbor_id").alias("positive_id"),
-            F.col("__s").alias("__ps"),
-        )
-    )
-    neg = (
-        scored.filter(~F.col("__same"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "anchor_id",
-            F.col("neighbor_id").alias("negative_id"),
-            F.col("__s").alias("__ns"),
-        )
+    neg = nearest(~F.col("__same")).select(
+        "anchor_id",
+        F.col("neighbor_id").alias("negative_id"),
+        F.col("__s").alias("__ns"),
     )
     return pos.join(neg, "anchor_id").select(
         "anchor_id",

@@ -16,12 +16,13 @@ declaratively, and they remain useful for bounded "give me a page" serving.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .model import OP_INSERT, row_image
+from .sqlident import bq
 
 
 def snapshot_as_inserts(
@@ -75,7 +76,7 @@ def bootstrap_tables(
 
 
 def _key_tuple(keys: Sequence[str]) -> Column:
-    return F.struct(*[F.col(k) for k in keys])
+    return F.struct(*[F.col(bq(k)) for k in keys])
 
 
 def snapshot_first_page(df: DataFrame, keys: Sequence[str], batch_size: int) -> DataFrame:
@@ -85,7 +86,7 @@ def snapshot_first_page(df: DataFrame, keys: Sequence[str], batch_size: int) -> 
     Catalyst plans this as TakeOrderedAndProject — a distributed top-k, not a
     global sort, so it stays cheap at any scale.
     """
-    return df.orderBy(*[F.col(k).asc() for k in keys]).limit(batch_size)
+    return df.orderBy(*[F.col(bq(k)).asc() for k in keys]).limit(batch_size)
 
 
 def snapshot_next_page(
@@ -111,53 +112,11 @@ def snapshot_next_page(
             for k, v in zip(keys, last_key)
         ]
     )
-    leading_bound = F.col(keys[0]) >= F.lit(last_key[0]).cast(
+    leading_bound = F.col(bq(keys[0])) >= F.lit(last_key[0]).cast(
         df.schema[keys[0]].dataType
     )
     return (
         df.filter(leading_bound & (_key_tuple(keys) > last))
-        .orderBy(*[F.col(k).asc() for k in keys])
+        .orderBy(*[F.col(bq(k)).asc() for k in keys])
         .limit(batch_size)
     )
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    num_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Write a snapshot range-clustered and sorted by ``keys``.
-
-    This is the storage layout that makes the keyset operators (A2/A3)
-    O(page): ``repartitionByRange`` gives disjoint key ranges per file,
-    ``sortWithinPartitions`` orders within, so parquet min/max stats let a
-    ``k > last`` predicate prune to a single file and Spark's top-k stops
-    early. The Spark-native stand-in for the reference's reliance on the
-    SQLite PK index (``triggers.go:539-568``).
-    """
-    (
-        df.repartitionByRange(num_files, *[F.col(k) for k in keys])
-        .sortWithinPartitions(*[F.col(k) for k in keys])
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def iterate_pages(
-    df: DataFrame, keys: Sequence[str], batch_size: int
-) -> Iterator[list]:
-    """Drive the keyset loop like the reference's ``bootstrapTable``
-    (``triggers.go:283-320``): yields collected pages until short page.
-
-    Driver-side by construction (it exists to serve bounded pages to a
-    consumer); the scale path for full scans is :func:`snapshot_as_inserts`.
-    """
-    page = snapshot_first_page(df, keys, batch_size).collect()
-    while page:
-        yield page
-        if len(page) < batch_size:
-            return
-        last = [page[-1][k] for k in keys]
-        page = snapshot_next_page(df, keys, last, batch_size).collect()

@@ -273,12 +273,12 @@ def apply_changes(
         F.col("operation"), F.from_json(img, schema).alias("__row")
     )
     keyed = parsed.select(
-        "operation", "__row", *[F.col(f"__row.{k}").alias(k) for k in keys]
+        "operation", "__row", *[F.col("__row")[k].alias(k) for k in keys]
     )
-    changed_keys = keyed.select(*keys).distinct()
+    changed_keys = keyed.select(*[F.col(bq(k)) for k in keys]).distinct()
     survivors = state.join(changed_keys, list(keys), "left_anti")
     upserts = keyed.filter(F.col("operation") != OP_DELETE).select(
-        *[F.col(f"__row.{c}").alias(c) for c in state.columns]
+        *[F.col("__row")[c].alias(c) for c in state.columns]
     )
     return survivors.unionByName(upserts)
 
@@ -402,12 +402,14 @@ def apply_changes_guarded(
         F.col(id_col).cast("long").alias("_version"),
         F.from_json(img, schema).alias("__row"),
     ).select(
-        *[F.col(f"__row.{f.name}").alias(f.name) for f in data_fields],
+        *[F.col("__row")[f.name].alias(f.name) for f in data_fields],
         "_op",
         "_version",
     )
     merged = state.unionByName(parsed)
-    w = Window.partitionBy(*keys).orderBy(F.col("_version").desc())
+    w = Window.partitionBy(*[F.col(bq(k)) for k in keys]).orderBy(
+        F.col("_version").desc()
+    )
     return (
         merged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -518,12 +520,6 @@ def salted_join(
     )
     out = lsalted.join(rsalted, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def snapshots_equal(a: DataFrame, b: DataFrame) -> bool:
-    """Multiset equality of two snapshots via ``exceptAll`` both ways
-    (SURVEY §2 B13) — the replication-correctness check."""
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def sessionize(

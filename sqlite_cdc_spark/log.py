@@ -19,7 +19,7 @@ The driver fixture ``events`` stands in for a populated log (FIXTURES.md §2):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .model import (
@@ -82,20 +82,6 @@ def drain_batch(
     return df.orderBy(F.col("id").asc()).limit(batch_size)
 
 
-def drain_all(log: DataFrame, batch_size: int):
-    """Loop :func:`drain_batch` until empty, yielding collected batches in
-    log order — the reference's drain loop shape (``triggers.go:164-223``).
-    Driver-side by construction (it exists to hand bounded ordered batches
-    to a consumer); the scale path is Structured Streaming."""
-    after: int | None = None
-    while True:
-        rows = drain_batch(log, batch_size, after).collect()
-        if not rows:
-            return
-        yield rows
-        after = rows[-1]["id"]
-
-
 def change_stats(
     changes: DataFrame, bucket: str = "hour", ts_col: str = "timestamp"
 ) -> DataFrame:
@@ -134,20 +120,4 @@ def write_log_partitioned(
         .write.partitionBy("log_date")
         .mode(mode)
         .parquet(path)
-    )
-
-
-def read_log_range(
-    spark: SparkSession, path: str, start_date: str, end_date: str
-) -> DataFrame:
-    """Time-bounded read of a date-partitioned log — the filter is on the
-    PARTITION column so only the touched date directories are listed and
-    scanned; ``[start_date, end_date)`` half-open."""
-    return (
-        spark.read.parquet(path)
-        .filter(
-            (F.col("log_date") >= F.lit(start_date))
-            & (F.col("log_date") < F.lit(end_date))
-        )
-        .drop("log_date")
     )

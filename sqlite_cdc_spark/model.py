@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sqlident import bq
+
 # --- operations (reference: change.go:20-26) --------------------------------
 
 OP_INSERT = "INSERT"
@@ -130,16 +132,27 @@ def row_image(
         field = by_name[n]
         if isinstance(field.dataType, T.BinaryType):
             if blob_support:
-                parts.append(blob_to_hex(F.col(n)).alias(n))
+                parts.append(blob_to_hex(F.col(bq(n))).alias(n))
             continue
-        parts.append(F.col(n).alias(n))
+        parts.append(F.col(bq(n)).alias(n))
     return F.to_json(F.struct(*parts))
 
 
 def image_field(image: Column | str, field: str) -> Column:
-    """Extract one field from a JSON row image (dynamic-typing path)."""
+    """Extract one field from a JSON row image (dynamic-typing path).
+
+    A name holding ``.`` or ``[`` is read through the bracket path
+    ``$['a.b']``, so it names one top-level field and never a nested one;
+    every other name keeps ``$.name``. A JSON path has no escape for a
+    quote inside brackets, so such a name that also holds a quote, and the
+    wildcard ``*``, raise instead of reading the wrong field.
+    """
     c = F.col(image) if isinstance(image, str) else image
-    return F.get_json_object(c, f"$.{field}")
+    if "." not in field and "[" not in field and field != "*":
+        return F.get_json_object(c, f"$.{field}")
+    if "'" in field or field == "*":
+        raise ValueError(f"no JSON path addresses the image field {field!r}")
+    return F.get_json_object(c, f"$['{field}']")
 
 
 # --- presentation -----------------------------------------------------------
@@ -171,19 +184,3 @@ def change_json(df: DataFrame) -> Column:
     sink (``/root/reference/handlers/debug.go:19-28``)."""
     cols = [f.name for f in CHANGE_SCHEMA.fields if f.name in df.columns]
     return F.to_json(F.struct(*[F.col(c) for c in cols]))
-
-
-def validate_change_invariants(df: DataFrame) -> DataFrame:
-    """Rows violating the image-presence rules (reference README.md:13-22,
-    trigger SQL triggers.go:420-437): INSERT → before NULL & after set;
-    DELETE → after NULL & before set; UPDATE → both set.
-
-    Returns the offending rows (empty DataFrame == valid feed).
-    """
-    op = F.col("operation")
-    ok = (
-        ((op == OP_INSERT) & F.col("before").isNull() & F.col("after").isNotNull())
-        | ((op == OP_DELETE) & F.col("after").isNull() & F.col("before").isNotNull())
-        | ((op == OP_UPDATE) & F.col("before").isNotNull() & F.col("after").isNotNull())
-    )
-    return df.filter(~ok)

@@ -86,23 +86,6 @@ def ngram_contamination(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
-    """Drop contaminated documents — the filter form of
-    :func:`ngram_contamination` (anti-join on the flagged id set)."""
-    flagged = ngram_contamination(
-        corpus, benchmark, id_col, text_col, n=n
-    ).filter(F.col("contaminated"))
-    return corpus.join(
-        flagged.select(F.col(id_col)), id_col, "left_anti"
-    )
-
-
 def fingerprint_containment(
     corpus: DataFrame,
     benchmark: DataFrame,

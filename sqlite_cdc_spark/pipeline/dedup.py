@@ -78,17 +78,6 @@ def char_shingles(col: Column | str, k: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(k))))
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-grams (space-joined) of the normalized text."""
-    c = normalize_text(col)
-    toks = F.split(c, " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    )
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str,
@@ -186,33 +175,6 @@ def _hash_family(num_hashes: int, seed: int = 0xCDC) -> list[tuple[int, int]]:
         (rng.randrange(1, MINHASH_P), rng.randrange(0, MINHASH_P))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: ``min over shingles of (a_i·h + b_i) mod P``
-    per permutation *i*, h = xxhash64(shingle) reduced mod P.
-
-    Single-pass fold: one traversal of the shingle array updating a
-    ``num_hashes``-wide running-min accumulator (a naive per-seed
-    ``array_min(transform(...))`` inlines the shingle expression
-    ``num_hashes`` times and explodes codegen). All JVM-side; 64 hashes ≈
-    Jaccard estimator σ≈0.125 — raise for tighter thresholds.
-    """
-    params = F.array(
-        *[F.array(F.lit(a), F.lit(b)) for a, b in _hash_family(num_hashes)]
-    )
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_P)))
-    return F.aggregate(
-        base,
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                params, lambda p: F.pmod(h * p[0] + p[1], F.lit(MINHASH_P))
-            ),
-            lambda a, v: F.least(a, v),
-        ),
-    )
 
 
 def minhash_candidates(

@@ -982,65 +982,6 @@ def covariance_matrix_fast(
     )
 
 
-def pca_project(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str = "embedding",
-    n_components: int = 8,
-) -> DataFrame:
-    """Project every embedding onto its corpus' top principal components
-    — dimensionality reduction / whitening ahead of ANN or clustering.
-
-    Scale shape: the ONLY driver-side data is the d×d covariance matrix
-    and d-vector mean (bounded by the embedding width, never by the
-    corpus — the same boundedness argument as the IVF trainer's sample).
-    ``eigh`` runs on the driver; components broadcast back as literal
-    arrays; the projection itself is a codegen ``zip_with``/``aggregate``
-    dot product per component — no Python in the per-row path. Component
-    signs are fixed deterministically (largest-|loading| element made
-    positive) so reruns and engines agree. Output: ``(id_col,
-    proj: array<double>)`` with ``n_components`` entries, variance-sorted
-    descending.
-    """
-    import numpy as np
-
-    rows = covariance_matrix_fast(df, vec_col).collect()
-    d = max(r.j for r in rows) + 1
-    C = np.zeros((d, d))
-    for r in rows:
-        C[r.i, r.j] = r.cov
-        C[r.j, r.i] = r.cov
-    mean_row = df.select(
-        F.posexplode(as_double(vec_col)).alias("dim", "v")
-    ).groupBy("dim").agg(F.avg("v").alias("m")).collect()
-    mu = np.zeros(d)
-    for r in mean_row:
-        mu[r.dim] = r.m
-    w, v = np.linalg.eigh(C)
-    order = np.argsort(w)[::-1][:n_components]
-    comps = []
-    for k in order:
-        c = v[:, k]
-        if c[int(np.argmax(np.abs(c)))] < 0:
-            c = -c
-        comps.append(c)
-    mean_lit = F.array(*[F.lit(float(x)) for x in mu])
-    centered = F.zip_with(as_double(vec_col), mean_lit, lambda x, m: x - m)
-    projs = [
-        F.aggregate(
-            F.zip_with(
-                centered,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in comps
-    ]
-    return df.select(F.col(bq(id_col)), F.array(*projs).alias("proj"))
-
-
 def kmeans_exact(
     df: DataFrame,
     k: int = 4,

@@ -204,36 +204,6 @@ def quality_gate(
     )
 
 
-def zscore_by_group(
-    df: DataFrame, group_cols: list[str], value_col: str, out_col: str = "zscore"
-) -> DataFrame:
-    """Group-normalized score via ``applyInPandas`` (grouped-map UDF, the
-    B23 surface): z-score of ``value_col`` within each group — e.g.
-    quality scores normalized per language so thresholds transfer across
-    languages.
-
-    One shuffle on the group key; each group is handed to pandas/numpy as
-    an Arrow batch. Groups must fit in executor memory — for skewed/huge
-    groups use the pure-SQL form (avg/stddev window) instead; this exists
-    to exercise and document the grouped-map path.
-    """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import types as T
-
-    # fresh StructType — StructType.add would mutate df's schema object
-    schema = T.StructType(
-        [*df.schema.fields, T.StructField(out_col, T.DoubleType())]
-    )
-
-    def norm(pdf):
-        std = pdf[value_col].std(ddof=0)
-        mean = pdf[value_col].mean()
-        pdf[out_col] = 0.0 if (std == 0 or pd.isna(std)) else (pdf[value_col] - mean) / std
-        return pdf
-
-    return df.groupBy(*group_cols).applyInPandas(norm, schema)
-
-
 # --- PII scrubbing (training-pipeline hygiene) -------------------------------
 
 #: deliberately simple character-class patterns: identical semantics under

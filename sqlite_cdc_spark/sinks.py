@@ -27,7 +27,6 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .model import change_json, simple_change_line
 from .storage import publish_parquet, publish_partitions
@@ -44,16 +43,6 @@ def json_handler(batch: DataFrame, batch_id: int) -> None:
     """Full JSON per change — parity with ``handlers/debug.go:19-28``."""
     for row in batch.select(change_json(batch).alias("j")).collect():
         print(row.j)
-
-
-def collecting_handler(store: list) -> Callable[[DataFrame, int], None]:
-    """Test helper mirroring the reference's collecting ChangesHandler
-    (``trigger_test.go:535-553``): appends (batch_id, rows) to ``store``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        store.append((batch_id, batch.collect()))
-
-    return run
 
 
 def http_handler(url: str, timeout_s: float = 10.0) -> Callable[[DataFrame, int], None]:

@@ -30,7 +30,8 @@ def test_snapshot_diff_empty_sides(spark):
 
 def test_drain_empty_log(spark):
     empty = spark.createDataFrame([], LOG_SCHEMA)
-    assert list(log.drain_all(empty, 10)) == []
+    assert log.drain_batch(empty, 10).isEmpty()
+    assert log.drain_batch(empty, 10, after_id=0).isEmpty()
 
 
 def test_degenerate_documents_no_crash(spark):

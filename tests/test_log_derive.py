@@ -4,10 +4,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+from helpers import snapshots_equal, validate_change_invariants
 from pyspark.sql import functions as F
 
 from sqlite_cdc_spark import derive, log
-from sqlite_cdc_spark.model import LOG_SCHEMA, OP_DELETE, validate_change_invariants
+from sqlite_cdc_spark.model import LOG_SCHEMA, OP_DELETE
 from sqlite_cdc_spark.sources import load_table
 
 
@@ -23,9 +24,11 @@ def test_drain_all_ordered_and_complete(spark, sf_dir):
     ch = log.events_as_changes(load_table(spark, sf_dir, "events"))
     n = ch.count()
     ids: list[int] = []
-    for batch in log.drain_all(ch, 256):
+    batch = log.drain_batch(ch, 256).collect()
+    while batch:
         assert len(batch) <= 256
         ids.extend(r["id"] for r in batch)
+        batch = log.drain_batch(ch, 256, after_id=batch[-1]["id"]).collect()
     assert ids == sorted(ids)
     assert len(ids) == n
 
@@ -116,8 +119,8 @@ def test_topk_per_group(spark, sf_dir):
 
 def test_snapshots_equal(spark, sf_dir):
     a = load_table(spark, sf_dir, "nation")
-    assert derive.snapshots_equal(a, a.orderBy(F.rand(7)))
-    assert not derive.snapshots_equal(a, a.limit(20))
+    assert snapshots_equal(a, a.orderBy(F.rand(7)))
+    assert not snapshots_equal(a, a.limit(20))
 
 
 def test_salted_join_matches_plain(spark, sf_dir):
@@ -151,11 +154,11 @@ def test_apply_changes_roundtrip(spark, sf_dir):
     )
     diff = derive.snapshot_diff(old, new, ["o_orderkey"])
     applied = derive.apply_changes(old, diff, ["o_orderkey"])
-    assert derive.snapshots_equal(applied, new)
+    assert snapshots_equal(applied, new)
     # and a no-op diff applies to identity
     empty_diff = derive.snapshot_diff(old, old, ["o_orderkey"])
     assert empty_diff.isEmpty()
-    assert derive.snapshots_equal(
+    assert snapshots_equal(
         derive.apply_changes(old, empty_diff, ["o_orderkey"]), old
     )
 
@@ -227,7 +230,7 @@ def test_partitioned_log_prunes_by_date(spark, sf_dir, tmp_path):
     partitions at planning time, and retention is a partition drop."""
     import os
 
-    from sqlite_cdc_spark.log import read_log_range, write_log_partitioned
+    from sqlite_cdc_spark.log import write_log_partitioned
 
     ch = log.events_as_changes(load_table(spark, sf_dir, "events"))
     d = str(tmp_path / "plog")
@@ -236,7 +239,11 @@ def test_partitioned_log_prunes_by_date(spark, sf_dir, tmp_path):
     parts = sorted(p for p in os.listdir(d) if p.startswith("log_date="))
     assert len(parts) > 1
     lo, hi = parts[0].split("=")[1], parts[1].split("=")[1]
-    sub = read_log_range(spark, d, lo, hi)  # half-open: first date only
+    sub = (  # half-open: first date only
+        spark.read.parquet(d)
+        .filter((F.col("log_date") >= lo) & (F.col("log_date") < hi))
+        .drop("log_date")
+    )
     want = ch.filter(F.to_date("timestamp") == lo).count()
     assert sub.count() == want > 0
     plan = sub._jdf.queryExecution().executedPlan().toString()
@@ -370,7 +377,7 @@ def test_incremental_agg_equals_recompute(spark):
         state, batch, ["grp"], ["val"], "grp string, val double"
     )
     want = derive.aggregate_base(new, ["grp"], ["val"])
-    assert derive.snapshots_equal(got, want)
+    assert snapshots_equal(got, want)
     # emptied group is dropped, not left at cnt=0
     assert got.filter(F.col("grp") == "c").count() == 0
 

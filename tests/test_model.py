@@ -7,10 +7,14 @@ deterministic values.
 from __future__ import annotations
 
 import datetime as dt
+import json
 
+import pytest
+from helpers import validate_change_invariants
 from pyspark.sql import functions as F
 
-from sqlite_cdc_spark import model
+from sqlite_cdc_spark import bootstrap, derive, model
+from sqlite_cdc_spark.sqlident import bq
 
 
 def test_decode_operation(spark):
@@ -73,7 +77,7 @@ def test_change_invariants(spark):
         (5, "t", dt.datetime(2024, 1, 1), "DELETE", None, None),  # bad
     ]
     df = spark.createDataFrame(rows, model.LOG_SCHEMA)
-    bad = model.validate_change_invariants(df)
+    bad = validate_change_invariants(df)
     assert sorted(r.id for r in bad.collect()) == [4, 5]
 
 
@@ -84,3 +88,50 @@ def test_simple_change_line(spark):
     )
     line = df.select(model.simple_change_line().alias("l")).first().l
     assert line == "2024-01-02T03:04:05.678Z: orders INSERT"
+
+
+def _cdc_core_rows(spark, key):
+    """Every CDC-core call over a small table keyed on ``key``, with the key
+    named ``k`` again in what each call returns."""
+    old = spark.createDataFrame([(1, "x"), (2, "y")], f"{bq(key)} long, v string")
+    new = spark.createDataFrame([(2, "z"), (3, "w")], f"{bq(key)} long, v string")
+    snap = bootstrap.snapshot_as_inserts(old, "t", timestamp=F.lit(dt.datetime(2024, 1, 1)))
+    changes = derive.snapshot_diff(old, new, [key])
+    guarded = derive.empty_guarded_state(spark, f"{bq(key)} long, v string")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def image(text):
+        return sorted(("k" if f == key else f, v) for f, v in json.loads(text).items())
+
+    return {
+        "snapshot_as_inserts": sorted(image(r.after) for r in snap.collect()),
+        "image_field": rows(snap.select(model.image_field("after", key))),
+        "snapshot_first_page": rows(bootstrap.snapshot_first_page(old, [key, "v"], 1)),
+        "snapshot_next_page": rows(
+            bootstrap.snapshot_next_page(old, [key, "v"], [1, "x"], 1)
+        ),
+        "apply_changes": rows(derive.apply_changes(old, changes, [key])),
+        "apply_changes_guarded": rows(
+            derive.apply_changes_guarded(
+                guarded, changes.withColumn("id", F.lit(1)), [key]
+            )
+        ),
+    }
+
+
+@pytest.mark.parametrize("key", ["k", "a.b", "x`y", "it's"])
+def test_cdc_core_resolves_hostile_column_names(spark, key):
+    # a SQLite user picks the column names; a dotted, backticked or quoted
+    # key must return the rows the plain name returns
+    want = _cdc_core_rows(spark, "k")
+    assert all(want.values())
+    assert _cdc_core_rows(spark, key) == want
+
+
+def test_image_field_rejects_a_name_no_json_path_addresses():
+    # `$.it's.b` reads a nested path and `$['it's.b']` does not parse:
+    # both would return NULL for a field that is there
+    with pytest.raises(ValueError):
+        model.image_field("img", "it's.b")

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from helpers import word_shingles
 from pyspark.sql import functions as F
 
 from sqlite_cdc_spark.pipeline import dedup, multimodal, similarity
@@ -41,12 +42,17 @@ def test_char_shingles(spark):
 
 
 def test_minhash_identical_docs_same_signature(spark):
-    df = spark.createDataFrame([("the quick brown fox",), ("the quick brown fox",)], ["text"])
-    sigs = df.select(
-        dedup.minhash_signature(dedup.char_shingles("text", 5), 32).alias("sig")
-    ).collect()
-    assert sigs[0].sig == sigs[1].sig
-    assert len(sigs[0].sig) == 32
+    # the registry's minhash path: identical text gives an identical
+    # signature, so the two docs share a bucket in every band
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "the quick brown fox")], ["doc_id", "text"]
+    )
+    index = dedup.build_lsh_index(df, "doc_id", "text", num_hashes=32, bands=8)
+    buckets = {1: [], 2: []}
+    for r in index.orderBy("doc", "band").collect():
+        buckets[r.doc].append(r.bucket)
+    assert buckets[1] == buckets[2]
+    assert len(buckets[1]) == 8
 
 
 def test_near_dup_pairs_finds_planted_dups(spark, sf_dir):
@@ -476,9 +482,6 @@ _VECTOR_CALLS = {
     "covariance_matrix_fast": lambda c, q, n: similarity.covariance_matrix_fast(
         q, n["vec_col"]
     ),
-    "pca_project": lambda c, q, n: similarity.pca_project(
-        c, n["id_col"], n["vec_col"], n_components=2
-    ),
     "kmeans_exact": lambda c, q, n: similarity.kmeans_exact(c, k=2, iters=1, **n),
     "ann_topk_pq": lambda c, q, n: similarity.ann_topk_pq(c, q, k=3, **n),
     "kcenter_greedy": lambda c, q, n: similarity.kcenter_greedy(c, k=3, **n),
@@ -552,22 +555,6 @@ def test_read_binary_dir(spark, tmp_path):
         df.select(F.col("length").alias("doc_id"), "payload")
     ).collect()
     assert len(feats) == 2
-
-
-def test_zscore_by_group_applyinpandas(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    z = textops.zscore_by_group(docs, ["lang"], "n_chars")
-    rows = z.collect()
-    assert len(rows) == docs.count()
-    import statistics
-
-    by_lang: dict = {}
-    for r in rows:
-        by_lang.setdefault(r.lang, []).append(r.zscore)
-    for lang, zs in by_lang.items():
-        assert abs(statistics.mean(zs)) < 1e-9  # centered per group
-        if len(zs) > 1:
-            assert abs(statistics.pstdev(zs) - 1.0) < 1e-9  # unit variance
 
 
 def test_incremental_lsh_index(spark, sf_dir, tmp_path):
@@ -651,10 +638,6 @@ def test_decontaminate_drops_planted_overlaps(spark, sf_dir):
     # every planted doc contains bench doc 0's full text -> contaminated
     planted_flags = flags.filter(F.col("doc_id") >= 300000)
     assert planted_flags.filter(~F.col("contaminated")).isEmpty()
-    # the filter form drops exactly the contaminated ids
-    kept = decontam.decontaminate(corpus, bench, n=5)
-    n_contam = flags.filter(F.col("contaminated")).count()
-    assert kept.count() == corpus.count() - n_contam
 
 
 def test_redact_pii_and_counts(spark):
@@ -1058,37 +1041,6 @@ def test_covariance_matrix_matches_numpy_both_paths(spark, sf_dir):
             assert abs(fast[(i, j)] - ref[i, j]) < 1e-9
 
 
-def test_pca_project_matches_numpy_pca(spark, sf_dir):
-    import numpy as np
-
-    from sqlite_cdc_spark.pipeline import similarity
-    from sqlite_cdc_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = [r.vec_id for r in rows]
-    m = np.asarray([np.asarray(r.embedding, dtype="float64") for r in rows])
-    out = {
-        r.vec_id: np.asarray(r.proj)
-        for r in similarity.pca_project(emb, "vec_id", n_components=4).collect()
-    }
-    # reference PCA: eigh of covariance, same deterministic sign fix
-    C = np.cov(m, rowvar=False, ddof=0)
-    w, v = np.linalg.eigh(C)
-    order = np.argsort(w)[::-1][:4]
-    comps = []
-    for k in order:
-        c = v[:, k]
-        if c[int(np.argmax(np.abs(c)))] < 0:
-            c = -c
-        comps.append(c)
-    ref = (m - m.mean(axis=0)) @ np.asarray(comps).T
-    got = np.asarray([out[i] for i in ids])
-    assert np.abs(got - ref).max() < 1e-6
-    # projected variance is sorted descending (top components first)
-    var = got.var(axis=0)
-    assert all(var[k] >= var[k + 1] - 1e-12 for k in range(3))
-
 
 def test_lexical_diversity_values(spark):
     import math
@@ -1265,7 +1217,7 @@ def test_set_similarity_join_complete_vs_brute_force(spark, sf_dir):
     }
     # brute force over the same shingle sets — the definition
     rows = docs.select(
-        "doc_id", dedup.word_shingles("text", 3).alias("s")
+        "doc_id", word_shingles("text", 3).alias("s")
     ).collect()
     sets = {r.doc_id: set(r.s) for r in rows}
     ids = sorted(sets)

@@ -11,10 +11,11 @@ import math
 import sqlite3
 
 import pytest
+from helpers import collecting_handler, validate_change_invariants
 from pyspark.sql import functions as F
 
-from sqlite_cdc_spark import sinks, sqlite_bridge, streaming
-from sqlite_cdc_spark.model import LOG_SCHEMA, validate_change_invariants
+from sqlite_cdc_spark import sqlite_bridge, streaming
+from sqlite_cdc_spark.model import LOG_SCHEMA
 
 #: the reference's canonical fixture: every SQLite type-affinity family,
 #: composite PK (a,b,c) — trigger_test.go:483-517
@@ -178,7 +179,7 @@ def test_end_to_end_sqlite_to_streaming_engine(db, tmp_path, spark):
     store: list = []
     eng.deliver(
         eng.read_log_stream(max_files_per_trigger=1),
-        sinks.collecting_handler(store),
+        collecting_handler(store),
     ).awaitTermination(120)
     total = sum(len(rows) for _, rows in store)
     assert total == 300 + 44 + 1

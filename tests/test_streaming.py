@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from helpers import collecting_handler, snapshots_equal
 from pyspark.sql import functions as F
 
 from sqlite_cdc_spark import sinks, streaming
@@ -53,7 +54,7 @@ def test_stream_delivers_all_changes_in_order(spark, sf_dir, log_dir, tmp_path):
     eng = streaming.StreamEngine(spark, log_dir, str(tmp_path / "ckpt"))
     eng.setup()
     store: list = []
-    q = eng.deliver(eng.read_log_stream(), sinks.collecting_handler(store))
+    q = eng.deliver(eng.read_log_stream(), collecting_handler(store))
     q.awaitTermination(120)
     total = sum(len(rows) for _, rows in store)
     assert total == 1000
@@ -128,7 +129,7 @@ def test_multi_partition_batch_keeps_total_order(spark, tmp_path):
     eng = streaming.StreamEngine(spark, d, str(tmp_path / "ckpt"))
     plans: list = []
     store: list = []
-    collect = sinks.collecting_handler(store)
+    collect = collecting_handler(store)
 
     def handler(batch, batch_id):
         plans.append(batch._jdf.queryExecution().executedPlan().toString())
@@ -311,9 +312,9 @@ def test_checkpoint_resume_no_redelivery(spark, sf_dir, log_dir, tmp_path):
     eng = streaming.StreamEngine(spark, log_dir, str(tmp_path / "ckpt"))
     eng.setup()
     first: list = []
-    eng.deliver(eng.read_log_stream(), sinks.collecting_handler(first)).awaitTermination(120)
+    eng.deliver(eng.read_log_stream(), collecting_handler(first)).awaitTermination(120)
     second: list = []
-    eng.deliver(eng.read_log_stream(), sinks.collecting_handler(second)).awaitTermination(120)
+    eng.deliver(eng.read_log_stream(), collecting_handler(second)).awaitTermination(120)
     assert sum(len(r) for _, r in first) == 1000
     assert sum(len(r) for _, r in second) == 0
 
@@ -344,7 +345,7 @@ def test_bootstrap_and_cdc_counts(spark, sf_dir, log_dir, tmp_path):
         "id", F.lit(None).cast("long")
     ).select([f.name for f in LOG_SCHEMA.fields])
     store: list = []
-    q = eng.bootstrap_and_cdc(snap, sinks.collecting_handler(store))
+    q = eng.bootstrap_and_cdc(snap, collecting_handler(store))
     q.awaitTermination(120)
     assert store[0][0] == -1 and len(store[0][1]) == 25  # snapshot batch first
     assert sum(len(rows) for _, rows in store) == 25 + 1000
@@ -409,7 +410,7 @@ def test_stateful_dedup_within_watermark(spark, tmp_path):
         .dropDuplicatesWithinWatermark(["id"])
     )
     store: list = []
-    eng.deliver(stream, sinks.collecting_handler(store)).awaitTermination(120)
+    eng.deliver(stream, collecting_handler(store)).awaitTermination(120)
     ids = [r.id for _, rows_ in store for r in rows_]
     assert len(ids) == 100
     assert sorted(set(ids)) == list(range(100))
@@ -584,8 +585,6 @@ def test_streamed_replica_via_apply_changes(spark, sf_dir, log_dir, tmp_path):
         F.get_json_object("after", "$.value").cast("double").alias("value"),
     )
     got = spark.read.schema(state_schema).parquet(replica_dir)
-    from sqlite_cdc_spark.derive import snapshots_equal
-
     assert snapshots_equal(got, expected)
 
 
@@ -1070,7 +1069,7 @@ def test_streaming_mv_maintenance_matches_batch(spark, tmp_path):
         "id long, grp string, val double",
     )
     want = derive.aggregate_base(final_table, ["grp"], ["val"])
-    assert derive.snapshots_equal(state["mv"], want)
+    assert snapshots_equal(state["mv"], want)
 
 
 def test_streaming_incremental_decontam_equals_batch(spark, tmp_path):
